@@ -137,6 +137,8 @@ def brute_force_topk_blas(
     batch computes one similarity block. Shuffle volume is never a
     full cross product in any mode."""
     if queries is None:
+        # a null vector has no cosine: it neither queries nor neighbors
+        embeddings = embeddings.where(F.col(vec_col).isNotNull())
         if n_blocks is None:
             import os
 

@@ -199,6 +199,10 @@ def connected_components(
     )
     max_iter = 25 if max_iter is None else max_iter
     jump_after = 8 if jump_after is None else jump_after
+    # an edge with a null endpoint connects nothing: both paths drop it
+    # (the union-find cannot order a null id, and in the loop a null
+    # node would still collect labels from its neighbors)
+    edges = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
     if not loop_tuned:
         if local_edge_cap is None:
             local_edge_cap = int(

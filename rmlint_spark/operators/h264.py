@@ -27,32 +27,16 @@ eighth-pel chroma motion compensation, median MV prediction, P_Skip
 runs, inter residuals, intra-in-P fallback, CAVLC mb_skip_run;
 operators/h264_cabac_p.py: the same semantics under arithmetic
 entropy — mb_skip_flag contexts, P mb_type binarization, UEG3 mvd),
-so IDR+P GOPs round-trip in all four encoder lanes, and CAVLC B
-slices (operators/h264_b.py: two reference lists, default
-bi-prediction, spatial direct, B_Skip, POC display reordering)
-complete the slice-type family under BOTH entropy modes
-(h264_cabac_b.py mirrors the CABAC-P composition), and the 16x8 /
+so IDR+P GOPs round-trip in all four encoder lanes, and the 16x8 /
 8x16 / P_8x8(P_L0_8x8) P partitions code for real in both entropy
 lanes (r5 s9, block-grid motion state + directional predictors), and
-weighted prediction decodes for real under both entropy modes —
-explicit per-slice pred_weight_table (7.3.3.2 / 8.4.2.3.3, P and B)
-and implicit POC-distance weights (weighted_bipred_idc == 2,
-8.4.2.3.1) — with encoder support (least-squares fade / joint-bi
-crossfade weight fitting), and BOTH direct modes derive B_Skip /
-B_Direct motion (spatial 8.4.1.2.2, temporal 8.4.1.2.3 POC-scaled
-colocated motion); P macroblocks split down to the full Table 7-17
-sub-8x8 family (8x4/4x8/4x4) and B macroblocks down to the full
-Table 7-14 / 7-18 family (16x8/8x16 with per-partition L0/L1/Bi,
-B_8x8 with direct/L0/L1/Bi at 8x8/8x4/4x8/4x4), both slice
-types predict from up to 16 active references (8.2.5.3
-sliding-window DPB; encoder subset emits up to 4), and REFERENCE B
-pictures decode and encode (pyramid coding: a B picture with
-nal_ref_idc != 0 enters the sliding window like any reference and
-exports its 8.4.1.2.3 L0-preferred motion grid for later direct
-derivations; the encoders emit one pyramid level via
-``pyramid=True`` — the gap's middle B codes first as a reference
-and the leaves predict from their nearest anchor/mid pair); the
-refusal surface is down to SP/SI slices.
+explicit weighted prediction decodes for real under both entropy
+modes — the per-slice pred_weight_table (7.3.3.2 / 8.4.2.3.3) — with
+encoder support (least-squares fade weight fitting); P macroblocks
+split down to the full Table 7-17 sub-8x8 family (8x4/4x8/4x4) and
+predict from up to 16 active references (8.2.5.3 sliding-window DPB;
+encoder subset emits up to 4).  B slices raise ``ValueError`` (not
+in the implemented subset) and SP/SI slices ``NotImplementedError``.
 
 Same codec-lane status as jpeg.py / flac.py / mpeg_audio.py:
 per-asset decode inside ``mapInPandas`` (multimodal.py), explicitly
@@ -239,8 +223,8 @@ def _encode_sps(mb_w: int, mb_h: int, width: int, height: int,
                 fps: tuple[int, int], num_ref_frames: int = 0,
                 poc_type: int = 2) -> bytes:
     w = _BitWriter()
-    # B streams use main profile (constrained baseline excludes B
-    # slices); everything else stays in constrained baseline
+    # POC-lsb (type 0) streams use main profile; everything else
+    # stays in constrained baseline
     if poc_type == 0:
         w.write(77, 8)                  # profile_idc: main
         w.write(0, 8)                   # no constraint flags
@@ -253,7 +237,7 @@ def _encode_sps(mb_w: int, mb_h: int, width: int, height: int,
     _write_ue(w, poc_type)              # pic_order_cnt_type
     if poc_type == 0:
         _write_ue(w, 4)                 # log2_max_pic_order_cnt_lsb_minus4 (8 bits)
-    _write_ue(w, num_ref_frames)        # max_num_ref_frames (1 for P GOPs, 2 for B)
+    _write_ue(w, num_ref_frames)        # max_num_ref_frames (DPB window)
     w.write(0, 1)                       # gaps_in_frame_num_value_allowed
     _write_ue(w, mb_w - 1)              # pic_width_in_mbs_minus1
     _write_ue(w, mb_h - 1)              # pic_height_in_map_units_minus1
@@ -317,17 +301,12 @@ def _encode_pps(entropy_coding: int = 0, weighted_pred: int = 0,
 # ------------------------------------------- weighted prediction (WP)
 #
 # Explicit WP carries per-list (weight, offset) pairs in the slice
-# header (7.3.3.2 pred_weight_table); implicit WP (B only,
-# weighted_bipred_idc == 2) derives the pair of weights from POC
-# distances (8.4.2.3.1).  The table below is the subset for one
-# reference per list (this family's list discipline).
+# header (7.3.3.2 pred_weight_table).  The grammar below reads and
+# writes both lists; the decoder applies the L0 entries of P slices.
 #
-# wp dict shape (shared by every inter lane):
+# wp dict shape:
 #   {"logwd_y", "logwd_c": log2 denominators,
-#    "l0"/"l1": (w_y, o_y, w_u, o_u, w_v, o_v),
-#    "implicit": True when the weights came from 8.4.2.3.1 — implicit
-#                weights apply ONLY to bi-predicted blocks; mono
-#                blocks fall back to default prediction (8.4.2.3)}
+#    "l0"/"l1": (w_y, o_y, w_u, o_u, w_v, o_v)}
 
 
 def _check_wp_range(*vals: int) -> None:
@@ -404,32 +383,6 @@ def _write_pred_weight_table(w: "_BitWriter", wp: dict,
         one_entry(wp["l1"])
         for extra in wp.get("l1x", [])[:n_l1 - 1]:
             one_entry(extra)
-
-
-def _implicit_wp(poc_cur: int, poc_past: int, poc_future: int) -> dict:
-    """Implicit B weights from POC distances (8.4.2.3.1): logWD = 5,
-    zero offsets, w1 = DistScaleFactor >> 2, w0 = 64 - w1, falling
-    back to 32/32 when the scale factor leaves [-64, 128] or the
-    anchors share a POC.  The same pair applies to luma and chroma."""
-    def clip3(lo: int, hi: int, v: int) -> int:
-        return max(lo, min(hi, v))
-
-    tb = clip3(-128, 127, poc_cur - poc_past)
-    td = clip3(-128, 127, poc_future - poc_past)
-    if td == 0:
-        w0 = w1 = 32
-    else:
-        # future anchor POC > past anchor POC in this family's closed
-        # segments, so the spec's truncating division is plain //
-        tx = (16384 + abs(td) // 2) // td
-        dsf = clip3(-1024, 1023, (tb * tx + 32) >> 6)
-        if dsf >> 2 < -64 or dsf >> 2 > 128:
-            w0 = w1 = 32
-        else:
-            w1 = dsf >> 2
-            w0 = 64 - w1
-    return {"logwd_y": 5, "logwd_c": 5, "implicit": True,
-            "l0": (w0, 0, w0, 0, w0, 0), "l1": (w1, 0, w1, 0, w1, 0)}
 
 
 def _pad_to_mb(plane: np.ndarray, mb: int) -> np.ndarray:
@@ -606,19 +559,16 @@ class _H264Layout:
     grouped into pictures (a slice with first_mb_in_slice == 0 starts
     a new picture). Intra pictures decode independently, so sampling
     paths decode ONLY the frames they touch (the Y4M discipline);
-    P pictures decode their GOP prefix through the plane cache; B
-    pictures additionally resolve a (past, future) anchor pair from
-    the sliding two-picture reference window and display in POC
-    order (``frame_at`` takes DISPLAY indices)."""
+    P pictures decode their GOP prefix through the plane cache.
+    Without B pictures decode order is display order."""
 
-    __slots__ = ("sps", "pps", "pictures", "fps", "_cache", "_mvinfo",
-                 "kinds", "is_ref", "poc", "_display")
+    __slots__ = ("sps", "pps", "pictures", "fps", "_cache", "kinds",
+                 "is_ref")
 
     def __init__(self, payload: bytes):
         self.sps: dict | None = None
         self.pps: dict | None = None
         self._cache: dict[int, tuple] = {}
-        self._mvinfo: dict[int, tuple] = {}
         self.pictures: list[list[tuple[int, int, bytes]]] = []
         for typ, ref_idc, rbsp in _iter_nals(payload):
             if typ == _NAL_SPS:
@@ -637,71 +587,15 @@ class _H264Layout:
         if not self.pictures:
             raise ValueError("H.264 stream carries no slices")
         self.fps = self.sps["fps"] or (25, 1)
-        self._derive_order()
+        self.kinds: list[str] = []
+        for pic in self.pictures:
+            sts = {self._peek_slice_type(rbsp) % 5 for _, _, rbsp in pic}
+            self.kinds.append(
+                "B" if 1 in sts else ("P" if 0 in sts else "I"))
+        self.is_ref = [pic[0][1] != 0 for pic in self.pictures]
 
     def _slice_first_mb(self, rbsp: bytes) -> int:
         return _read_ue(_BitReader(rbsp))
-
-    def _peek_poc_lsb(self, typ: int, rbsp: bytes) -> int:
-        """pic_order_cnt_lsb of a slice header (poc_type 0 only)."""
-        r = _BitReader(rbsp)
-        _read_ue(r)                     # first_mb_in_slice
-        _read_ue(r)                     # slice_type
-        _read_ue(r)                     # pic_parameter_set_id
-        r.read(self.sps["log2_max_frame_num"])
-        if typ == _NAL_IDR:
-            _read_ue(r)                 # idr_pic_id
-        return r.read(self.sps["log2_max_poc_lsb"])
-
-    def _derive_order(self) -> None:
-        """Per-picture kind / reference flag / PicOrderCnt (8.2.1.1)
-        and the decode->display permutation.  Pictures are compared
-        by (coded-video-sequence, POC): an IDR starts a new sequence,
-        and the encoder never lets a B group span an IDR (closed
-        segments), so sorting within a sequence is sufficient."""
-        kinds: list[str] = []
-        is_ref: list[bool] = []
-        poc: list[int] = []
-        seg = -1
-        prev_msb = prev_lsb = 0
-        max_lsb = 1 << self.sps.get("log2_max_poc_lsb", 0)
-        segs: list[int] = []
-        for pic in self.pictures:
-            typ, ref_idc, rbsp = pic[0]
-            sts = {self._peek_slice_type(rbsp) % 5
-                   for _, _, rbsp in pic}
-            kind = "B" if 1 in sts else ("P" if 0 in sts else "I")
-            kinds.append(kind)
-            # reference B pictures (pyramid coding) are supported
-            # since r5 s17: they enter the sliding window like any
-            # other reference and export an L0-preferred motion grid
-            # for later direct derivations
-            is_ref.append(ref_idc != 0)
-            if typ == _NAL_IDR:
-                seg += 1
-                prev_msb = prev_lsb = 0
-            elif seg < 0:
-                seg = 0                 # stream starting on a non-IDR
-            segs.append(seg)
-            if self.sps["poc_type"] == 0:
-                lsb = self._peek_poc_lsb(typ, rbsp)
-                if lsb < prev_lsb and prev_lsb - lsb >= max_lsb // 2:
-                    msb = prev_msb + max_lsb
-                elif lsb > prev_lsb and lsb - prev_lsb > max_lsb // 2:
-                    msb = prev_msb - max_lsb
-                else:
-                    msb = prev_msb
-                poc.append(msb + lsb)
-                if ref_idc:
-                    prev_msb, prev_lsb = msb, lsb
-            else:
-                # poc_type 1/2 without B pictures: decode order IS
-                # display order for the implemented subset
-                poc.append(2 * len(poc))
-        self.kinds, self.is_ref, self.poc = kinds, is_ref, poc
-        order = sorted(range(len(poc)),
-                       key=lambda i: (segs[i], poc[i], i))
-        self._display = order
 
     @property
     def n_frames(self) -> int:
@@ -716,18 +610,14 @@ class _H264Layout:
         _read_ue(r)                         # first_mb_in_slice
         return _read_ue(r)
 
-    def _pic_has_p(self, idx: int) -> bool:
-        return self.kinds[idx] != "I"
-
     def frame_at(self, idx: int) -> np.ndarray:
-        """Decode DISPLAY frame ``idx`` to (h, w, 3) uint8 RGB.
+        """Decode frame ``idx`` to (h, w, 3) uint8 RGB.
         Inter pictures reference earlier decoded pictures, so sampling
         one decodes its GOP prefix back to the nearest intra picture
         (the honest random-access cost of temporal compression);
         decoded planes are cached so sequential access stays
-        O(1)/frame.  For B streams the display permutation (POC
-        order) is applied here; elsewhere display == decode order."""
-        y, u, v = self._decode_planes(self._display[idx])
+        O(1)/frame."""
+        y, u, v = self._decode_planes(idx)
         sps = self.sps
         mb_w, mb_h = sps["mb_w"], sps["mb_h"]
         cl, cr, ct, cb = sps["crop"]
@@ -739,12 +629,10 @@ class _H264Layout:
     def _decode_planes(self, idx: int) -> tuple:
         """Decode (in DECODE order) up to picture ``idx``, maintaining
         the 8.2.5.3 sliding window of the last ``max_num_ref_frames``
-        REFERENCE pictures (floor 2 so B anchors survive even when the
-        SPS says 1): P builds its L0 list newest-first from the
-        window (8.2.4.2.1 descending PicNum), B takes the nearest
-        past/future anchors by POC."""
+        REFERENCE pictures (floor 2): P builds its L0 list newest-first
+        from the window (8.2.4.2.1 descending PicNum)."""
         cache = self._cache
-        if idx in cache and (not self.is_ref[idx] or idx in self._mvinfo):
+        if idx in cache:
             return cache[idx]
         start = idx
         while start > 0 and self.kinds[start] != "I":
@@ -752,8 +640,7 @@ class _H264Layout:
         window = max(2, self.sps.get("num_ref_frames", 2))
         refs: list[int] = []
         for i in range(start, idx + 1):
-            if i not in cache or (self.is_ref[i]
-                                  and i not in self._mvinfo):
+            if i not in cache:
                 cache[i] = self._decode_picture(i, refs)
             if self.is_ref[i]:
                 refs.append(i)
@@ -764,13 +651,12 @@ class _H264Layout:
                 victims = sorted(k for k in cache if k not in keep)
                 for k in victims[: len(cache) - 64]:
                     cache.pop(k)
-                    self._mvinfo.pop(k, None)
         return cache[idx]
 
     def _decode_picture(self, idx: int, refs: list[int]) -> tuple:
         """Decode one picture to uncropped (y, u, v) planes.  ``refs``
-        holds the decode indices of the (at most two) most recent
-        reference pictures, already decoded and cached."""
+        holds the decode indices of the sliding-window reference
+        pictures, oldest first, already decoded and cached."""
         sps, pps = self.sps, self.pps
         mb_w, mb_h = sps["mb_w"], sps["mb_h"]
         y = np.zeros((mb_h * 16, mb_w * 16), dtype=np.uint8)
@@ -779,7 +665,10 @@ class _H264Layout:
         covered = np.zeros(mb_w * mb_h, dtype=bool)
         kind = self.kinds[idx]
         cavlc_pic = None
-        implicit_wp: dict | None = None
+        if kind == "B":
+            raise ValueError(
+                "H.264 B slice decode is not in the implemented subset "
+                "(I and P slices)")
         if kind == "P":
             if not refs:
                 raise ValueError(
@@ -801,53 +690,11 @@ class _H264Layout:
 
                 cavlc_pic = InterPicture(y, u, v, mb_w, mb_h, ref,
                                          ref1, more=more)
-        elif kind == "B":
-            # surface header-level refusals before demanding
-            # references, so a crafted single-picture stream reports
-            # the real reason
-            typ0, ridc0, rbsp0 = self.pictures[idx][0]
-            self._parse_slice_header(_BitReader(rbsp0), typ0, ridc0,
-                                     sps, pps)
-            cur = self.poc[idx]
-            # default list initialization (8.2.4.2.3/8.2.4.2.4): L0 =
-            # past references by DESCENDING POC (nearest first), L1 =
-            # future references by ASCENDING POC (nearest first) —
-            # entry 0 of each is the classic anchor pair, the rest
-            # back refIdx 1.. in multi-reference B slices
-            past = sorted((r for r in refs if self.poc[r] < cur),
-                          key=lambda r: -self.poc[r])
-            future = sorted((r for r in refs if self.poc[r] > cur),
-                            key=lambda r: self.poc[r])
-            if not past or not future:
-                raise ValueError(
-                    "H.264 B picture lacks a past or future reference")
-            p_idx, f_idx = past[0], future[0]
-            if pps["weighted_bipred_idc"] == 2:
-                implicit_wp = _implicit_wp(cur, self.poc[p_idx],
-                                           self.poc[f_idx])
-            col = self._mvinfo[f_idx]
-            more0 = [self._cache[r] for r in past[1:]]
-            more1 = [self._cache[r] for r in future[1:]]
-            if pps["entropy_coding_mode"]:
-                from rmlint_spark.operators.h264_cabac_b import \
-                    CabacBInterPicture
-
-                cavlc_pic = CabacBInterPicture(
-                    y, u, v, mb_w, mb_h,
-                    self._cache[p_idx], self._cache[f_idx], col,
-                    more0=more0, more1=more1)
-            else:
-                from rmlint_spark.operators.h264_b import BInterPicture
-
-                cavlc_pic = BInterPicture(
-                    y, u, v, mb_w, mb_h,
-                    self._cache[p_idx], self._cache[f_idx], col,
-                    more0=more0, more1=more1)
         slice_deblocks: list[tuple[int, int, int]] = []
         for nal_type, ref_idc, rbsp in self.pictures[idx]:
             r = _BitReader(rbsp)
-            (first_mb, qp_delta, slice_type, wp, direct_spatial,
-             n_ref0, n_ref1, deblock) = self._parse_slice_header(
+            (first_mb, qp_delta, slice_type, wp, n_ref0,
+             deblock) = self._parse_slice_header(
                 r, nal_type, ref_idc, sps, pps)
             slice_deblocks.append(deblock)
             slice_qp = pps["pic_init_qp"] + qp_delta
@@ -860,33 +707,6 @@ class _H264Layout:
                 cavlc_pic.wp = wp
                 cavlc_pic.n_ref0 = n_ref0
                 cavlc_pic.decode_slice_p(r, first_mb, covered)
-                continue
-            if slice_type % 5 == 1:         # B slice (CAVLC or CABAC)
-                if (n_ref0 > len(cavlc_pic.refs)
-                        or n_ref1 > len(cavlc_pic.refs1)):
-                    raise ValueError(
-                        "H.264 slice activates more references than "
-                        "the decoder holds")
-                multi = n_ref0 > 1 or n_ref1 > 1
-                if multi and not direct_spatial:
-                    raise ValueError(
-                        "H.264 temporal direct over multi-reference "
-                        "lists is not in the implemented subset "
-                        "(colocated refIdx mapping)")
-                if multi and wp == "implicit":
-                    raise ValueError(
-                        "H.264 implicit weights over multi-reference "
-                        "lists are not in the implemented subset "
-                        "(per-pair POC weights)")
-                cavlc_pic.qp = slice_qp
-                cavlc_pic.wp = implicit_wp if wp == "implicit" else wp
-                cavlc_pic.direct_spatial = direct_spatial
-                cavlc_pic.n_ref0 = n_ref0
-                cavlc_pic.n_ref1 = n_ref1
-                cavlc_pic.direct_tbtd = (
-                    self.poc[idx] - self.poc[p_idx],
-                    self.poc[f_idx] - self.poc[p_idx])
-                cavlc_pic.decode_slice_b(r, first_mb, covered)
                 continue
             if pps["entropy_coding_mode"]:
                 from rmlint_spark.operators.h264_cabac import CabacPicture
@@ -965,45 +785,21 @@ class _H264Layout:
             st = extract_state(cavlc_pic, mb_w, mb_h)
             if st is not None:
                 deblock_picture(y, u, v, st, a_off, b_off)
-        if self.is_ref[idx]:
-            # reference pictures export their motion grid (4x4-block
-            # granularity since the partition lanes): B spatial direct
-            # reads the colocated MB of RefPicList1[0] (8.4.1.2.2
-            # colZeroFlag).  A reference B picture (pyramid coding)
-            # exports mvCol L0-preferred per 8.4.1.2.3: the L0 motion
-            # where the block predicts from list 0, else its L1
-            # motion.
-            if kind == "B" and cavlc_pic is not None:
-                col_mv = np.where(cavlc_pic.luse4[:, :, 0:1],
-                                  cavlc_pic.lmv4[:, :, 0, :],
-                                  cavlc_pic.lmv4[:, :, 1, :])
-                self._mvinfo[idx] = (col_mv.astype(np.int64),
-                                     cavlc_pic.mb_state.copy())
-            elif cavlc_pic is not None and hasattr(cavlc_pic, "mv4"):
-                self._mvinfo[idx] = (cavlc_pic.mv4.copy(),
-                                     cavlc_pic.mb_state.copy())
-            else:
-                self._mvinfo[idx] = (
-                    np.zeros((mb_h * 4, mb_w * 4, 2), dtype=np.int64),
-                    np.ones((mb_h, mb_w), dtype=np.int64))
         return y, u, v
 
     def _parse_slice_header(self, r: _BitReader, nal_type: int,
                             ref_idc: int, sps: dict, pps: dict
-                            ) -> tuple[int, int, int,
-                                       dict | str | None, bool, int,
-                                       int, tuple[int, int, int]]:
+                            ) -> tuple[int, int, int, dict | None, int,
+                                       tuple[int, int, int]]:
         first_mb = _read_ue(r)
         slice_type = _read_ue(r)
-        wp: dict | str | None = None
-        direct_spatial = True
+        wp: dict | None = None
         n_ref0 = 1
-        n_ref1 = 1
         if slice_type % 5 not in (0, 1, 2):
             raise NotImplementedError(
                 "H.264 SP/SI slice decode not implemented "
-                "(I, P and B slices are the implemented subset)")
-        is_p, is_b = slice_type % 5 == 0, slice_type % 5 == 1
+                "(I and P slices are the implemented subset)")
+        is_p = slice_type % 5 == 0
         if _read_ue(r) != pps["pps_id"]:
             raise ValueError("slice references an unknown PPS")
         r.read(sps["log2_max_frame_num"])   # frame_num
@@ -1019,32 +815,20 @@ class _H264Layout:
                 _read_se(r)
         if pps["redundant_pic_cnt_present"]:
             _read_ue(r)
-        if is_b:
-            direct_spatial = bool(r.read(1))  # direct_spatial_mv_pred
-        if is_p or is_b:
+        if is_p:
             n_ref0 = pps["n_ref0_default"]
-            n_ref1 = pps["n_ref1_default"] if is_b else 1
             if r.read(1):                   # num_ref_idx_active_override
                 n_ref0 = _read_ue(r) + 1
-                if is_b:
-                    n_ref1 = _read_ue(r) + 1
-            if n_ref0 > 16 or n_ref1 > 16:
+            if n_ref0 > 16:
                 raise ValueError(
                     "H.264 num_ref_idx_lX_active out of the spec "
                     "range (7.4.3: at most 16 for frame coding)")
-            # ref_pic_list_modification: l0, plus l1 for B
-            if r.read(1) or (is_b and r.read(1)):
+            if r.read(1):                   # ref_pic_list_modification_l0
                 raise ValueError(
                     "H.264 ref_pic_list_modification unsupported")
-            if is_p and pps["weighted_pred"]:
+            if pps["weighted_pred"]:
                 wp = _parse_pred_weight_table(r, is_b=False,
                                               n_l0=n_ref0)
-            elif is_b and pps["weighted_bipred_idc"] == 1:
-                wp = _parse_pred_weight_table(r, is_b=True,
-                                              n_l0=n_ref0,
-                                              n_l1=n_ref1)
-            elif is_b and pps["weighted_bipred_idc"] == 2:
-                wp = "implicit"         # resolved from POCs per picture
         # dec_ref_pic_marking is present only when the slice is a
         # reference (nal_ref_idc != 0)
         if ref_idc:
@@ -1088,8 +872,7 @@ class _H264Layout:
                         "deblocking filter offsets out of range "
                         "(7.4.3: div2 values in [-6, 6])")
             deblock = (idc, a_off, b_off)
-        return (first_mb, qp_delta, slice_type, wp, direct_spatial,
-                n_ref0, n_ref1, deblock)
+        return first_mb, qp_delta, slice_type, wp, n_ref0, deblock
 
 
 def parse_h264(payload: bytes) -> dict:
@@ -1111,18 +894,11 @@ def decode_h264(payload: bytes) -> tuple[tuple[int, int], list[np.ndarray]]:
     Materializes EVERY frame — tests and short clips; the sampling
     paths use `_H264Layout.frame_at` to decode only touched frames.
     I_PCM, Intra_4x4/Intra_16x16 and P-slice (P_Skip / P_L0_16x16 /
-    intra-in-P) macroblocks decode under BOTH entropy modes, and so
-    do B slices (B_Skip / direct / L0 / L1 / bi, displayed in POC
-    order — operators/h264_b.py and h264_cabac_b.py); P AND B
+    intra-in-P) macroblocks decode under BOTH entropy modes; P
     macroblocks partition below 16x16 in both entropy lanes (the
-    full Table 7-17 P family and Table 7-14/7-18 B family), and
-    weighted prediction (explicit pred_weight_table on P and B,
-    implicit POC-distance B weights) and both direct modes
-    (spatial / temporal) apply in both too; reference B pictures
-    (pyramid coding) enter the sliding window and later Bs predict
-    from them.  SP/SI slices raise ``NotImplementedError`` (the
-    documented refusal surface); malformed streams raise
-    ``ValueError``.
+    full Table 7-17 family), and explicit weighted prediction
+    applies in both too.  B slices and malformed streams raise
+    ``ValueError``; SP/SI slices raise ``NotImplementedError``.
     """
     lay = _H264Layout(payload)
     return lay.fps, [lay.frame_at(i) for i in range(lay.n_frames)]

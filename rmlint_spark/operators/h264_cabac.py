@@ -265,20 +265,9 @@ class CabacContexts:
         self.mb_skip = _zeros(3)
         self.p_pre = _zeros(4)
         self.mvd = [_zeros(7), _zeros(7)]
-        # B-slice contexts (h264_cabac_b): mb_skip_flag gets its own
-        # 3-slot set (spec offsets 24..26 vs P's 11..13), and the
-        # Table 9-37 B mb_type tree codes bin0 with neighbor inc 0..2
-        # (slots 0-2), bin1 in slot 3, bin2 in slot 4, bins >= 3 in
-        # slot 5 (deviation #2's slot discipline); mvd contexts are
-        # shared between the lists, as in the spec
-        self.b_skip = _zeros(3)
-        self.b_pre = _zeros(6)
         # P sub_mb_type (Table 9-38: '1' 8x8, '00' 8x4, '011' 4x8,
         # '010' 4x4): bin0/bin1/bin2 in slots 0-2 (spec ctx 21-23)
         self.p_sub = _zeros(3)
-        # B sub_mb_type (Table 9-38 B half, 13 codes): bin0/bin1/bin2
-        # in slots 0-2, bins >= 3 in slot 3 (spec ctx 36-39)
-        self.b_sub = _zeros(4)
         # ref_idx_l0 (spec ctxIdxOffset 54, unary): bin0 inc 0..3 in
         # slots 0-3 (condTermA + 2*condTermB over neighbor refIdx>0),
         # bin1 in slot 4, bins >= 2 in slot 5 (deviation #2's slot

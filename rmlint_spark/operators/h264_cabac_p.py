@@ -34,11 +34,9 @@ neighbor-increment rules and the arithmetic engine follow clause 9.3;
 encoder and decoder share every context table, so the pair is
 self-consistent by construction.
 
-The refusal surface for video after this module: SP/SI slices
-(B slices decode via h264_b.py / h264_cabac_b.py incl. their own
-sub-16x16 partitions and reference/pyramid B pictures; the full
-Table 7-17 / 9-38 sub-8x8 P family decodes since r5 s17, and P
-multi-ref is DPB-general — up to 16 active references — since
+The refusal surface for video after this module: B and SP/SI slices
+(the full Table 7-17 / 9-38 sub-8x8 P family decodes since r5 s17,
+and P multi-ref is DPB-general — up to 16 active references — since
 r5 s17 too).
 
 Codec-lane status: per-asset decode inside ``mapInPandas``

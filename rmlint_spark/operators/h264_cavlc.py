@@ -14,8 +14,8 @@ suffixes, total_zeros and run_before (9.2), CBP-gated block skipping,
 and in-loop reconstruction shared bit-for-bit between the encoder and
 the decoder (the encoder reconstructs through the same dequant+IDCT
 path the decoder runs, so drift is structurally impossible).  CABAC
-entropy decodes via h264_cabac.py, inter P/B slices via
-h264_inter.py / h264_b.py; the chroma plane-prediction mode stays a
+entropy decodes via h264_cabac.py, inter P slices via
+h264_inter.py; the chroma plane-prediction mode stays a
 ValueError subset.
 
 Documented deviations from bit-compatibility with external decoders
@@ -904,7 +904,7 @@ def encode_h264_cavlc(frames: list[np.ndarray],
     historical behaviour); True signals idc 0 and the decoder runs
     the 8.7 in-loop filter on its output (all-IDR stream: no picture
     predicts from another, so the encoder needs no in-loop recon
-    filtering — unlike the P/B lanes).  The string ``"legacy"`` emits
+    filtering — unlike the P lanes).  The string ``"legacy"`` emits
     the pre-s18 layout (PPS deblocking_filter_control_present 0, no
     idc field) whose INFERRED idc is 0 — the decoder must filter;
     exists so tests can pin the 7.4.3 inference rule."""

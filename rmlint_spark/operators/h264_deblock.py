@@ -78,9 +78,12 @@ CHROMA_QP = np.array(
 
 
 class _State:
-    """Per-picture deblocking inputs, unified across the I/P/B
-    picture classes (both entropy lanes share those classes, so one
-    extraction covers all six codec lanes)."""
+    """Per-picture deblocking inputs, unified across the I/P picture
+    classes (both entropy lanes share those classes, so one
+    extraction covers all four codec lanes).  ``kind`` "B" (two
+    flows per block: ``uid4``/``mv4`` gain a list axis and ``use4``
+    flags the active lists) keeps the 8.7.2.1 bi-prediction bS
+    rules; no decoder lane builds it since B slices are refused."""
 
     __slots__ = ("mb_w", "mb_h", "intra4", "nz4", "kind", "uid4",
                  "mv4", "use4", "qpg")
@@ -101,20 +104,7 @@ def extract_state(pic, mb_w: int, mb_h: int):
     qpg[qpg < 0] = pic.qp       # encoder recon path: constant slice QP
     qpg[pic.ipcm] = 0           # 8.7.2: I_PCM filters with qP = 0
     st.qpg = qpg
-    if hasattr(pic, "ldec4"):   # B picture (BiMotionMixin grids)
-        st.kind = "B"
-        st.intra4 = pic.ldec4 == 1
-        st.use4 = pic.luse4
-        st.mv4 = pic.lmv4
-        uid = np.zeros((mb_h * 4, mb_w * 4, 2), dtype=np.int64)
-        for lst, refs in ((0, pic.refs), (1, pic.refs1)):
-            if refs:
-                refmap = np.array([id(t[0]) for t in refs],
-                                  dtype=np.int64)
-                uid[:, :, lst] = refmap[
-                    np.clip(pic.lref4[:, :, lst], 0, len(refs) - 1)]
-        st.uid4 = uid
-    elif hasattr(pic, "dec4"):  # P picture
+    if hasattr(pic, "dec4"):    # P picture
         st.kind = "P"
         st.intra4 = pic.dec4 == 1
         refmap = np.array([id(t[0]) for t in pic.refs] or [0],

@@ -52,8 +52,7 @@ P prediction landed in r5 s13 and became DPB-general — te(v)/ue(v)
 ref_idx, up to 16 active references, encoder subset 4 — in r5
 s17).  CABAC-coded P slices decode too, via
 h264_cabac_p.py composing this module's MotionMixin with the
-arithmetic engine; CAVLC B slices via h264_b.py composing the
-two-list machinery over this module's InterPicture.
+arithmetic engine.
 
 Codec-lane status: per-asset decode inside ``mapInPandas``
 (multimodal.py), NOT a Spark hot path — the same boundary as
@@ -294,8 +293,7 @@ class MotionMixin:
         # motion state lives at the spec's 4x4-block granularity since
         # the 16x8/8x16 partition lanes (r5 s9): mv4 holds (mvy, mvx)
         # per block, dec4 is 0 = not yet decoded, 1 = intra / I_PCM,
-        # 2 = inter; mb_state keeps the per-MB view the B lanes and
-        # the colocated export need
+        # 2 = inter; mb_state keeps the per-MB view
         self.mv4 = np.zeros((mb_h * 4, mb_w * 4, 2), dtype=np.int64)
         self.dec4 = np.zeros((mb_h * 4, mb_w * 4), dtype=np.int64)
         # per-4x4-block L0 reference index (multi-ref MV prediction
@@ -304,8 +302,7 @@ class MotionMixin:
         self.mb_state = np.zeros((mb_h, mb_w), dtype=np.int64)
         self._mc_chroma: dict[str, np.ndarray] | None = None
         # weighted prediction (8.4.2.3.3): set per slice from the
-        # header's pred_weight_table (or the implicit 8.4.2.3.1
-        # derivation); None = default prediction
+        # header's pred_weight_table; None = default prediction
         self.wp: dict | None = None
 
     # CavlcPicture hook: while an inter MB is being coded, chroma
@@ -413,10 +410,9 @@ class MotionMixin:
 
     def _wp_mono(self, preds, lst: str = "l0", ref: int = 0):
         """Apply list-X explicit weights to a (y, u, v) prediction
-        triple; implicit weights never apply to mono predictions
-        (8.4.2.3), and None means default prediction."""
+        triple; None means default prediction."""
         wp = self.wp
-        if wp is None or wp.get("implicit"):
+        if wp is None:
             return preds
         w_y, o_y, w_u, o_u, w_v, o_v = self._wp_entry(lst, ref)
         p_y, p_u, p_v = preds
@@ -432,7 +428,7 @@ class MotionMixin:
         first is the cheap per-slice approximation)."""
         wp = self.wp
         plane = self.refs[ref][0]
-        if wp is None or wp.get("implicit"):
+        if wp is None:
             return plane
         cache = getattr(self, "_wp_ref_cache", None)
         if cache is None:
@@ -567,8 +563,7 @@ class MotionMixin:
                        mvp: tuple[int, int] | None = None,
                        ) -> tuple[tuple[int, int], int]:
         """Whole-MB (16x16) search; ``ref_y`` and ``mvp`` default to
-        the single-list P state — the B lane passes its per-list
-        plane and predictor."""
+        the refIdx-0 plane and predictor."""
         if ref_y is None:
             ref_y = self._search_ref_y()
         if mvp is None:
@@ -678,8 +673,8 @@ class MotionMixin:
                         ref: int = 0):
         """Transform+quantize the MC residual; returns everything the
         writer and the reconstructor need.  ``preds`` overrides the
-        single-list motion compensation (the B lane passes its
-        combined uni/bi prediction)."""
+        refIdx-0 motion compensation (partitioned macroblocks pass
+        their assembled prediction)."""
         my, mx = divmod(addr, self.mb_w)
         pred_y, pred_u, pred_v = (preds if preds is not None
                                   else self._mc_pred(my, mx, mv, ref))
@@ -725,8 +720,7 @@ class MotionMixin:
                              pred_y, pred_u, pred_v) -> None:
         """coded_block_pattern + residual decode + reconstruction
         over a motion-compensated prediction — the entropy tail every
-        non-skip inter macroblock shares (P_L0_16x16 and all four
-        B 16x16 modes)."""
+        non-skip inter macroblock shares."""
         from rmlint_spark.operators.h264 import _read_se, _read_ue
 
         my, mx = divmod(addr, self.mb_w)
@@ -1125,32 +1119,6 @@ def _estimate_wp(planes: tuple[np.ndarray, np.ndarray, np.ndarray],
     w_v, o_v = _estimate_wp_plane(planes[2], ref[2], logwd)
     return {"logwd_y": logwd, "logwd_c": logwd,
             "l0": (w_y, o_y, w_u, o_u, w_v, o_v)}
-
-
-def _estimate_wp_bi(planes: tuple[np.ndarray, np.ndarray, np.ndarray],
-                    ref0: tuple[np.ndarray, np.ndarray, np.ndarray],
-                    ref1: tuple[np.ndarray, np.ndarray, np.ndarray],
-                    logwd: int = 6) -> dict:
-    """Joint two-reference least-squares explicit-B weights: fit
-    ``src ~ (w0 p0 + w1 p1) / 2^(logwd+1) + (o0 + o1) / 2`` per plane
-    — the 8.4.2.3.3 *bi* formula, NOT two independent mono fits
-    (whose weights the bi combiner would halve).  The offset is split
-    evenly across the lists."""
-    l0, l1 = [], []
-    for src, r0, r1 in zip(planes, ref0, ref1):
-        s = src.astype(np.float64).ravel()
-        a = np.stack([r0.astype(np.float64).ravel(),
-                      r1.astype(np.float64).ravel(),
-                      np.ones_like(s)], axis=1)
-        coef, *_ = np.linalg.lstsq(a, s, rcond=None)
-        den = 1 << (logwd + 1)
-        w0 = max(-128, min(127, int(round(coef[0] * den))))
-        w1 = max(-128, min(127, int(round(coef[1] * den))))
-        o = max(-128, min(127, int(round(coef[2]))))
-        l0 += [w0, o]
-        l1 += [w1, o]
-    return {"logwd_y": logwd, "logwd_c": logwd,
-            "l0": tuple(l0), "l1": tuple(l1)}
 
 
 def encode_h264_p(frames: list[np.ndarray],

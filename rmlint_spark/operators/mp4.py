@@ -293,10 +293,7 @@ def encode_mp4_avc(frames, fps: tuple[int, int] = (25, 1),
     semantics under CABAC arithmetic entropy, r5 s5;
     ``codec="p"`` / ``codec="cabac_p"``: IDR+P GOPs with motion
     compensation under CAVLC / CABAC entropy, r5 s6 — ``stss`` then
-    lists only the IDR sync samples; ``codec="b"`` /
-    ``codec="cabac_b"``: closed IDR/P/B segments, r5 s8 — samples
-    land in DECODE order and a ``ctts`` box carries the composition
-    offsets that express the POC display reordering), which lands
+    lists only the IDR sync samples), which lands
     length-prefixed (AVCC,
     4-byte lengths) in ``mdat`` with SPS/PPS in the ``avcC``
     decoder-config box and full ``stsz``/``stsc``/``stco`` sample
@@ -323,14 +320,6 @@ def encode_mp4_avc(frames, fps: tuple[int, int] = (25, 1),
         from rmlint_spark.operators.h264_cabac_p import encode_h264_cabac_p
 
         annexb = encode_h264_cabac_p(frames, fps=fps, qp=qp)
-    elif codec == "b":
-        from rmlint_spark.operators.h264_b import encode_h264_b
-
-        annexb = encode_h264_b(frames, fps=fps, qp=qp)
-    elif codec == "cabac_b":
-        from rmlint_spark.operators.h264_cabac_b import encode_h264_cabac_b
-
-        annexb = encode_h264_cabac_b(frames, fps=fps, qp=qp)
     else:
         raise ValueError(f"unknown avc1 essence codec {codec!r}")
     sps = pps = None
@@ -371,26 +360,6 @@ def encode_mp4_avc(frames, fps: tuple[int, int] = (25, 1),
                + avcc),
     )
     stts = _full(b"stts", 0, 0, struct.pack(">III", 1, n, delta))
-    # B lanes store samples in DECODE order; ctts carries the
-    # composition (display) reordering: CT(i) = DT(i) + offset(i),
-    # version 0 offsets unsigned, so shift by the deepest reorder
-    ctts = b""
-    if codec in ("b", "cabac_b"):
-        from rmlint_spark.operators.h264 import _H264Layout
-
-        disp_of = [0] * n
-        for d_idx, dec_idx in enumerate(_H264Layout(annexb)._display):
-            disp_of[dec_idx] = d_idx
-        shift = max(i - disp_of[i] for i in range(n))
-        offsets = [(disp_of[i] - i + shift) * delta for i in range(n)]
-        runs: list[tuple[int, int]] = []
-        for off in offsets:
-            if runs and runs[-1][1] == off:
-                runs[-1] = (runs[-1][0] + 1, off)
-            else:
-                runs.append((1, off))
-        ctts = _full(b"ctts", 0, 0, struct.pack(">I", len(runs))
-                     + b"".join(struct.pack(">II", c, o) for c, o in runs))
     stss = _full(b"stss", 0, 0, struct.pack(">I", len(sync))
                  + b"".join(struct.pack(">I", i) for i in sync))
     stsc = _full(b"stsc", 0, 0, struct.pack(">IIII", 1, 1, n, 1))
@@ -399,8 +368,7 @@ def encode_mp4_avc(frames, fps: tuple[int, int] = (25, 1),
 
     def moov(chunk_offset: int) -> bytes:
         stco = _full(b"stco", 0, 0, struct.pack(">II", 1, chunk_offset))
-        stbl = _box(b"stbl", stsd + stts + ctts + stss + stsc + stsz
-                    + stco)
+        stbl = _box(b"stbl", stsd + stts + stss + stsc + stsz + stco)
         minf = _box(
             b"minf",
             _full(b"vmhd", 0, 1, b"\x00" * 8)

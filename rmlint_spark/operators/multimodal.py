@@ -1293,8 +1293,8 @@ def _features_for(payload: bytes) -> np.ndarray:
                         or payload[:3] == b"\x00\x00\x01"):
             # I_PCM, Intra_4x4/Intra_16x16 CAVLC AND CABAC essence
             # all decode for real (h264.py, h264_cavlc.py,
-            # h264_cabac.py); only inter (P/B) slices fall through
-            # to the stand-in below.
+            # h264_cabac.py), and so do P slices; B and SP/SI slices
+            # fall through to the stand-in below.
             return _h264_video_features(payload)
         if payload and payload[4:8] == b"ftyp":
             # MP4-carried avc1: the sample tables reconstruct the

@@ -89,6 +89,11 @@ def run_pipeline(
         from pyspark import inheritable_thread_target
 
         _itt = inheritable_thread_target(files.sparkSession)
+        if _itt is files.sparkSession:
+            # non-pinned py4j mode hands the session back instead of a
+            # decorator; there the lanes need no thread wrapper
+            def _itt(fn):
+                return fn
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_mh = pool.submit(_itt(lambda: candidate_pairs(sigs, relaxed)))
             f_sh = pool.submit(_itt(lambda: simhash_candidates(sigs, cfg)))

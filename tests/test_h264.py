@@ -177,6 +177,13 @@ def test_malformed_streams_raise_value_error():
     ):
         with pytest.raises(ValueError):
             decode_h264(bad)
+    # B slices are outside the implemented subset, so no MP4 lane
+    # encodes them
+    from rmlint_spark.operators.mp4 import encode_mp4_avc
+
+    for codec in ("b", "cabac_b"):
+        with pytest.raises(ValueError, match="essence codec"):
+            encode_mp4_avc(_gray_frames(2), codec=codec)
 
 
 def test_oversized_dimensions_rejected():

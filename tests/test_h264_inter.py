@@ -347,10 +347,9 @@ def test_p_picture_without_reference_refused():
 
 
 def test_truncated_reference_b_slice_refused():
-    # Reference (pyramid) B pictures decode since r5 s17
-    # (test_h264_pyramid.py covers the positive path); a reference-B
-    # NAL whose slice body stops mid-grammar must still raise the
-    # bounded ValueError, never decode garbage
+    # B slices are outside the implemented subset: a reference-B NAL
+    # whose slice body stops mid-grammar must raise the bounded
+    # ValueError, never decode garbage
     from rmlint_spark.operators.h264 import (_encode_pps, _encode_sps,
                                              _escape_rbsp)
     w = _BitWriter()

@@ -1,8 +1,7 @@
 """H.264 16x8 / 8x16 / P_8x8 P partitions (r5 s9) and the Table
 7-17 sub-8x8 family (r5 s17): directional MV predictor rules,
-split-motion compression wins under both entropy modes,
-cross-entropy reconstruction identity, and the B-direct guard over
-partitioned colocated macroblocks."""
+split-motion compression wins under both entropy modes, and
+cross-entropy reconstruction identity."""
 
 from __future__ import annotations
 
@@ -182,31 +181,6 @@ def test_sub8x8_strip_motion_roundtrip_both_lanes():
         frames, qp=14, gop=8, search=6, partitions=True))
     for a, b in zip(dec, dec_cab):
         assert np.array_equal(a, b)
-
-
-def test_b_direct_refuses_partitioned_colocated():
-    """Spatial direct derives whole-MB motion; a PARTITIONED
-    colocated anchor MB would make the per-8x8 spec corners diverge,
-    so the B lane refuses instead of silently deviating."""
-    from rmlint_spark.operators.h264_b import BInterPicture
-
-    y = np.zeros((32, 32), dtype=np.uint8)
-    u = np.zeros((16, 16), dtype=np.uint8)
-    v = np.zeros((16, 16), dtype=np.uint8)
-    zero = (np.zeros_like(y), np.zeros_like(u), np.zeros_like(v))
-    col_mv = np.zeros((8, 8, 2), dtype=np.int64)
-    col_mv[0:2, 4:8] = (8, 0)           # top 16x8 of col MB (0,1) moves
-    col_state = np.full((2, 2), 2, dtype=np.int64)
-    pic = BInterPicture(y, u, v, 2, 2, zero, zero,
-                        (col_mv, col_state))
-    # directZeroPrediction (no usable neighbor lists) never consults
-    # the colocated MB — per spec — so MB (0,0) derives fine
-    pic._direct_mv(0, 0)
-    # give MB (0,1) an L0-predicting neighbor so colZero IS evaluated
-    # (B motion state is block-granular since the sub-16x16 B lanes)
-    pic._commit_b(0, (4, 4), (0, 0), True, False)
-    with pytest.raises(ValueError, match="partitioned colocated"):
-        pic._direct_mv(0, 1)
 
 
 def test_p8x8_quadrant_motion_roundtrip_both_lanes():

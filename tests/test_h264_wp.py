@@ -1,9 +1,7 @@
-"""H.264 weighted prediction (8.4.2.3.3 explicit / 8.4.2.3.1
-implicit): pred_weight_table grammar, the weighting formulas against
-a scalar spec reference, implicit POC-distance weight derivation,
-fade/crossfade compression wins in BOTH entropy lanes, and the range
-refusals.  Closes the "weighted (bi-)prediction" refusal of the
-video family.
+"""H.264 explicit weighted prediction (8.4.2.3.3) on P slices:
+pred_weight_table grammar, the weighting formula against a scalar
+spec reference, fade compression wins in BOTH entropy lanes, and the
+range refusals.
 
 Reference parity note: rmlint hashes media as opaque bytes
 (lib/checksum.c); this lane serves the multimodal training-data
@@ -19,19 +17,15 @@ import pytest
 
 from rmlint_spark.operators.flac import _BitReader, _BitWriter
 from rmlint_spark.operators.h264 import (
-    _implicit_wp,
     _parse_pred_weight_table,
     _write_pred_weight_table,
     decode_h264,
 )
-from rmlint_spark.operators.h264_b import BInterPicture, encode_h264_b
-from rmlint_spark.operators.h264_cabac_b import encode_h264_cabac_b
 from rmlint_spark.operators.h264_cabac_p import encode_h264_cabac_p
 from rmlint_spark.operators.h264_inter import (
     InterPicture,
     MotionMixin,
     _estimate_wp,
-    _estimate_wp_bi,
     encode_h264_p,
 )
 
@@ -84,76 +78,6 @@ def test_wp_plane_matches_scalar_spec_reference():
                         assert got[y, x] == max(0, min(255, v))
                 break       # one offset row per weight keeps it fast
         assert got.min() >= 0 and got.max() <= 255
-
-
-def test_bi_weighting_matches_scalar_spec_reference():
-    """The explicit-bi combination in _pred_b against the 8.4.2.3.3
-    two-list formula, via a synthetic picture with flat references."""
-    mb_w = mb_h = 1
-    y = np.zeros((16, 16), np.uint8)
-    u = np.zeros((8, 8), np.uint8)
-    v = np.zeros((8, 8), np.uint8)
-    ref0 = (np.full((16, 16), 100, np.uint8),
-            np.full((8, 8), 60, np.uint8),
-            np.full((8, 8), 200, np.uint8))
-    ref1 = (np.full((16, 16), 180, np.uint8),
-            np.full((8, 8), 90, np.uint8),
-            np.full((8, 8), 10, np.uint8))
-    col = (np.zeros((4, 4, 2), np.int64), np.ones((1, 1), np.int64))
-    pic = BInterPicture(y, u, v, mb_w, mb_h, ref0, ref1, col)
-    pic.wp = {"logwd_y": 6, "logwd_c": 5,
-              "l0": (96, 4, 20, -2, 48, 0),
-              "l1": (40, -6, 44, 8, 16, 2)}
-    py, pu, pv = pic._pred_b(0, 0, (0, 0), (0, 0), True, True)
-
-    def bi(p0, p1, w0, o0, w1, o1, lg):
-        return max(0, min(255, ((p0 * w0 + p1 * w1 + (1 << lg))
-                                >> (lg + 1)) + ((o0 + o1 + 1) >> 1)))
-
-    assert int(py[0, 0]) == bi(100, 180, 96, 4, 40, -6, 6)
-    assert int(pu[0, 0]) == bi(60, 90, 20, -2, 44, 8, 5)
-    assert int(pv[0, 0]) == bi(200, 10, 48, 0, 16, 2, 5)
-    # mono explicit weighting through the same slice table
-    py0, _, _ = pic._pred_b(0, 0, (0, 0), (0, 0), True, False)
-    assert int(py0[0, 0]) == max(
-        0, min(255, ((100 * 96 + 32) >> 6) + 4))
-
-
-def test_implicit_weights_apply_only_to_bi_blocks():
-    ref0 = (np.full((16, 16), 100, np.uint8),
-            np.full((8, 8), 100, np.uint8),
-            np.full((8, 8), 100, np.uint8))
-    ref1 = (np.full((16, 16), 200, np.uint8),) * 1 + (
-        np.full((8, 8), 200, np.uint8),
-        np.full((8, 8), 200, np.uint8))
-    col = (np.zeros((4, 4, 2), np.int64), np.ones((1, 1), np.int64))
-    pic = BInterPicture(np.zeros((16, 16), np.uint8),
-                        np.zeros((8, 8), np.uint8),
-                        np.zeros((8, 8), np.uint8),
-                        1, 1, ref0, ref1, col)
-    pic.wp = _implicit_wp(2, 0, 6)          # tb=2, td=6 -> w0=43, w1=21
-    assert pic.wp["l0"][0] == 43 and pic.wp["l1"][0] == 21
-    # mono prediction ignores implicit weights (8.4.2.3)
-    py, _, _ = pic._pred_b(0, 0, (0, 0), (0, 0), True, False)
-    assert int(py[0, 0]) == 100
-    # bi prediction uses them: (100*43 + 200*21 + 32) >> 6 + 0
-    pyb, _, _ = pic._pred_b(0, 0, (0, 0), (0, 0), True, True)
-    assert int(pyb[0, 0]) == ((100 * 43 + 200 * 21 + 32) >> 6)
-
-
-def test_implicit_weight_derivation_pinned():
-    # symmetric midpoint -> 32/32
-    assert _implicit_wp(2, 0, 4)["l0"][0] == 32
-    assert _implicit_wp(2, 0, 4)["l1"][0] == 32
-    # bgroup=2 asymmetry: tb=2, td=6 -> 43/21; tb=4 -> 22/42
-    assert (_implicit_wp(2, 0, 6)["l0"][0],
-            _implicit_wp(2, 0, 6)["l1"][0]) == (43, 21)
-    assert (_implicit_wp(4, 0, 6)["l0"][0],
-            _implicit_wp(4, 0, 6)["l1"][0]) == (22, 42)
-    # degenerate anchors (td == 0) -> default 32/32
-    assert _implicit_wp(2, 4, 4)["l0"][0] == 32
-    # implicit never applies to mono blocks
-    assert _implicit_wp(2, 0, 6)["implicit"] is True
 
 
 # ------------------------------------------------------ table grammar
@@ -225,31 +149,9 @@ def test_p_fade_wp_cabac_lane():
     assert len(e_cabac) < len(e_cavlc)      # arithmetic entropy wins
 
 
-@pytest.mark.parametrize("mode", ["implicit", "explicit"])
-def test_b_crossfade_wp_compression_win(mode):
-    """Weighted bi-prediction on a crossfade: >= 1.3x smaller B
-    stream at equal quality, in both entropy lanes."""
-    a, b = _scenes()
-    xf = _crossfade(a, b)
-    e0 = encode_h264_b(xf, qp=12, bgroup=2, seg=7)
-    e1 = encode_h264_b(xf, qp=12, bgroup=2, seg=7, wp=mode)
-    d0 = decode_h264(e0)[1]
-    d1 = decode_h264(e1)[1]
-    p0 = min(_psnr(x, y) for x, y in zip(xf, d0))
-    p1 = min(_psnr(x, y) for x, y in zip(xf, d1))
-    assert len(e1) * 1.3 <= len(e0)
-    assert p1 >= p0 - 0.3 and p1 >= 28.0
-    c0 = encode_h264_cabac_b(xf, qp=12, bgroup=2, seg=7)
-    c1 = encode_h264_cabac_b(xf, qp=12, bgroup=2, seg=7, wp=mode)
-    dc = decode_h264(c1)[1]
-    pc = min(_psnr(x, y) for x, y in zip(xf, dc))
-    assert len(c1) * 1.3 <= len(c0)
-    assert pc >= 28.0
-
-
 def test_wp_estimators_recover_planted_model():
-    """_estimate_wp recovers a known affine fade; _estimate_wp_bi
-    recovers a known mixture, through the spec denominators."""
+    """_estimate_wp recovers a known affine fade through the spec
+    denominator."""
     rng = np.random.default_rng(3)
     ref = rng.integers(16, 240, (32, 32), dtype=np.uint8)
     src = np.clip(ref.astype(np.float64) * 0.5 + 10, 0,
@@ -257,14 +159,6 @@ def test_wp_estimators_recover_planted_model():
     wp = _estimate_wp((src, src, src), (ref, ref, ref))
     assert abs(wp["l0"][0] - 32) <= 1       # 0.5 * 64
     assert abs(wp["l0"][1] - 10) <= 2
-    r0 = rng.integers(16, 240, (32, 32), dtype=np.uint8)
-    r1 = rng.integers(16, 240, (32, 32), dtype=np.uint8)
-    mix = np.clip(0.75 * r0.astype(np.float64)
-                  + 0.25 * r1.astype(np.float64), 0,
-                  255).astype(np.uint8)
-    bi = _estimate_wp_bi((mix, mix, mix), (r0, r0, r0), (r1, r1, r1))
-    assert abs(bi["l0"][0] - 96) <= 2       # 0.75 * 128
-    assert abs(bi["l1"][0] - 32) <= 2       # 0.25 * 128
 
 
 # ----------------------------------------------------- stream-level
@@ -286,9 +180,8 @@ def test_wp_bitflip_fuzz_bounded_failures():
     ValueError/NotImplementedError — never crash some other way (the
     family's fuzz discipline)."""
     scene, other = _scenes(32, 48)
-    payload = bytearray(encode_h264_b(_crossfade(scene, other, 5),
-                                      qp=14, bgroup=1, seg=5,
-                                      wp="explicit"))
+    payload = bytearray(encode_h264_p(_crossfade(scene, other, 5),
+                                      qp=14, gop=5, wp=True))
     rng = np.random.default_rng(29)
     ok = 0
     for _ in range(40):

@@ -7,6 +7,7 @@ at the pinned signature config).
 
 from __future__ import annotations
 
+from collections import Counter
 from itertools import combinations
 
 import numpy as np
@@ -192,6 +193,20 @@ def test_collision_bucket_does_not_explode(corpus, pipeline_result):
     bad = [p for p in got if p[0] in coll and p[1] in coll]
     # distinct random token streams: none should exceed 0.6 jaccard
     assert len(bad) == 0, f"{len(bad)} collision-bucket pairs clustered"
+
+
+def test_pipeline_without_pinned_threads(corpus, pipeline_result, monkeypatch):
+    """PYSPARK_PIN_THREAD=false: ``inheritable_thread_target(session)``
+    returns its argument instead of a decorator. The two candidate
+    lanes must still run and cluster exactly as in pinned mode."""
+    import pyspark
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", lambda f=None: f)
+    files, _ = corpus
+    unpinned = run_pipeline(files, CFG).near_clusters.collect()
+    pinned = pipeline_result.near_clusters.collect()
+    assert len(pinned) > 0
+    assert Counter(map(tuple, unpinned)) == Counter(map(tuple, pinned))
 
 
 def test_one_original_per_near_cluster(pipeline_result):

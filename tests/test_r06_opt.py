@@ -26,24 +26,23 @@ def spark():
 
 
 def test_ann_broadcast_matches_block_self_join(spark):
-    from rmlint_spark.operators.ann import (
-        _blas_block_self_join,
-        brute_force_topk_blas,
-    )
+    from rmlint_spark.operators.ann import brute_force_topk_blas
 
     rng = np.random.RandomState(11)
     rows = [(i, [float(x) for x in rng.standard_normal(16)]) for i in range(300)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    bcast = {
-        (r["vec_id"], r["neighbor_id"], r["rk"])
-        for r in brute_force_topk_blas(emb, k=4).collect()
-    }
-    block = {
-        (r["vec_id"], r["neighbor_id"], r["rk"])
-        for r in _blas_block_self_join(emb, 4, "vec_id", "embedding", None).collect()
-    }
-    assert bcast == block
-    assert len(bcast) == 300 * 4
+
+    def triples(df):
+        return {(r["vec_id"], r["neighbor_id"], r["rk"]) for r in df.collect()}
+
+    # a null vector has no cosine and drops out of both paths, also as
+    # the first row, which the broadcast path's dimension probe reads
+    for data in (rows, [(-1, None)] + rows):
+        emb = spark.createDataFrame(data, "vec_id long, embedding array<float>")
+        bcast = triples(brute_force_topk_blas(emb, k=4))
+        # a 1-byte budget sends the corpus to the block self-join
+        block = triples(brute_force_topk_blas(emb, k=4, broadcast_bytes=1))
+        assert bcast == block
+        assert len(bcast) == 300 * 4
 
 
 def test_ann_broadcast_over_cap_falls_back(spark):
@@ -66,16 +65,23 @@ def test_cc_local_matches_loop(spark):
     edges = [(int(a), int(a + 1)) for a in range(0, 40, 2)]
     edges += [(int(rng.randint(100, 140)), int(rng.randint(100, 140))) for _ in range(60)]
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "fid_a long, fid_b long")
-    local = {
-        (r["fid"], r["component"]) for r in connected_components(df).collect()
-    }
-    # explicit max_iter opts into the iterative loop path
-    loop = {
-        (r["fid"], r["component"])
-        for r in connected_components(df, max_iter=25).collect()
-    }
-    assert local == loop
+    # null endpoints: both paths drop the edge, and a node whose only
+    # edges were null ones (3, 4) is in no component
+    null_edges = [(1, 2), (2, None), (None, 3), (4, None), (None, None), (5, 6)]
+    for rows, want in ((edges, None),
+                       (null_edges, {(1, 1), (2, 1), (5, 5), (6, 5)})):
+        df = spark.createDataFrame(rows, "fid_a long, fid_b long")
+        local = {
+            (r["fid"], r["component"])
+            for r in connected_components(df).collect()
+        }
+        # explicit max_iter opts into the iterative loop path
+        loop = {
+            (r["fid"], r["component"])
+            for r in connected_components(df, max_iter=25).collect()
+        }
+        assert local == loop
+        assert want is None or local == want
 
 
 def test_cc_local_cap_zero_disables(spark):
