@@ -282,23 +282,19 @@ def combined_udf(
     return _both.asNondeterministic()
 
 
-def estimated_jaccard_expr(sig_a: Column, sig_b: Column) -> Column:
-    """Expression estimator (fraction of equal slots). Correct but the
-    higher-order-function chain costs ~0.3 ms/row — use the pandas
-    variant on hot paths."""
-    eq = F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int"))
-    return F.aggregate(eq, F.lit(0), lambda acc, x: acc + x) / F.size(sig_a)
+def is_sentinel(sig: Column) -> Column:
+    """True for the all -1 sentinel signature (no shingles: empty doc,
+    or every shingle stopped). Real slots lie in [0, 2^32), so -1 in
+    slot 0 marks it."""
+    return sig[0] == -1
 
 
 def estimated_jaccard(sig_a: Column, sig_b: Column) -> Column:
-    """Vectorized estimator: fraction of equal signature slots —
-    one numpy comparison per Arrow batch. (UDF created lazily: a
-    pandas_udf needs an active session.)"""
-
-    @F.pandas_udf("double")
-    def _est(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
-        a = np.stack(a_s.to_numpy())
-        b = np.stack(b_s.to_numpy())
-        return pd.Series((a == b).mean(axis=1))
-
-    return _est(sig_a, sig_b)
+    """Fraction of equal signature slots, as a JVM codegen expression
+    (no Python stage). Each value is count / num_perm, the same double
+    numpy's ``(a == b).mean()`` gives. A sentinel signature scores 0.0
+    against anything, itself included; identical token-free contents
+    still cluster through their sha."""
+    equal = F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda z: z))
+    sentinel = is_sentinel(sig_a) | is_sentinel(sig_b)
+    return F.when(sentinel, F.lit(0.0)).otherwise(equal / F.size(sig_a))

@@ -196,8 +196,9 @@ def _blas_broadcast_self(
     scores its queries against the full (normalized) corpus with one
     chunked matmul and emits the FINISHED top-k rows — rank and
     tie-break (cos_sim desc, neighbor_id asc) computed in numpy, so no
-    Exchange and no window rank exist downstream. Bit-identical scoring
-    to ``_tile_topk`` (same float64 normalize-then-matmul)."""
+    Exchange and no window rank exist downstream. Returns the same
+    ``(id, neighbor_id, rk)`` rows as the block self-join; ``cos_sim``
+    can differ in the last bits (the matmul shapes differ)."""
     spark = embeddings.sparkSession
     out_schema = f"{id_col} long, neighbor_id long, cos_sim double, rk int"
     if isinstance(rows, tuple):

@@ -34,7 +34,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rmlint_spark.config import DEFAULT, EngineConfig
-from rmlint_spark.functions.minhash import combined_udf, estimated_jaccard, minhash_udf
+from rmlint_spark.functions.minhash import (
+    combined_udf,
+    estimated_jaccard,
+    is_sentinel,
+    minhash_udf,
+)
 from rmlint_spark.operators.lint import KEY
 
 # max over-cap bucket keys pulled to the driver by the per-level
@@ -100,9 +105,9 @@ def representative_rows(files: DataFrame, idx: DataFrame | None = None) -> DataF
     # EXPLICIT repartition before the signature UDFs: the stage cost is
     # per-row CPU, not bytes, so AQE's size-based coalescing would
     # funnel the small exchange into 1-2 partitions and serialize the
-    # kernels (observed: one busy core at local[32]).
-    spark = files.sparkSession
-    n_part = max(spark.sparkContext.defaultParallelism * 2, 16)
+    # kernels (observed: one busy core at local[32]). One task per
+    # core: each Python-UDF task also pays a fixed worker set-up.
+    n_part = files.sparkSession.sparkContext.defaultParallelism
     return joined.repartition(n_part, "fid").dropDuplicates(["fid"])
 
 
@@ -318,7 +323,7 @@ def band_buckets(signatures: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFram
         f"transform(sequence(0, {bands - 1}), "
         f"b -> xxhash64(slice(sig, b * {r} + 1, {r})))"
     )
-    return signatures.filter(F.element_at("sig", 1) != -1).select(
+    return signatures.filter(~is_sentinel(F.col("sig"))).select(
         "fid", F.posexplode(F.expr(expr)).alias("band_id", "band_hash")
     )
 

@@ -67,8 +67,7 @@ def _spread(files: DataFrame) -> DataFrame:
     size-based coalescing would otherwise serialize the kernel on 1-2
     scan partitions). Keyed on the row key, so the spread is
     deterministic under retries."""
-    spark = files.sparkSession
-    n_part = max(spark.sparkContext.defaultParallelism * 2, 16)
+    n_part = files.sparkSession.sparkContext.defaultParallelism
     return files.repartition(n_part, "repo", "path", "commit")
 
 

@@ -409,3 +409,44 @@ def test_minhash_blocked_loop_matches_naive_reference():
         got = minhash_from_shingles(per_doc, 16, 42)
         want = naive(per_doc, 16, 42)
         assert np.array_equal(got, want), f"case {j} diverged"
+
+
+def test_estimated_jaccard_matches_numpy_bit_for_bit(spark):
+    """The JVM estimator returns numpy's fraction of equal slots,
+    double for double, on identical, disjoint and partly shared rows;
+    a sentinel (all -1) on either side scores 0.0."""
+    from rmlint_spark.functions.minhash import estimated_jaccard
+
+    rng = np.random.RandomState(5)
+    n, p = 300, 128
+    a = rng.randint(0, 2 ** 32, size=(n, p)).astype(np.int64)
+    b = a.copy()
+    swap = rng.rand(n, p) < rng.rand(n, 1)  # per-row share of changed slots
+    b[swap] = rng.randint(0, 2 ** 32, size=int(swap.sum()))
+    b[0] = a[0]  # identical
+    b[1] = a[1] ^ 1  # disjoint
+    a[2] = -1
+    b[3] = -1
+    a[4] = b[4] = -1
+    want = (a == b).mean(axis=1)
+    want[(a[:, 0] == -1) | (b[:, 0] == -1)] = 0.0
+    assert want[0] == 1.0 and want[1] == 0.0 and ((0 < want) & (want < 1)).sum() > n // 2
+    df = spark.createDataFrame(
+        [(i, a[i].tolist(), b[i].tolist()) for i in range(n)],
+        "i int, a array<long>, b array<long>",
+    )
+    got = dict(df.select("i", estimated_jaccard(F.col("a"), F.col("b"))).collect())
+    assert [got[i] for i in range(n)] == want.tolist()
+
+
+def test_token_free_files_do_not_near_cluster(spark):
+    """Whitespace-only files have no shingles, so each gets the
+    sentinel signature and SimHash 0, which puts them all in one
+    SimHash block. Verify must reject those pairs; identical
+    token-free files still cluster through their sha."""
+    texts = ("   \n", "\t\t\n\n", " ", "\n\n", "\n\n")
+    rows = [("r", f"{p}.txt", "c", "txt", t) for p, t in zip("abcde", texts)]
+    files = spark.createDataFrame(rows, ["repo", "path", "commit", "lang", "content"])
+    near = run_pipeline(files, CFG).near_clusters.collect()
+    assert sorted(r["path"] for r in near) == ["d.txt", "e.txt"]
+    assert {r["cluster_size"] for r in near} == {2}

@@ -124,6 +124,45 @@ def test_combined_signatures_single_python_stage(spark, files):
     assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
 
 
+def test_combined_signatures_one_partition_per_core(spark, corpus):
+    """The signature kernel runs one task per core: each Python-UDF
+    task pays a fixed worker cost, so more tasks than cores only add
+    that cost. Holds for a scanned corpus and for a frame built from
+    Python rows (no size estimate), also when the shuffle-partition
+    setting exceeds the core count."""
+    from rmlint_spark.config import DEFAULT
+    from rmlint_spark.operators.lsh import with_combined_signatures
+
+    cores = spark.sparkContext.defaultParallelism
+    files, _ = corpus
+    assert with_combined_signatures(files, DEFAULT).rdd.getNumPartitions() == cores
+    rows = [("r", f"{i}.py", "c", "py", f"def f{i}(x):\n    return x + {i}\n") for i in range(20)]
+    local = spark.createDataFrame(rows, ["repo", "path", "commit", "lang", "content"])
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(cores * 4))
+    try:
+        sigs = with_combined_signatures(local, DEFAULT)
+        assert sigs.rdd.getNumPartitions() == cores
+        assert sigs.count() == 20
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_jaccard_verify_runs_no_python(spark):
+    """The estimated-Jaccard gate is a JVM expression: the verify plan
+    holds no Python evaluation node of either kind."""
+    from rmlint_spark.operators.lsh import jaccard_verify
+
+    sigs = spark.createDataFrame(
+        [(f"f{i}", [i % 3] * 128) for i in range(6)], "fid string, sig array<long>"
+    )
+    pairs = spark.createDataFrame([("f0", "f3"), ("f1", "f2")], "fid_a string, fid_b string")
+    verified = jaccard_verify(pairs, sigs, 0.6)
+    plan = formatted_plan(verified)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    assert [tuple(r) for r in verified.collect()] == [("f0", "f3", 1.0)]
+
+
 def test_quality_queries_are_shuffle_free(spark):
     """gopher_rules, c4_lines, pii_scrub, and the repetition stats are
     per-document maps — their physical plans must contain NO Exchange
