@@ -8,8 +8,9 @@ idiomatic Spark DataFrame pipeline over a table of source-code files
 - exact-duplicate grouping via a staged "funnel"
   (size bucket -> prefix signature -> sha256 -> byte confirm),
   mirroring rmlint's shredder generations (lib/shredder.c:47-60);
-- near-duplicate clustering via MinHash/LSH band joins and SimHash
-  Hamming buckets (new capability mandated by the north rule);
+- near-duplicate clustering via MinHash/LSH band joins, and SimHash
+  Hamming-bucket candidate pairs (new capabilities mandated by the
+  north rule);
 - candidate-pair resolution via an iterative connected-components join;
 - directory/subtree rollup (treemerge analog, lib/treemerge.c);
 - cross-file substring lint via shingle inverted indexes;

@@ -245,7 +245,6 @@ def combined_udf(
 ):
     """pandas_udf computing MinHash AND SimHash from ONE tokenize +
     SipHash pass per batch: struct<sig: array<long>, simhash: long>.
-    The pipeline's single content read for the whole near-dup layer.
     With shingle-feature simhash the per-doc shingle arrays are shared
     between both kernels (one rolling-hash pass total)."""
     from rmlint_spark.functions.simhash import (

@@ -84,20 +84,11 @@ def _local_components(edges: DataFrame, src: str, dst: str, cap: int):
     verification are orders of magnitude smaller than the corpus, so
     the local path is the common case at every scale below the cap;
     the loop remains the unbounded-scale path."""
-    lim = edges.select(src, dst).limit(cap + 1)
-    try:
-        tbl = lim.toArrow()
-        n = tbl.num_rows
-        if n > cap:
-            return None
-        a_vals = tbl.column(0).to_pylist()
-        b_vals = tbl.column(1).to_pylist()
-    except Exception:
-        rows = lim.collect()
-        if len(rows) > cap:
-            return None
-        a_vals = [r[0] for r in rows]
-        b_vals = [r[1] for r in rows]
+    tbl = edges.select(src, dst).limit(cap + 1).toArrow()
+    if tbl.num_rows > cap:
+        return None
+    a_vals = tbl.column(0).to_pylist()
+    b_vals = tbl.column(1).to_pylist()
     parent: dict = {}
 
     def find(x):

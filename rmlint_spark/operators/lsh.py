@@ -184,13 +184,15 @@ def stop_shingle_hashes(contents: DataFrame, cfg: EngineConfig = DEFAULT):
 
 
 def with_signatures(
-    files: DataFrame, cfg: EngineConfig = DEFAULT, stop=None
+    files: DataFrame, cfg: EngineConfig = DEFAULT, stop=None, idx: DataFrame | None = None
 ) -> DataFrame:
     """(fid, repo, path, commit, sha, n_rows, sig) — one row per
-    distinct content; signature in one vectorized Arrow pass."""
+    distinct content; signature in one vectorized Arrow pass (the
+    pipeline hot path). ``idx``: optional precomputed ``row_index``
+    (see ``representative_rows``)."""
     from rmlint_spark.operators.exact import _pin
 
-    reps = representative_rows(files)
+    reps = representative_rows(files, idx)
     if stop is None and cfg.sig.stop_shingle_df > 0:
         reps = _pin(reps)
         stop = stop_shingle_hashes(reps, cfg)
@@ -205,7 +207,7 @@ def with_combined_signatures(
 ) -> DataFrame:
     """(fid, repo, path, commit, sha, n_rows, sig, simhash) — both
     near-dup signatures from ONE content scan and ONE tokenize/SipHash
-    pass per Arrow batch (the pipeline hot path). ``idx``: optional
+    pass per Arrow batch. ``idx``: optional
     precomputed ``row_index`` (see ``representative_rows``)."""
     from rmlint_spark.operators.exact import _pin
 

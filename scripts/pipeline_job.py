@@ -40,10 +40,10 @@ def main() -> None:
     from rmlint_spark.config import EngineConfig, SignatureConfig
     from rmlint_spark.plans.pipeline import run_pipeline
 
-    # RMLINT_SPARK_ESCALATE: 1 (both, default) / 0 (none) / lsh / simhash
-    # (A/B knob for isolating escalation cost on pathological corpora)
+    # RMLINT_SPARK_ESCALATE: 1 or lsh (LSH bucket escalation, default)
+    # / 0 (none) — A/B knob for isolating escalation cost on
+    # pathological corpora
     esc = os.environ.get("RMLINT_SPARK_ESCALATE", "1")
-    # RMLINT_SPARK_SIMHASH_FEATURES: shingle (default) / token
     # RMLINT_SPARK_STOP_SHINGLES: df fraction for the stop-shingle
     # filter. Default 0.3 since round 5: measured on the planted
     # corpus (scripts/stop_shingle_ab.py, 4000 docs) it is a literal
@@ -59,24 +59,25 @@ def main() -> None:
     cfg = EngineConfig(
         sig=SignatureConfig(
             prefix_len=4096,
-            simhash_features=os.environ.get("RMLINT_SPARK_SIMHASH_FEATURES", "shingle"),
             stop_shingle_df=float(os.environ.get("RMLINT_SPARK_STOP_SHINGLES", "0.3")),
             fuse_full_digest=os.environ.get("RMLINT_SPARK_FUSE_FUNNEL", "0") == "1",
         ),
         lsh_escalate_levels=8 if esc in ("1", "lsh") else 0,
-        simhash_escalate=esc in ("1", "simhash"),
     )
     files = spark.read.parquet(corpus_dir)
     n_files = files.count()
 
+    # run_pipeline runs the LSH probes eagerly and plans the exact
+    # funnel only on first read of res.exact_clusters, so each stage's
+    # time covers its own work
     t0 = time.time()
     res = run_pipeline(files, cfg)
-    n_exact = res.exact_clusters.count()
-    t_exact = time.time() - t0
-    t1 = time.time()
     n_near = res.near_clusters.count()
     n_edges = res.near_edges.count()
-    t_near = time.time() - t1
+    t_near = time.time() - t0
+    t1 = time.time()
+    n_exact = res.exact_clusters.count()
+    t_exact = time.time() - t1
     total = time.time() - t0
 
     print(

@@ -195,18 +195,29 @@ def test_collision_bucket_does_not_explode(corpus, pipeline_result):
     assert len(bad) == 0, f"{len(bad)} collision-bucket pairs clustered"
 
 
-def test_pipeline_without_pinned_threads(corpus, pipeline_result, monkeypatch):
-    """PYSPARK_PIN_THREAD=false: ``inheritable_thread_target(session)``
-    returns its argument instead of a decorator. The two candidate
-    lanes must still run and cluster exactly as in pinned mode."""
-    import pyspark
+def test_exact_funnel_planned_only_on_read(corpus, monkeypatch):
+    """The near-dup path never plans the exact funnel; the first read
+    of ``exact_clusters`` plans it once, and later reads reuse it."""
+    from rmlint_spark.operators import exact as EX
 
-    monkeypatch.setattr(pyspark, "inheritable_thread_target", lambda f=None: f)
+    direct = EX.exact_clusters
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return direct(*args, **kwargs)
+
+    monkeypatch.setattr(EX, "exact_clusters", counting)
     files, _ = corpus
-    unpinned = run_pipeline(files, CFG).near_clusters.collect()
-    pinned = pipeline_result.near_clusters.collect()
-    assert len(pinned) > 0
-    assert Counter(map(tuple, unpinned)) == Counter(map(tuple, pinned))
+    res = run_pipeline(files, CFG)
+    assert len(res.near_clusters.collect()) > 0
+    assert calls == []
+    first = res.exact_clusters
+    assert res.exact_clusters is first
+    assert len(calls) == 1
+    got = Counter(map(tuple, first.collect()))
+    assert len(got) > 0
+    assert got == Counter(map(tuple, direct(files, CFG).collect()))
 
 
 def test_one_original_per_near_cluster(pipeline_result):

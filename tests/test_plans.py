@@ -131,21 +131,51 @@ def test_combined_signatures_one_partition_per_core(spark, corpus):
     Python rows (no size estimate), also when the shuffle-partition
     setting exceeds the core count."""
     from rmlint_spark.config import DEFAULT
-    from rmlint_spark.operators.lsh import with_combined_signatures
+    from rmlint_spark.operators.lsh import (
+        row_index,
+        with_combined_signatures,
+        with_signatures,
+    )
+
+    def kernels(df):
+        # the combined kernel, and the MinHash-only kernel over a
+        # shared file index as the pipeline calls it
+        yield with_combined_signatures(df, DEFAULT)
+        yield with_signatures(df, DEFAULT, idx=row_index(df))
 
     cores = spark.sparkContext.defaultParallelism
     files, _ = corpus
-    assert with_combined_signatures(files, DEFAULT).rdd.getNumPartitions() == cores
+    for sigs in kernels(files):
+        assert sigs.rdd.getNumPartitions() == cores
     rows = [("r", f"{i}.py", "c", "py", f"def f{i}(x):\n    return x + {i}\n") for i in range(20)]
     local = spark.createDataFrame(rows, ["repo", "path", "commit", "lang", "content"])
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(cores * 4))
     try:
-        sigs = with_combined_signatures(local, DEFAULT)
-        assert sigs.rdd.getNumPartitions() == cores
-        assert sigs.count() == 20
+        for sigs in kernels(local):
+            assert sigs.rdd.getNumPartitions() == cores
+            assert sigs.count() == 20
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_pipeline_edges_one_minhash_kernel(spark, files):
+    """The pipeline's verified edges come from ONE Python signature
+    kernel, and that kernel computes MinHash only: no SimHash column
+    anywhere in the plan. The cached signature relation prints once
+    per plan version (AQE initial and final), so the check counts
+    distinct UDF calls, not printed nodes."""
+    import re
+
+    from rmlint_spark.config import DEFAULT
+    from rmlint_spark.plans.pipeline import run_pipeline
+
+    plan = formatted_plan(run_pipeline(files, DEFAULT).near_edges)
+    calls = set(re.findall(
+        r"^\(\d+\) ArrowEvalPython\nInput .*\nArguments: (\[.*?\])", plan, re.M
+    ))
+    assert len(calls) == 1 and "_minhash(" in calls.pop(), plan
+    assert "simhash" not in plan.lower(), plan
 
 
 def test_jaccard_verify_runs_no_python(spark):
