@@ -146,11 +146,11 @@ def brute_force_topk_blas(
                 broadcast_bytes = (
                     int(os.environ.get("RMLINT_SPARK_ANN_BCAST_MB", "256")) << 20
                 )
-            rows = _self_corpus_if_small(
+            corpus = _self_corpus_if_small(
                 embeddings, id_col, vec_col, broadcast_bytes
             )
-            if rows is not None:
-                return _blas_broadcast_self(embeddings, k, id_col, vec_col, rows)
+            if corpus is not None:
+                return _blas_broadcast_self(embeddings, k, id_col, vec_col, corpus)
         return _blas_block_self_join(embeddings, k, id_col, vec_col, n_blocks)
     return _blas_broadcast(embeddings, queries, k, id_col, vec_col)
 
@@ -158,56 +158,51 @@ def brute_force_topk_blas(
 def _self_corpus_if_small(
     embeddings: DataFrame, id_col: str, vec_col: str, broadcast_bytes: int
 ):
-    """Collect the (id, vec) corpus iff its float64 matrix fits under
-    ``broadcast_bytes``; else None. One 1-row dim probe + one bounded
-    limit+collect — the limit guards the driver before anything large
-    is pulled."""
+    """Collect the (id, vec) corpus as an ``(ids, matrix)`` pair iff
+    its float64 matrix fits under ``broadcast_bytes``; else None. One
+    1-row dim probe + one bounded limit + Arrow collect — the limit
+    guards the driver before anything large is pulled. Raises
+    ``ValueError`` when the vectors do not all have the first one's
+    length: the flat Arrow values would otherwise reshape into rows
+    that borrow values from their neighbours."""
     first = embeddings.select(vec_col).first()
     if first is None:
-        return []
+        return np.empty(0, dtype=np.int64), np.empty((0, 0))
     dim = len(first[0])
     rows_cap = max(1, broadcast_bytes // max(8 * dim, 1))
-    lim = embeddings.select(id_col, vec_col).limit(rows_cap + 1)
-    try:  # Arrow transfer (Spark 4): ~4x the row-collect path
-        tbl = lim.toArrow()
-        if tbl.num_rows > rows_cap:
-            return None
-        ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-        vals = tbl.column(vec_col).combine_chunks()
-        flat = vals.flatten().to_numpy(zero_copy_only=False)
-        if len(ids) and len(flat) == len(ids) * dim:
-            return (
-                np.asarray(ids, dtype=np.int64),
-                np.asarray(flat, dtype=np.float64).reshape(len(ids), dim),
-            )
-        # ragged dims: fall through to the row path
-    except Exception:
-        pass
-    rows = lim.collect()
-    if len(rows) > rows_cap:
+    tbl = embeddings.select(id_col, vec_col).limit(rows_cap + 1).toArrow()
+    if tbl.num_rows > rows_cap:
         return None
-    return rows
+    vals = tbl.column(vec_col).combine_chunks()
+    lengths = np.diff(vals.offsets.to_numpy())
+    if (lengths != dim).any():
+        raise ValueError(
+            f"{vec_col}: vector lengths {sorted(set(lengths.tolist()))} are "
+            f"ragged; every vector must have the same length"
+        )
+    ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
+    flat = vals.flatten().to_numpy(zero_copy_only=False)
+    return (
+        np.asarray(ids, dtype=np.int64),
+        np.asarray(flat, dtype=np.float64).reshape(len(ids), dim),
+    )
 
 
 def _blas_broadcast_self(
-    embeddings: DataFrame, k: int, id_col: str, vec_col: str, rows
+    embeddings: DataFrame, k: int, id_col: str, vec_col: str, corpus
 ) -> DataFrame:
-    """Self-join top-k with the corpus matrix broadcast: each task
-    scores its queries against the full (normalized) corpus with one
-    chunked matmul and emits the FINISHED top-k rows — rank and
+    """Self-join top-k with the ``(ids, matrix)`` corpus broadcast:
+    each task scores its queries against the full (normalized) corpus
+    with one chunked matmul and emits the FINISHED top-k rows — rank and
     tie-break (cos_sim desc, neighbor_id asc) computed in numpy, so no
     Exchange and no window rank exist downstream. Returns the same
     ``(id, neighbor_id, rk)`` rows as the block self-join; ``cos_sim``
     can differ in the last bits (the matmul shapes differ)."""
     spark = embeddings.sparkSession
     out_schema = f"{id_col} long, neighbor_id long, cos_sim double, rk int"
-    if isinstance(rows, tuple):
-        c_ids, c_mat = rows
-    elif not rows:
+    c_ids, c_mat = corpus
+    if not len(c_ids):
         return spark.createDataFrame([], out_schema)
-    else:
-        c_ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-        c_mat = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
     c_mat = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
     bc = spark.sparkContext.broadcast((c_ids, c_mat))
 
@@ -438,7 +433,6 @@ def hyperplane_bucket_ladder(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _collect_cap: int = 20000,
 ) -> tuple[DataFrame, DataFrame]:
     """Escalating hyperplane bucket assignment; returns
     ``(all_buckets, dropped)``.
@@ -460,12 +454,14 @@ def hyperplane_bucket_ladder(
     (level 0: ``max_bucket``; escalated: ``esc_cap``), the candidate
     join, and the re-rank from the materialized bytes alone.
 
-    The over-cap probe is ONE driver action per level (limit+collect
-    of the width agg's over-cap slice): the common no-escalation case
-    costs a single small aggregate, and the collected keys drive the
-    member semi-join as a broadcast local relation. A wider-than-
-    ``_collect_cap`` over set falls back to the pure-join path."""
+    The over-cap probe is ONE driver action per level
+    (``lsh._probe_over_cap`` of the width agg's over-cap slice): the
+    common no-escalation case costs a single small aggregate, and the
+    collected keys drive the member semi-join as a broadcast local
+    relation. An over set too wide to collect falls back to the
+    pure-join path."""
     from rmlint_spark.operators.exact import _pin
+    from rmlint_spark.operators.lsh import _probe_over_cap
 
     esc_cap = max_bucket if esc_cap is None else esc_cap
     spark = embeddings.sparkSession
@@ -479,15 +475,14 @@ def hyperplane_bucket_ladder(
         hyperplane_buckets(embeddings, n_bands, bits_per_band, seed, id_col, vec_col)
     )
     levels = [cur]
-    dropped = spark.createDataFrame([], "band_id int, bucket long, width long, level int")
     level, bits = 0, bits_per_band
     while True:
         cap = max_bucket if level == 0 else esc_cap
         over = bucket_widths(cur).filter(F.col("width") > cap)
-        over_local = over.limit(_collect_cap + 1).collect()
-        if not over_local:
+        over_local, dropped = _probe_over_cap(over, level)
+        if over_local == [] or level >= max_levels or bits >= 62:
             break
-        if len(over_local) > _collect_cap:
+        if over_local is None:
             over_keys = over.select("band_id", "bucket")  # join-path fallback
         else:
             over_keys = F.broadcast(
@@ -496,19 +491,6 @@ def hyperplane_bucket_ladder(
                     "band_id int, bucket long",
                 )
             )
-        if level >= max_levels or bits >= 62:
-            dropped = (
-                over.withColumn("level", F.lit(level))
-                if len(over_local) > _collect_cap
-                else spark.createDataFrame(
-                    [
-                        (r["band_id"], r["bucket"], r["width"], level)
-                        for r in over_local
-                    ],
-                    "band_id int, bucket long, width long, level int",
-                )
-            )
-            break
         over_ids = (
             cur.join(over_keys, ["band_id", "bucket"], "left_semi")
             .select(id_col)

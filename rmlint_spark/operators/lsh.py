@@ -42,8 +42,8 @@ from rmlint_spark.functions.minhash import (
 )
 from rmlint_spark.operators.lint import KEY
 
-# max over-cap bucket keys pulled to the driver by the per-level
-# escalation probe before falling back to distributed joins
+# max over-cap bucket keys pulled to the driver by one over-cap probe
+# (``_probe_over_cap``) before the report stays distributed
 _PROBE_CAP = 10_000
 
 
@@ -330,13 +330,68 @@ def band_buckets(signatures: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFram
     )
 
 
+def _gather_buckets(
+    rel: DataFrame, keys: list[str], member, distinct: bool = False
+) -> DataFrame:
+    """The gathered-bucket relation shared by every candidate lane
+    (LSH bands, SimHash blocks, substring windows, winnowed
+    fingerprints): one row per ``keys`` bucket whose ``_members``
+    array collects ``member`` (a column name, or a struct column that
+    carries a payload such as the SimHash signature). ``distinct``
+    drops repeated members, for an index that was not deduplicated.
+
+    One ``collect_list`` aggregation is the whole candidate stage's
+    shuffle: the bucket width is ``size(_members)`` on the gathered
+    row, so there is no separate width aggregation; the over-cap check
+    and escalation's member extraction are filters and explodes of this
+    relation, not anti/semi joins; and pairs come from in-bucket array
+    expansion (``_bucket_pairs``), not a two-sided equi-join. The keyed
+    relation crosses the network once instead of three times (width
+    aggregation plus both join sides), and per-row expansion memory is
+    O(width), which ``_split_at_cap`` bounds."""
+    members = F.collect_list(member)
+    if distinct:
+        members = F.array_distinct(members)
+    return rel.groupBy(*keys).agg(members.alias("_members"))
+
+
+def _split_at_cap(buckets: DataFrame, cap: int) -> tuple[DataFrame, DataFrame]:
+    """(ok, over): gathered buckets at most ``cap`` wide, and the rest."""
+    width = F.size("_members")
+    return buckets.filter(width <= cap), buckets.filter(width > cap)
+
+
+def _bucket_width() -> F.Column:
+    """A gathered bucket's width (member count) as the reports' bigint."""
+    return F.size("_members").cast("long")
+
+
+def _probe_over_cap(over: DataFrame, level: int) -> tuple[list | None, DataFrame]:
+    """The bounded over-cap probe: one ``limit + collect`` driver
+    action on ``over``, already projected to ``(*keys, width)``.
+
+    Returns ``(rows, report)``. ``rows`` are the collected over-cap
+    rows (``[]`` when no bucket is over the cap), or None when there
+    are more than ``_PROBE_CAP`` of them. ``report`` is
+    ``(*keys, width, level)``: a small local relation built from
+    ``rows``, or, past the cap, ``over`` itself kept distributed."""
+    rows = over.limit(_PROBE_CAP + 1).collect()
+    if len(rows) > _PROBE_CAP:
+        return None, over.withColumn("level", F.lit(level))
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in over.schema)
+    report = over.sparkSession.createDataFrame(
+        [(*r, level) for r in rows], f"{schema}, level int"
+    )
+    return rows, report
+
+
 def _bucket_pairs(buckets: DataFrame) -> DataFrame:
-    """All (fid_a < fid_b) pairs from a gathered-bucket relation
-    carrying a ``_members`` array column: explode each member as the
-    pair head, pair it with every LARGER member of the same bucket via
-    a higher-order filter — pure whole-stage codegen, no join, per-row
-    memory O(bucket width) which the callers cap. NOT deduplicated
-    across buckets."""
+    """All (fid_a < fid_b) member pairs of each gathered bucket
+    (``_gather_buckets``): explode each member as the pair head, pair
+    it with every LARGER member of the same bucket via a higher-order
+    filter — pure whole-stage codegen, no join. Struct members compare
+    field by field, so ``(fid, payload)`` structs order by fid first.
+    NOT deduplicated across buckets."""
     return buckets.select(F.explode("_members").alias("fid_a"), "_members").select(
         "fid_a",
         F.explode(F.filter("_members", lambda y: y > F.col("fid_a"))).alias("fid_b"),
@@ -367,62 +422,25 @@ def candidate_pairs(
     projection of the oversized members only — the escalation path
     never touches content and shrinks geometrically.
 
-    Shuffle/action economy (round 6, guide §2.3/§2.4): each level
-    gathers its buckets with ONE ``collect_list`` aggregation — the
-    bucket width is ``size(members)`` on the gathered row, so the
-    former separate width aggregation disappears, the over-cap check
-    and the member extraction for escalation become plain filters and
-    explodes of the pinned bucket relation (no anti/semi joins), and
-    candidate pairs come from an in-bucket array self-expansion
-    (``explode`` + higher-order ``filter``, pure codegen) instead of a
-    relation-vs-relation equi-join — the band relation crosses the
-    network ONCE per level instead of three times (width agg + both
-    join sides), and the per-row expansion memory is O(width), bounded
-    by the cap. The over-cap probe stays the single limit+collect
-    driver action per level.
+    Each level is one pinned ``_gather_buckets`` relation and one
+    ``_probe_over_cap`` driver action.
     """
     from rmlint_spark.operators.exact import _pin
 
-    spark = signatures.sparkSession
     r, num_perm = cfg.sig.rows_per_band, cfg.sig.num_perm
+    keys = ["band_id", "band_hash"]
     cur = band_buckets(signatures, cfg)
     ok_levels: list[DataFrame] = []
     level, slice_len = 0, r
     esc_cap = min(cfg.lsh_escalate_cap, cfg.max_bucket_width)
-    dropped_schema = "band_id int, band_hash bigint, width bigint, level int"
     while True:
-        buckets = _pin(
-            cur.groupBy("band_id", "band_hash").agg(
-                F.collect_list("fid").alias("_members")
-            )
-        )
         cap = cfg.max_bucket_width if level == 0 else esc_cap
-        over = buckets.filter(F.size("_members") > cap)
-        over_rows = (
-            over.select(
-                "band_id", "band_hash", F.size("_members").cast("long").alias("width")
-            )
-            .limit(_PROBE_CAP + 1)
-            .collect()
+        ok, over = _split_at_cap(_pin(_gather_buckets(cur, keys, "fid")), cap)
+        ok_levels.append(ok)
+        rows, dropped = _probe_over_cap(
+            over.select(*keys, _bucket_width().alias("width")), level
         )
-        ok_levels.append(buckets.filter(F.size("_members") <= cap))
-        if not over_rows:
-            dropped = spark.createDataFrame([], dropped_schema)
-            break
-        if len(over_rows) <= _PROBE_CAP:
-            dropped_now = spark.createDataFrame(
-                [(x["band_id"], x["band_hash"], x["width"], level) for x in over_rows],
-                dropped_schema,
-            )
-        else:  # over set itself huge: keep the report distributed
-            dropped_now = over.select(
-                "band_id",
-                "band_hash",
-                F.size("_members").cast("long").alias("width"),
-                F.lit(level).alias("level"),
-            )
-        if slice_len >= num_perm or level >= cfg.lsh_escalate_levels:
-            dropped = dropped_now
+        if rows == [] or slice_len >= num_perm or level >= cfg.lsh_escalate_levels:
             break
         over_fids = (
             over.select(F.explode("_members").alias("fid")).dropDuplicates(["fid"])

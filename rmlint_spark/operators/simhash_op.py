@@ -22,7 +22,14 @@ from pyspark.sql import functions as F
 from rmlint_spark.config import DEFAULT, EngineConfig
 from rmlint_spark.functions.simhash import hamming, simhash_udf
 from rmlint_spark.operators.lint import KEY
-from rmlint_spark.operators.lsh import representative_rows
+from rmlint_spark.operators.lsh import (
+    _bucket_pairs,
+    _bucket_width,
+    _gather_buckets,
+    _probe_over_cap,
+    _split_at_cap,
+    representative_rows,
+)
 
 
 def with_simhash(files: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
@@ -36,22 +43,10 @@ def with_simhash(files: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     )
 
 
-def simhash_blocks(sims: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
-    """(fid, block_id, block_value): contiguous 16-bit (for 4 blocks)
-    slices extracted with shifts/masks — pure codegen expressions."""
-    nblocks = cfg.sig.simhash_blocks
-    width = cfg.sig.simhash_bits // nblocks
-    mask = (1 << width) - 1
-    expr = (
-        f"transform(sequence(0, {nblocks - 1}), "
-        f"b -> shiftright(simhash, b * {width}) & {mask}L)"
-    )
-    return sims.select("fid", F.posexplode(F.expr(expr)).alias("block_id", "block_value"))
-
-
-def _blocks_with_sig(sims: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """``simhash_blocks`` variant that keeps the signature on each
-    exploded row — same rows, one extra 8-byte column, no join."""
+def _blocks(sims: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """(fid, simhash, block_id, block_value): contiguous 16-bit (for 4
+    blocks) slices extracted with shifts/masks — pure codegen
+    expressions; the signature rides along on each exploded row."""
     nblocks = cfg.sig.simhash_blocks
     width = cfg.sig.simhash_bits // nblocks
     mask = (1 << width) - 1
@@ -61,29 +56,6 @@ def _blocks_with_sig(sims: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
     return sims.select(
         "fid", "simhash", F.posexplode(F.expr(expr)).alias("block_id", "block_value")
-    )
-
-
-def _struct_pairs(buckets: DataFrame) -> DataFrame:
-    """(fid_a, sh_a, fid_b, sh_b) pairs from a gathered-bucket relation
-    whose ``_members`` array holds (fid, simhash) structs: the 8-byte
-    signature rides the bucket gather, so the pair expansion emits both
-    signatures inline and the former two corpus-wide fetch joins
-    disappear (round 6, guide §2.4). NOT deduplicated across buckets."""
-    return (
-        buckets.select(F.explode("_members").alias("_a"), "_members")
-        .select(
-            "_a",
-            F.explode(
-                F.filter("_members", lambda y: y["fid"] > F.col("_a.fid"))
-            ).alias("_b"),
-        )
-        .select(
-            F.col("_a.fid").alias("fid_a"),
-            F.col("_a.simhash").alias("sh_a"),
-            F.col("_b.fid").alias("fid_b"),
-            F.col("_b.simhash").alias("sh_b"),
-        )
     )
 
 
@@ -107,48 +79,27 @@ def simhash_candidates(
     oversized members only.
     """
     from rmlint_spark.operators.exact import _pin
-    from rmlint_spark.operators.lsh import _PROBE_CAP
 
-    spark = sims.sparkSession
     # the narrow (fid, simhash) projection feeds the block explode; an
     # UNCACHED ``sims`` lineage (bench lane: representative_rows + the
-    # signature UDF) must run once, not per reference (round 6)
+    # signature UDF) must run once, not per reference
     s = _pin(sims.select("fid", "simhash"))
-    # ONE collect_list aggregation gathers block buckets (round 6,
-    # guide §2.3/§2.4 — same restructure as lsh.candidate_pairs):
-    # width = size(members) rides the gathered row, so the separate
-    # width aggregation, the over-key anti/semi joins, and the two-
-    # sided candidate equi-join all collapse into filters + in-bucket
-    # array expansion over this one pinned relation. Members are
-    # (fid, simhash) STRUCTS — carrying the 8-byte signature through
-    # the gather lets the pair expansion emit both signatures inline,
-    # so the hamming gate runs BEFORE pair dedup and the former two
-    # corpus-wide fetch joins (plus a 100x-larger dedup input:
-    # ~160k candidate rows vs ~4k hamming survivors at the 50k-doc
-    # bench corpus) disappear (guide §2.3/§2.4).
-    buckets = _pin(
-        _blocks_with_sig(s, cfg)
-        .groupBy("block_id", "block_value")
-        .agg(F.collect_list(F.struct("fid", "simhash")).alias("_members"))
+    # members are (fid, simhash) STRUCTS: the 8-byte signature rides
+    # the gather, so the pair expansion emits both signatures inline,
+    # the hamming gate runs before pair dedup, and no fetch join back
+    # to the signatures is needed
+    member = F.struct("fid", "simhash")
+    keys = ["block_id", "block_value"]
+    buckets = _pin(_gather_buckets(_blocks(s, cfg), keys, member))
+    ok, over = _split_at_cap(buckets, cfg.simhash_max_bucket_width)
+    rows, dropped = _probe_over_cap(
+        over.select(*keys, _bucket_width().alias("width")), 0
     )
-    over = buckets.filter(F.size("_members") > cfg.simhash_max_bucket_width)
-    over_rows = (
-        over.select(
-            "block_id", "block_value", F.size("_members").cast("long").alias("width")
-        )
-        .limit(_PROBE_CAP + 1)
-        .collect()
-    )
-    none_over = not over_rows
-    ok = buckets.filter(F.size("_members") <= cfg.simhash_max_bucket_width)
-    cand = _struct_pairs(ok)
-    dropped_schema = "block_id int, block_value bigint, width bigint, level int"
-    if none_over:
-        dropped = spark.createDataFrame([], dropped_schema)
-    elif cfg.simhash_escalate:
+    cand = _bucket_pairs(ok)
+    if rows != [] and cfg.simhash_escalate:
         esc_members = over.select(
-            "block_id", "block_value", F.explode("_members").alias("_m")
-        ).select("block_id", "block_value", "_m.fid", "_m.simhash")
+            *keys, F.explode("_members").alias("_m")
+        ).select(*keys, "_m.fid", "_m.simhash")
         # flat partner rows re-derive from the PINNED bucket arrays —
         # never from the signature UDF again
         partners = buckets.select(
@@ -156,42 +107,25 @@ def simhash_candidates(
             F.col("block_value").alias("partner_value"),
             F.explode("_members").alias("_m"),
         ).select("partner_id", "partner_value", "_m.fid")
-        k2 = ["block_id", "block_value", "partner_id", "partner_value"]
         esc_cap = min(cfg.simhash_escalate_cap, cfg.simhash_max_bucket_width)
+        esc = esc_members.join(partners, "fid").filter(
+            F.col("partner_id") != F.col("block_id")
+        )
         esc_buckets = _pin(
-            esc_members.join(partners, "fid")
-            .filter(F.col("partner_id") != F.col("block_id"))
-            .groupBy(*k2)
-            .agg(F.collect_list(F.struct("fid", "simhash")).alias("_members"))
+            _gather_buckets(esc, [*keys, "partner_id", "partner_value"], member)
         )
-        over2 = esc_buckets.filter(F.size("_members") > esc_cap)
-        cand = cand.unionByName(
-            _struct_pairs(esc_buckets.filter(F.size("_members") <= esc_cap))
-        )
-        dropped = over2.select(
-            "block_id",
-            "block_value",
-            F.size("_members").cast("long").alias("width"),
-            F.lit(1).alias("level"),
-        )
-    else:
-        dropped = (
-            spark.createDataFrame(
-                [(x["block_id"], x["block_value"], x["width"], 0) for x in over_rows],
-                dropped_schema,
-            )
-            if len(over_rows) <= _PROBE_CAP
-            else over.select(
-                "block_id",
-                "block_value",
-                F.size("_members").cast("long").alias("width"),
-                F.lit(0).alias("level"),
-            )
+        esc_ok, esc_over = _split_at_cap(esc_buckets, esc_cap)
+        cand = cand.unionByName(_bucket_pairs(esc_ok))
+        dropped = esc_over.select(
+            *keys, _bucket_width().alias("width"), F.lit(1).alias("level")
         )
     joined = (
-        cand.withColumn("hamming", hamming(F.col("sh_a"), F.col("sh_b")))
+        cand.select(
+            F.col("fid_a.fid").alias("fid_a"),
+            F.col("fid_b.fid").alias("fid_b"),
+            hamming(F.col("fid_a.simhash"), F.col("fid_b.simhash")).alias("hamming"),
+        )
         .filter(F.col("hamming") <= cfg.sig.simhash_max_hamming)
-        .select("fid_a", "fid_b", "hamming")
         .dropDuplicates(["fid_a", "fid_b"])
     )
     return joined, dropped

@@ -91,28 +91,22 @@ def clone_pairs(
 
     Buckets wider than cfg.max_bucket_width (boilerplate windows
     appearing in thousands of files) are excluded and reported — the
-    same skew-cap discipline as the LSH band join.
+    same skew-cap discipline as the LSH band join."""
+    from rmlint_spark.operators.lsh import (
+        _bucket_pairs,
+        _bucket_width,
+        _gather_buckets,
+        _split_at_cap,
+    )
 
-    Round 6 (guide §2.3/§2.4): ONE collect_list aggregation gathers
-    each window bucket; width = size(members) rides the gathered row,
-    so the former separate width aggregation, the over-key anti-join,
-    and the two-sided candidate equi-join collapse into filters plus
-    in-bucket array expansion — the 5M-row index crosses the network
-    once instead of three times. Per-row expansion memory is O(width),
-    bounded by the cap."""
-    from rmlint_spark.operators.lsh import _bucket_pairs
-
-    # array_distinct makes the gather tolerant of a NON-deduplicated
+    # distinct members make the gather tolerant of a NON-deduplicated
     # index (identical to deduplicating (fid, whash) first — per-doc
     # repeat windows and path-doubled rows emit identical pairs), so
     # substring_clones can skip the separate dropDuplicates exchange
-    buckets = wh.groupBy("whash").agg(
-        F.array_distinct(F.collect_list("fid")).alias("_members")
+    ok, over = _split_at_cap(
+        _gather_buckets(wh, ["whash"], "fid", distinct=True), cfg.max_bucket_width
     )
-    oversized = buckets.filter(F.size("_members") > cfg.max_bucket_width).select(
-        "whash", F.size("_members").cast("long").alias("width")
-    )
-    ok = buckets.filter(F.size("_members") <= cfg.max_bucket_width)
+    oversized = over.select("whash", _bucket_width().alias("width"))
     pairs = (
         _bucket_pairs(ok)
         .groupBy("fid_a", "fid_b")

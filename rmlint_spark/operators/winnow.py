@@ -75,23 +75,16 @@ def shared_fingerprint_pairs(
     per-fingerprint bucket expansion with the repo-standard width cap.
     Returns (pairs with shared-fp counts, dropped over-cap
     fingerprints) — the same (result, dropped) observability contract
-    as the LSH and ANN candidate stages.
-
-    Round 6 (guide §2.3/§2.4 — the candidate-lane restructure): ONE
-    collect_list aggregation gathers each fingerprint's documents;
-    width = size(members) rides the gathered row, so the separate
-    width aggregation, the over-cap anti-join, and the two-sided
-    equi-join collapse into filters plus in-bucket array expansion —
-    the multi-million-row fingerprint relation crosses the network
-    once instead of three times. Per-row expansion memory is O(width),
-    bounded by the cap."""
-    from rmlint_spark.operators.lsh import _bucket_pairs
-
-    buckets = fps.groupBy("fp").agg(F.collect_list(id_col).alias("_members"))
-    dropped = buckets.filter(F.size("_members") > max_bucket_width).select(
-        "fp", F.size("_members").cast("long").alias("_w")
+    as the LSH and ANN candidate stages."""
+    from rmlint_spark.operators.lsh import (
+        _bucket_pairs,
+        _bucket_width,
+        _gather_buckets,
+        _split_at_cap,
     )
-    ok = buckets.filter(F.size("_members") <= max_bucket_width)
+
+    ok, over = _split_at_cap(_gather_buckets(fps, ["fp"], id_col), max_bucket_width)
+    dropped = over.select("fp", _bucket_width().alias("_w"))
     pairs = (
         _bucket_pairs(ok)
         .groupBy(F.col("fid_a").alias("id_a"), F.col("fid_b").alias("id_b"))

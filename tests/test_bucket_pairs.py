@@ -42,6 +42,27 @@ def test_bucket_pairs_matches_join_semantics(spark):
     got = sorted(map(tuple, _bucket_pairs(buckets).collect()))
     assert got == [("a", "b"), ("a", "c"), ("b", "c"), ("b", "c")]
 
+    # (fid, simhash) struct members, as SimHash gathers them: pairs
+    # order by fid, not by the payload (which runs the other way here)
+    sh = {"a": 30, "b": 20, "c": 10, "z": 0}
+    rel = spark.createDataFrame(
+        [(b, f, sh[f]) for b, f in rows], "bkt int, fid string, simhash long"
+    )
+    buckets = rel.groupBy("bkt").agg(
+        F.collect_list(F.struct("fid", "simhash")).alias("_members")
+    )
+    got = sorted(
+        map(
+            tuple,
+            _bucket_pairs(buckets)
+            .select("fid_a.fid", "fid_a.simhash", "fid_b.fid", "fid_b.simhash")
+            .collect(),
+        )
+    )
+    assert got == [
+        ("a", 30, "b", 20), ("a", 30, "c", 10), ("b", 20, "c", 10), ("b", 20, "c", 10)
+    ]
+
 
 def test_clone_pairs_tolerates_non_deduped_index(spark):
     """clone_pairs' array_distinct gather makes a raw (fid, whash)

@@ -13,7 +13,10 @@ from __future__ import annotations
 
 from dataclasses import replace
 
+import numpy as np
+
 from rmlint_spark.config import EngineConfig, SignatureConfig
+from rmlint_spark.operators import lsh
 
 # small signature space so planted buckets are easy to reason about:
 # num_perm=16, 4 bands x 4 rows; LSH cap 3
@@ -105,3 +108,49 @@ def test_simhash_escalation_disabled_drops_bucket(spark):
     assert pairs.count() == 0
     report = dropped.collect()
     assert len(report) == 2 and all(r["width"] == 7 and r["level"] == 0 for r in report)
+
+
+def _report(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_over_cap_report_distributed_matches_local(spark, monkeypatch):
+    """With ``_PROBE_CAP`` at 0 every over-cap probe takes the
+    distributed branch (report kept as a relation, ANN member keys
+    semi-joined instead of broadcast). Each lane must give the same
+    pairs or buckets and the same dropped rows as the local branch."""
+    from rmlint_spark.operators.ann import hyperplane_bucket_ladder
+    from rmlint_spark.operators.lsh import candidate_pairs
+    from rmlint_spark.operators.simhash_op import simhash_candidates
+
+    lsh_sigs, sim_sigs = _lsh_sigs(spark), _sim_sigs(spark)
+    lsh_cfg = replace(LSH_CFG, lsh_escalate_levels=0)
+    sim_cfg = replace(SIM_CFG, simhash_escalate=False)
+
+    # planted hot vectors: 12 near-copies share every level-0 bucket
+    # (cap 4); escalation splits nothing, so they are dropped at level 1
+    rng = np.random.RandomState(5)
+    base = rng.standard_normal(8)
+    vecs = [base + 1e-6 * rng.standard_normal(8) for _ in range(12)]
+    vecs += [rng.standard_normal(8) for _ in range(20)]
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    ladder = dict(n_bands=4, bits_per_band=4, max_bucket=4, max_levels=1, seed=3)
+
+    def run():
+        pairs, lsh_dropped = candidate_pairs(lsh_sigs, lsh_cfg)
+        sim_pairs, sim_dropped = simhash_candidates(sim_sigs, sim_cfg)
+        buckets, ann_dropped = hyperplane_bucket_ladder(emb, **ladder)
+        return [
+            _report(df)
+            for df in (pairs, lsh_dropped, sim_pairs, sim_dropped, buckets, ann_dropped)
+        ]
+
+    local = run()
+    monkeypatch.setattr(lsh, "_PROBE_CAP", 0)
+    assert run() == local
+    # the fixtures do reach the over-cap branch in every lane
+    assert len(local[1]) == 2 and len(local[3]) == 2
+    assert local[5] and all(r[3] == 1 for r in local[5])

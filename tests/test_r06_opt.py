@@ -57,6 +57,18 @@ def test_ann_broadcast_over_cap_falls_back(spark):
     assert out.count() == 50 * 3
 
 
+def test_ann_ragged_vectors_rejected(spark):
+    """Vectors of lengths 4, 3, 5 flatten to 3 x 4 values; reshaping
+    them would hand vector 2 a value of vector 3. The broadcast path
+    must refuse them on the driver, before anything is broadcast."""
+    from rmlint_spark.operators.ann import brute_force_topk_blas
+
+    rows = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 9.0, 1.0, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="embedding"):
+        brute_force_topk_blas(emb, k=2)
+
+
 def test_cc_local_matches_loop(spark):
     from rmlint_spark.operators.connected_components import connected_components
 
