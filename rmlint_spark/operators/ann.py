@@ -301,6 +301,14 @@ def _blas_block_self_join(
     embeddings: DataFrame, k: int, id_col: str, vec_col: str, n_blocks: int | None
 ) -> DataFrame:
     spark = embeddings.sparkSession
+    # a tile stacks its vectors into one matrix: refuse ragged ones
+    # here with one bounded probe, not inside an executor
+    probe = embeddings.select(F.size(vec_col)).distinct().limit(2)
+    lengths = sorted(r[0] for r in probe.collect())
+    if len(lengths) > 1:
+        raise ValueError(
+            f"{vec_col}: vector lengths {lengths} are ragged; every vector must have the same length"
+        )
     # B^2 tiles feed one cogroup stage whose partition count is the
     # shuffle-partition setting (AQE may coalesce it further), so
     # B ~ sqrt(cores) gives barely one tile per slot and a ragged tail

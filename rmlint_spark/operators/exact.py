@@ -28,9 +28,10 @@ Scale notes (100 TB / 10^12 rows):
   alternative (dedup-then-project) compiles to a SortAggregate of
   ``first(content)`` — the whole corpus sorted and shuffled once per
   funnel stage — which serialized the funnel (flat 8→32-core scaling).
-- qualification results (surviving key sets) are orders of magnitude
-  smaller than the corpus; AQE turns the semi-joins back into
-  broadcasts at runtime.
+- qualification is one count window per generation, so no relation is
+  re-read or pinned for it; the survivor-key sets that drive content
+  re-scans are orders of magnitude smaller than the corpus, and AQE
+  turns those semi-joins into broadcasts at runtime.
 - each generation re-scans content for surviving keys only (parquet
   scans are embarrassingly parallel; at deployment scale the
   survivor semi-join prunes the re-read, and ``size`` would be an
@@ -272,13 +273,13 @@ def match_key_cols(cfg: EngineConfig) -> list[tuple[str, Column]]:
 
 def _qualify(df: DataFrame, keys: list[str]) -> DataFrame:
     """A4 group qualification: keep rows whose group has >= 2 members
-    (lib/shredder.c:798-809). Implemented as agg + semi-join so the
-    surviving-key relation (small) drives the join; AQE broadcasts it.
-    The input is pinned: it is read once for the count and once as the
-    join probe."""
-    df = _pin(df)
-    survivors = df.groupBy(*keys).count().filter(F.col("count") >= 2).drop("count")
-    return df.join(survivors, keys, "left_semi")
+    (lib/shredder.c:798-809). One count window over ``keys``: the input
+    is read once, so it needs no pin and no semi-join back to it."""
+    return (
+        df.withColumn("_n", F.count("*").over(W.partitionBy(*keys)))
+        .filter(F.col("_n") >= 2)
+        .drop("_n")
+    )
 
 
 def exact_clusters(files: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:

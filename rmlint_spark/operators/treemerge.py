@@ -21,16 +21,35 @@ for code repos); aggregation is a single hash shuffle on
 (repo, ancestor). ``sort_array(collect_list(...))`` bounds memory by
 directory width — giant directories are capped upstream by the skew
 guard discipline; the XOR key means the wide agg can also be done in
-two phases if a deployment needs it.
+two phases if a deployment needs it. Maximality is an equi-join on
+(repo, ancestor): each matched dir enumerates its proper ancestors and
+semi-joins them to the matched set, O(matched x depth), not a
+per-repo self-join quadratic in matched dirs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from rmlint_spark.config import DEFAULT, EngineConfig
+from rmlint_spark.operators.exact import _pin, _qualify
 from rmlint_spark.operators.rank import tag_originals
+
+
+def _proper_prefixes(df: DataFrame, path: str, *cols: str, root: bool) -> DataFrame:
+    """One row per PROPER prefix of the '/'-joined ``path``: ``cols``,
+    the split ``parts``, the prefix length ``i`` and the ``prefix``;
+    ``root`` includes '' (i = 0). The path '' has no proper prefix.
+    Rows too shallow for one are filtered first: sequence(1, 0) counts
+    DOWN, so it would list a depth-1 path as its own prefix."""
+    parts = F.split(path, "/")
+    depth = F.when(F.col(path) == "", 0).otherwise(F.size(parts))
+    lo = 0 if root else 1
+    return df.filter(depth > lo).select(
+        *cols, parts.alias("parts"), F.explode(F.sequence(F.lit(lo), depth - 1)).alias("i")
+    ).withColumn("prefix", F.concat_ws("/", F.slice("parts", F.lit(1), F.col("i"))))
 
 
 def file_digests(files: DataFrame) -> DataFrame:
@@ -60,18 +79,10 @@ def ancestor_rollup(
     salt_buckets > 0 switches to the two-phase salted aggregation
     (cfg.salt_buckets) — bounded per-task state for giant directories.
     """
-    parts = F.split("path", "/")
-    exploded = digests.select(
+    exploded = _proper_prefixes(digests, "path", "repo", "sha", root=True).select(
         "repo",
         "sha",
-        parts.alias("parts"),
-        F.explode(F.sequence(F.lit(0), F.size(parts) - 1)).alias("i"),
-    ).select(
-        "repo",
-        "sha",
-        F.when(F.col("i") == 0, F.lit("")).otherwise(
-            F.concat_ws("/", F.slice("parts", F.lit(1), F.col("i")))
-        ).alias("dir"),
+        F.col("prefix").alias("dir"),
         # path relative to the ancestor dir
         F.concat_ws(
             "/", F.slice("parts", F.col("i") + 1, F.size("parts") - F.col("i"))
@@ -145,52 +156,40 @@ def duplicate_dirs(
     ancestor (same repo) is also matched is pruned — otherwise every
     single-child chain matches itself level-by-level — and clusters
     are re-qualified (>= 2 members) after pruning.
+
+    The small ``matched`` set, which the pruning reads three times, is
+    pinned: as with ``exact._pin``, call this inside ``pin_scope`` and
+    materialize the result before leaving the scope.
     """
     rollup = ancestor_rollup(
         file_digests(files), layout_sensitive, cfg.salt_buckets if salted else 0
     )
-    groups = (
-        rollup.groupBy("n_files", "xor_sig", "set_sig")
-        .agg(F.count("*").alias("cluster_size"))
-        .filter(F.col("cluster_size") >= 2)
-    )
-    matched = rollup.join(groups, ["n_files", "xor_sig", "set_sig"]).drop("cluster_size")
+    matched = _pin(_qualify(rollup, ["n_files", "xor_sig", "set_sig"]))
 
-    # maximality pruning: drop rows with a matched ancestor in the same
-    # repo (the matched set is small — this non-equi self-join is cheap)
-    m = matched.select("repo", "dir")
-    p = m.select(F.col("repo").alias("p_repo"), F.col("dir").alias("p_dir"))
-    nested = (
-        m.join(
-            p,
-            (F.col("repo") == F.col("p_repo"))
-            & (F.col("dir") != F.col("p_dir"))
-            & (
-                (F.col("p_dir") == "")
-                | F.col("dir").startswith(F.concat(F.col("p_dir"), F.lit("/")))
-            ),
-        )
-        .select("repo", "dir")
-        .distinct()
+    # maximality pruning: a dir is nested when a proper ancestor (root
+    # included) is matched in its repo — an equi-join on (repo, ancestor)
+    ancestors = _proper_prefixes(matched, "dir", "repo", "dir", root=True).select(
+        "repo", "dir", F.col("prefix").alias("anc")
+    )
+    nested = ancestors.join(
+        matched.select("repo", F.col("dir").alias("anc")), ["repo", "anc"], "left_semi"
     )
     pruned = matched.join(nested, ["repo", "dir"], "left_anti")
 
-    groups2 = (
-        pruned.groupBy("set_sig")
-        .agg(F.count("*").alias("cluster_size"))
-        .filter(F.col("cluster_size") >= 2)
-    )
-    matched = pruned.join(groups2, "set_sig")
-    out = matched.withColumn("cluster_id", F.col("set_sig")).select(
+    out = pruned.select(
         "repo",
         F.col("dir").alias("path"),  # rank criteria operate on `path`
         F.lit("").alias("commit"),
         "n_files",
         "set_sig",
-        "cluster_id",
-        "cluster_size",
+        F.col("set_sig").alias("cluster_id"),
     )
-    ranked = tag_originals(out, cfg.rank_criteria)
+    # cluster_size rides the cluster_id window the rank already sorts by
+    ranked = (
+        tag_originals(out, cfg.rank_criteria)
+        .withColumn("cluster_size", F.count("*").over(W.partitionBy("cluster_id")))
+        .filter(F.col("cluster_size") >= 2)
+    )
     return ranked.select(
         "repo", F.col("path").alias("dir"), "n_files", "set_sig",
         "cluster_id", "cluster_size", "rank", "is_original",
@@ -200,18 +199,8 @@ def duplicate_dirs(
 def prefix_counts(files: DataFrame) -> DataFrame:
     """A8: plain file-count rollup per ancestor prefix
     (lib/treemerge.c:136-187)."""
-    parts = F.split("path", "/")
-    # guard: a depth-1 path has no proper prefix — without the filter,
-    # sequence(1, 0) yields the DESCENDING [1, 0], emitting a spurious
-    # '' prefix and counting the file itself
-    exploded = files.filter(F.size(parts) > 1).select(
-        "repo",
-        parts.alias("parts"),
-        F.explode(F.sequence(F.lit(1), F.size(parts) - 1)).alias("i"),
-    )
-    prefix = F.concat_ws("/", F.slice("parts", F.lit(1), F.col("i")))
     return (
-        exploded.select("repo", prefix.alias("prefix"))
+        _proper_prefixes(files, "path", "repo", root=False)
         .groupBy("repo", "prefix")
         .agg(F.count("*").alias("n_files"))
     )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -31,6 +32,7 @@ def main() -> None:
     from rmlint_spark.config import EngineConfig, SignatureConfig
     from rmlint_spark.operators.exact import exact_clusters
     from rmlint_spark.operators.lsh import band_buckets, with_signatures
+    from rmlint_spark.operators.treemerge import duplicate_dirs
     from rmlint_spark.session import get_spark
     from rmlint_spark.sources.tables import documents_as_files, load_table
 
@@ -50,6 +52,22 @@ def main() -> None:
     # 2. full funnel
     print("=" * 30, "exact funnel")
     print(grab_plan(exact_clusters(files, cfg)))
+
+    # 2b. directory rollup: the collect_list rollup is derived once (it
+    # feeds the pinned matched set) and maximality is an equi-join
+    plan = grab_plan(duplicate_dirs(files, cfg))
+    print("=" * 30, "duplicate dirs")
+    print(plan)
+    lines = plan.splitlines()
+    print(">>> rollup collect_list aggregates (want 1):", sum(
+        1 for ln in lines
+        if ln.startswith("Functions") and re.search(r"(?<!partial_)collect_list\(", ln)
+    ))
+    print(">>> non-equi or nested-loop joins (want 0):", sum(
+        1 for ln in lines
+        if (ln.startswith("Join condition:") and ln != "Join condition: None")
+        or "NestedLoopJoin" in ln or "CartesianProduct" in ln
+    ))
 
     # 3. filter pushdown check
     filtered = docs.filter(F.col("lang") == "en").select("doc_id", "n_chars")

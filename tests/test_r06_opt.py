@@ -69,6 +69,18 @@ def test_ann_ragged_vectors_rejected(spark):
         brute_force_topk_blas(emb, k=2)
 
 
+def test_ann_block_path_ragged_vectors_rejected(spark):
+    """The block self-join (a corpus over the broadcast budget) stacks
+    each tile's vectors into one matrix; ragged vectors must be refused
+    on the driver with the column named, not fail inside an executor."""
+    from rmlint_spark.operators.ann import brute_force_topk_blas
+
+    rows = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 9.0, 1.0, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="embedding"):
+        brute_force_topk_blas(emb, k=2, broadcast_bytes=1)
+
+
 def test_cc_local_matches_loop(spark):
     from rmlint_spark.operators.connected_components import connected_components
 
