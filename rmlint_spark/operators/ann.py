@@ -32,6 +32,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+# largest corpus matrix (float64 bytes) the BLAS self-join broadcasts
+BROADCAST_BYTES = 256 << 20
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -120,13 +123,13 @@ def brute_force_topk_blas(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_blocks: int | None = None,
-    broadcast_bytes: int | None = None,
+    broadcast_bytes: int = BROADCAST_BYTES,
 ) -> DataFrame:
     """Exact top-k via blocked numpy matmul (BLAS) — same results and
     tie-break as ``brute_force_topk``, ~10-50x faster.
 
     ``queries=None`` (self-join): when the corpus matrix fits under
-    ``broadcast_bytes`` (default env RMLINT_SPARK_ANN_BCAST_MB, 256 MB
+    ``broadcast_bytes`` (default ``BROADCAST_BYTES``, 256 MB
     — guide §3.1: a few hundred MB broadcast is fine, multi-GB is not)
     the whole corpus is broadcast once and ONE mapInPandas pass emits
     the finished per-query top-k: zero pair shuffle, zero window rank.
@@ -140,12 +143,6 @@ def brute_force_topk_blas(
         # a null vector has no cosine: it neither queries nor neighbors
         embeddings = embeddings.where(F.col(vec_col).isNotNull())
         if n_blocks is None:
-            import os
-
-            if broadcast_bytes is None:
-                broadcast_bytes = (
-                    int(os.environ.get("RMLINT_SPARK_ANN_BCAST_MB", "256")) << 20
-                )
             corpus = _self_corpus_if_small(
                 embeddings, id_col, vec_col, broadcast_bytes
             )

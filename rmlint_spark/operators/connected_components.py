@@ -35,6 +35,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# largest edge list the driver-side union-find collects
+LOCAL_EDGE_CAP = 200_000
+
 
 def _sym_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Symmetric (u, v) edge relation, eagerly checkpointed
@@ -141,7 +144,7 @@ def connected_components(
     checkpoint_every: int = 5,
     _kill_after: int | None = None,
     stats: dict | None = None,
-    local_edge_cap: int | None = None,
+    local_edge_cap: int = LOCAL_EDGE_CAP,
 ) -> DataFrame:
     """Return (fid, component) — component = min fid in the component.
 
@@ -164,8 +167,8 @@ def connected_components(
     default (no ``max_iter``/``jump_after``/``checkpoint_dir``/
     ``_kill_after`` override — tuning any of them opts into the
     iterative loop and its convergence contract) and the edge list
-    fits under ``local_edge_cap`` (env RMLINT_SPARK_CC_LOCAL_EDGES,
-    default 200k), components come from a driver-side union-find over
+    fits under ``local_edge_cap`` (default ``LOCAL_EDGE_CAP``, 200k;
+    0 forces the loop), components come from a driver-side union-find over
     one bounded Arrow collect — identical labels (min member id per
     component), a fraction of the loop's fixed job cost. See
     ``_local_components``.
@@ -195,10 +198,6 @@ def connected_components(
     # node would still collect labels from its neighbors)
     edges = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
     if not loop_tuned:
-        if local_edge_cap is None:
-            local_edge_cap = int(
-                os.environ.get("RMLINT_SPARK_CC_LOCAL_EDGES", "200000")
-            )
         if local_edge_cap > 0:
             local = _local_components(edges, src, dst, local_edge_cap)
             if local is not None:

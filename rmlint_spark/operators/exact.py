@@ -42,6 +42,7 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
 import pandas as pd
@@ -182,6 +183,12 @@ def clamp_filter(files: DataFrame, cfg: EngineConfig) -> DataFrame:
     return files.filter((F.length(cc) > 0) | (F.length("content") == 0))
 
 
+# DataFrames ``_pin`` persisted, one list per open ``pin_scope``
+# (innermost last); pipeline lanes pin from worker threads
+_SCOPES: list[list[DataFrame]] = []
+_SCOPES_LOCK = threading.Lock()
+
+
 def _pin(df: DataFrame) -> DataFrame:
     """Persist a NARROW relation that the plan references more than
     once. Without this, every reference re-derives the whole upstream
@@ -192,10 +199,17 @@ def _pin(df: DataFrame) -> DataFrame:
     deployment scale the same role is played by the durable stage
     checkpoints (sources/checkpoint.py). Pair with ``pin_scope`` to
     release everything a pipeline pinned once its results are
-    materialized."""
+    materialized. A plan that is already cached (by the caller, or by
+    an earlier pin) is returned as it is: its owner releases it."""
     from pyspark.storagelevel import StorageLevel
 
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    with _SCOPES_LOCK:
+        if _SCOPES:
+            _SCOPES[-1].append(df)
+    return df
 
 
 def persistent_rdd_ids(spark) -> set[int]:
@@ -216,16 +230,25 @@ def unpersist_rdd_ids(spark, ids) -> None:
 def pin_scope(spark):
     """Release every relation pinned inside the scope (persist or
     localCheckpoint) on exit — the unpersist discipline for pipeline
-    runs, snapshot-diff based so concurrently-held caches are never
-    touched.
+    runs. ``_pin``'s DataFrames leave the cache manager, newest first
+    (so no dependent entry is re-planned), and a snapshot-diff sweep
+    then drops the RDDs left in storage (localCheckpoints), so
+    concurrently-held caches are never touched.
 
     Contract: MATERIALIZE (collect/write/count) anything you need
     before leaving the scope; results still lazily derived from pinned
     intermediates would recompute from scratch afterwards."""
     before = persistent_rdd_ids(spark)
+    pinned: list[DataFrame] = []
+    with _SCOPES_LOCK:
+        _SCOPES.append(pinned)
     try:
         yield
     finally:
+        with _SCOPES_LOCK:
+            _SCOPES[:] = [s for s in _SCOPES if s is not pinned]
+        for df in reversed(pinned):
+            df.unpersist()
         unpersist_rdd_ids(spark, persistent_rdd_ids(spark) - before)
 
 

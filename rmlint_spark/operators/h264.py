@@ -28,15 +28,15 @@ runs, inter residuals, intra-in-P fallback, CAVLC mb_skip_run;
 operators/h264_cabac_p.py: the same semantics under arithmetic
 entropy — mb_skip_flag contexts, P mb_type binarization, UEG3 mvd),
 so IDR+P GOPs round-trip in all four encoder lanes, and the 16x8 /
-8x16 / P_8x8(P_L0_8x8) P partitions code for real in both entropy
-lanes (r5 s9, block-grid motion state + directional predictors), and
-explicit weighted prediction decodes for real under both entropy
-modes — the per-slice pred_weight_table (7.3.3.2 / 8.4.2.3.3) — with
-encoder support (least-squares fade weight fitting); P macroblocks
-split down to the full Table 7-17 sub-8x8 family (8x4/4x8/4x4) and
-predict from up to 16 active references (8.2.5.3 sliding-window DPB;
-encoder subset emits up to 4).  B slices raise ``ValueError`` (not
-in the implemented subset) and SP/SI slices ``NotImplementedError``.
+8x16 / P_8x8 P partitions code for real in both entropy lanes (r5 s9,
+block-grid motion state + directional predictors), down to the full
+Table 7-17 sub-8x8 family (8x4/4x8/4x4).  P slices predict from one
+reference picture.  Outside the implemented subset, with a
+``ValueError``: B slices, the clause-8.7 in-loop deblocking filter
+(any disable_deblocking_filter_idc other than 1, including the idc 0
+inferred for a PPS without deblocking control), P slices with more
+than one active reference and P slices under explicit weighted
+prediction.  SP/SI slices raise ``NotImplementedError``.
 
 Same codec-lane status as jpeg.py / flac.py / mpeg_audio.py:
 per-asset decode inside ``mapInPandas`` (multimodal.py), explicitly
@@ -143,19 +143,6 @@ def _unescape_rbsp(nal: bytes) -> bytes:
         out.append(b)
         zeros = zeros + 1 if b == 0 else 0
     return bytes(out)
-
-
-def _write_deblock(w: _BitWriter, idc: int = 1,
-                   a_off2: int = 0, b_off2: int = 0) -> None:
-    """Slice-header deblocking fields (7.3.3).  Every encoder signals
-    disable_deblocking_filter_idc EXPLICITLY (the PPS default carries
-    deblocking_filter_control_present = 1): idc 1 = filter off (the
-    historical behaviour, now stated in-stream instead of silently
-    non-conforming), idc 0 = the 8.7 in-loop filter applies."""
-    _write_ue(w, idc)
-    if idc != 1:
-        _write_se(w, a_off2)            # slice_alpha_c0_offset_div2
-        _write_se(w, b_off2)            # slice_beta_offset_div2
 
 
 def _trailing_bits(w: _BitWriter) -> None:
@@ -269,15 +256,10 @@ def _encode_sps(mb_w: int, mb_h: int, width: int, height: int,
     return w.bytes()
 
 
-def _encode_pps(entropy_coding: int = 0, weighted_pred: int = 0,
-                weighted_bipred_idc: int = 0,
-                deblocking_control: int = 1) -> bytes:
-    """``deblocking_control`` defaults to 1 since r5 s18: every slice
-    header then states disable_deblocking_filter_idc explicitly.  A
-    PPS without per-slice control makes the decoder INFER idc 0 —
-    filter ON (7.4.3) — so the pre-s18 layout (control 0, no filter
-    applied anywhere) was only self-consistent, not conforming; a
-    third-party decoder would deblock those streams and diverge."""
+def _encode_pps(entropy_coding: int = 0) -> bytes:
+    """deblocking_filter_control_present is 1, so every slice header
+    states disable_deblocking_filter_idc explicitly: without per-slice
+    control a decoder INFERS idc 0, the in-loop filter on (7.4.3)."""
     w = _BitWriter()
     _write_ue(w, 0)                     # pic_parameter_set_id
     _write_ue(w, 0)                     # seq_parameter_set_id
@@ -286,103 +268,16 @@ def _encode_pps(entropy_coding: int = 0, weighted_pred: int = 0,
     _write_ue(w, 0)                     # num_slice_groups_minus1
     _write_ue(w, 0)                     # num_ref_idx_l0_default_active_minus1
     _write_ue(w, 0)                     # num_ref_idx_l1_default_active_minus1
-    w.write(weighted_pred, 1)           # weighted_pred_flag
-    w.write(weighted_bipred_idc, 2)     # weighted_bipred_idc
+    w.write(0, 1)                       # weighted_pred_flag
+    w.write(0, 2)                       # weighted_bipred_idc
     _write_se(w, 0)                     # pic_init_qp_minus26
     _write_se(w, 0)                     # pic_init_qs_minus26
     _write_se(w, 0)                     # chroma_qp_index_offset
-    w.write(deblocking_control, 1)      # deblocking_filter_control_present
+    w.write(1, 1)                       # deblocking_filter_control_present
     w.write(0, 1)                       # constrained_intra_pred_flag
     w.write(0, 1)                       # redundant_pic_cnt_present
     _trailing_bits(w)
     return w.bytes()
-
-
-# ------------------------------------------- weighted prediction (WP)
-#
-# Explicit WP carries per-list (weight, offset) pairs in the slice
-# header (7.3.3.2 pred_weight_table).  The grammar below reads and
-# writes both lists; the decoder applies the L0 entries of P slices.
-#
-# wp dict shape:
-#   {"logwd_y", "logwd_c": log2 denominators,
-#    "l0"/"l1": (w_y, o_y, w_u, o_u, w_v, o_v)}
-
-
-def _check_wp_range(*vals: int) -> None:
-    for v in vals:
-        if not -128 <= v <= 127:
-            raise ValueError("H.264 pred_weight_table value out of "
-                             "the spec's se(v) range [-128, 127]")
-
-
-def _parse_pred_weight_table(r: "_BitReader", is_b: bool,
-                             n_l0: int = 1, n_l1: int = 1) -> dict:
-    """pred_weight_table() (7.3.3.2): one entry per ACTIVE reference
-    of each list (entry 0 in "l0"/"l1", higher refIdx entries in
-    "l0x"/"l1x", one per extra active reference)."""
-    logwd_y = _read_ue(r)
-    logwd_c = _read_ue(r)
-    if logwd_y > 7 or logwd_c > 7:
-        raise ValueError("H.264 luma/chroma_log2_weight_denom > 7")
-
-    def one_entry() -> tuple[int, int, int, int, int, int]:
-        if r.read(1):                   # luma_weight_lX_flag
-            w_y, o_y = _read_se(r), _read_se(r)
-            _check_wp_range(w_y, o_y)
-        else:
-            w_y, o_y = 1 << logwd_y, 0
-        if r.read(1):                   # chroma_weight_lX_flag
-            w_u, o_u = _read_se(r), _read_se(r)
-            w_v, o_v = _read_se(r), _read_se(r)
-            _check_wp_range(w_u, o_u, w_v, o_v)
-        else:
-            w_u, o_u, w_v, o_v = 1 << logwd_c, 0, 1 << logwd_c, 0
-        return w_y, o_y, w_u, o_u, w_v, o_v
-
-    wp = {"logwd_y": logwd_y, "logwd_c": logwd_c, "l0": one_entry()}
-    if n_l0 > 1:
-        wp["l0x"] = [one_entry() for _ in range(n_l0 - 1)]
-    if is_b:
-        wp["l1"] = one_entry()
-        if n_l1 > 1:
-            wp["l1x"] = [one_entry() for _ in range(n_l1 - 1)]
-    return wp
-
-
-def _write_pred_weight_table(w: "_BitWriter", wp: dict,
-                             is_b: bool, n_l0: int = 1,
-                             n_l1: int = 1) -> None:
-    """Write-side twin of :func:`_parse_pred_weight_table`; weight
-    flags are emitted only when an entry deviates from its defaults."""
-    logwd_y, logwd_c = wp["logwd_y"], wp["logwd_c"]
-    _write_ue(w, logwd_y)
-    _write_ue(w, logwd_c)
-
-    def one_entry(vals: tuple[int, int, int, int, int, int]) -> None:
-        w_y, o_y, w_u, o_u, w_v, o_v = vals
-        if (w_y, o_y) != (1 << logwd_y, 0):
-            w.write(1, 1)
-            _write_se(w, w_y)
-            _write_se(w, o_y)
-        else:
-            w.write(0, 1)
-        if (w_u, o_u, w_v, o_v) != (1 << logwd_c, 0, 1 << logwd_c, 0):
-            w.write(1, 1)
-            _write_se(w, w_u)
-            _write_se(w, o_u)
-            _write_se(w, w_v)
-            _write_se(w, o_v)
-        else:
-            w.write(0, 1)
-
-    one_entry(wp["l0"])
-    for extra in wp.get("l0x", [])[:n_l0 - 1]:
-        one_entry(extra)
-    if is_b:
-        one_entry(wp["l1"])
-        for extra in wp.get("l1x", [])[:n_l1 - 1]:
-            one_entry(extra)
 
 
 def _pad_to_mb(plane: np.ndarray, mb: int) -> np.ndarray:
@@ -422,7 +317,7 @@ def encode_h264_ipcm(frames: list[np.ndarray],
         bw.write(0, 1)                  # no_output_of_prior_pics_flag
         bw.write(0, 1)                  # long_term_reference_flag
         _write_se(bw, 0)                # slice_qp_delta
-        _write_deblock(bw)              # filter off (no-op at I_PCM qp 0)
+        _write_ue(bw, 1)                # disable_deblocking_filter_idc: off
         for my in range(mb_h):
             for mx in range(mb_w):
                 _write_ue(bw, _I_PCM_MB_TYPE)
@@ -520,9 +415,9 @@ def _parse_pps(rbsp: bytes) -> dict:
     if _read_ue(r):                     # num_slice_groups_minus1
         raise ValueError("FMO slice groups unsupported")
     pps["n_ref0_default"] = _read_ue(r) + 1
-    pps["n_ref1_default"] = _read_ue(r) + 1
+    _read_ue(r)                         # num_ref_idx_l1_default_active_minus1
     pps["weighted_pred"] = r.read(1)
-    pps["weighted_bipred_idc"] = r.read(2)
+    r.read(2)                           # weighted_bipred_idc
     pps["pic_init_qp"] = 26 + _read_se(r)
     _read_se(r), _read_se(r)            # qs / chroma offsets
     pps["deblocking_control"] = r.read(1)
@@ -627,36 +522,31 @@ class _H264Layout:
         return _yuv420_to_rgb(y, u, v)
 
     def _decode_planes(self, idx: int) -> tuple:
-        """Decode (in DECODE order) up to picture ``idx``, maintaining
-        the 8.2.5.3 sliding window of the last ``max_num_ref_frames``
-        REFERENCE pictures (floor 2): P builds its L0 list newest-first
-        from the window (8.2.4.2.1 descending PicNum)."""
+        """Decode (in DECODE order) up to picture ``idx``; a P picture
+        predicts from the latest REFERENCE picture before it."""
         cache = self._cache
         if idx in cache:
             return cache[idx]
         start = idx
         while start > 0 and self.kinds[start] != "I":
             start -= 1
-        window = max(2, self.sps.get("num_ref_frames", 2))
-        refs: list[int] = []
+        ref: int | None = None
         for i in range(start, idx + 1):
             if i not in cache:
-                cache[i] = self._decode_picture(i, refs)
+                cache[i] = self._decode_picture(i, ref)
             if self.is_ref[i]:
-                refs.append(i)
-                if len(refs) > window:
-                    refs.pop(0)
+                ref = i
             if len(cache) > 64:
-                keep = set(refs) | {i, idx}
+                keep = {ref, i, idx}
                 victims = sorted(k for k in cache if k not in keep)
                 for k in victims[: len(cache) - 64]:
                     cache.pop(k)
         return cache[idx]
 
-    def _decode_picture(self, idx: int, refs: list[int]) -> tuple:
-        """Decode one picture to uncropped (y, u, v) planes.  ``refs``
-        holds the decode indices of the sliding-window reference
-        pictures, oldest first, already decoded and cached."""
+    def _decode_picture(self, idx: int, ref: int | None) -> tuple:
+        """Decode one picture to uncropped (y, u, v) planes.  ``ref``
+        is the decode index of the reference picture, already decoded
+        and cached (None before the first one)."""
         sps, pps = self.sps, self.pps
         mb_w, mb_h = sps["mb_w"], sps["mb_h"]
         y = np.zeros((mb_h * 16, mb_w * 16), dtype=np.uint8)
@@ -670,42 +560,27 @@ class _H264Layout:
                 "H.264 B slice decode is not in the implemented subset "
                 "(I and P slices)")
         if kind == "P":
-            if not refs:
+            if ref is None:
                 raise ValueError(
                     "H.264 P picture without a decoded reference")
-            ref = self._cache[refs[-1]]
-            # L0 reference list, newest first (8.2.4.2.1 descending
-            # PicNum): the older cached references back refIdx 1.. in
-            # multi-ref slices
-            ref1 = self._cache[refs[-2]] if len(refs) >= 2 else None
-            more = [self._cache[r] for r in refs[-3::-1]]
             if pps["entropy_coding_mode"]:
                 from rmlint_spark.operators.h264_cabac_p import \
                     CabacInterPicture
 
                 cavlc_pic = CabacInterPicture(y, u, v, mb_w, mb_h,
-                                              ref, ref1, more=more)
+                                              self._cache[ref])
             else:
                 from rmlint_spark.operators.h264_inter import InterPicture
 
-                cavlc_pic = InterPicture(y, u, v, mb_w, mb_h, ref,
-                                         ref1, more=more)
-        slice_deblocks: list[tuple[int, int, int]] = []
+                cavlc_pic = InterPicture(y, u, v, mb_w, mb_h,
+                                         self._cache[ref])
         for nal_type, ref_idc, rbsp in self.pictures[idx]:
             r = _BitReader(rbsp)
-            (first_mb, qp_delta, slice_type, wp, n_ref0,
-             deblock) = self._parse_slice_header(
+            first_mb, qp_delta, slice_type = self._parse_slice_header(
                 r, nal_type, ref_idc, sps, pps)
-            slice_deblocks.append(deblock)
             slice_qp = pps["pic_init_qp"] + qp_delta
             if slice_type % 5 == 0:         # P slice (CAVLC or CABAC)
-                if n_ref0 > len(cavlc_pic.refs):
-                    raise ValueError(
-                        "H.264 slice activates more references than "
-                        "the decoder holds")
                 cavlc_pic.qp = slice_qp
-                cavlc_pic.wp = wp
-                cavlc_pic.n_ref0 = n_ref0
                 cavlc_pic.decode_slice_p(r, first_mb, covered)
                 continue
             if pps["entropy_coding_mode"]:
@@ -756,45 +631,17 @@ class _H264Layout:
                 else:
                     raise ValueError(
                         f"invalid I-slice mb_type {mb_type} (0..25)")
-                if cavlc_pic is not None:
-                    cavlc_pic.note_qp(addr)
                 covered[addr] = True
                 addr += 1
         if not covered.all():
             raise ValueError("H.264 picture has uncovered macroblocks")
-        # in-loop deblocking (8.7): runs after the whole picture
-        # decodes (intra prediction reads unfiltered neighbours, per
-        # 8.3.1's "prior to the deblocking filter process") and
-        # mutates y/u/v IN PLACE, so the DPB entry and the output
-        # frame are the filtered picture — exactly the decoder-loop
-        # placement real decoders use
-        if any(d[0] != 1 for d in slice_deblocks):
-            if len(set(slice_deblocks)) > 1:
-                raise ValueError(
-                    "per-slice deblocking parameters differ within "
-                    "one picture (not in the implemented subset)")
-            if slice_deblocks[0][0] == 2 and len(self.pictures[idx]) > 1:
-                raise ValueError(
-                    "disable_deblocking_filter_idc 2 over a "
-                    "multi-slice picture is not in the implemented "
-                    "subset (slice-boundary exclusion); it is "
-                    "equivalent to 0 for single-slice pictures")
-            from rmlint_spark.operators.h264_deblock import (
-                deblock_picture, extract_state)
-            _, a_off, b_off = slice_deblocks[0]
-            st = extract_state(cavlc_pic, mb_w, mb_h)
-            if st is not None:
-                deblock_picture(y, u, v, st, a_off, b_off)
         return y, u, v
 
     def _parse_slice_header(self, r: _BitReader, nal_type: int,
                             ref_idc: int, sps: dict, pps: dict
-                            ) -> tuple[int, int, int, dict | None, int,
-                                       tuple[int, int, int]]:
+                            ) -> tuple[int, int, int]:
         first_mb = _read_ue(r)
         slice_type = _read_ue(r)
-        wp: dict | None = None
-        n_ref0 = 1
         if slice_type % 5 not in (0, 1, 2):
             raise NotImplementedError(
                 "H.264 SP/SI slice decode not implemented "
@@ -823,12 +670,18 @@ class _H264Layout:
                 raise ValueError(
                     "H.264 num_ref_idx_lX_active out of the spec "
                     "range (7.4.3: at most 16 for frame coding)")
+            if n_ref0 > 1:
+                raise ValueError(
+                    f"H.264 multi-reference P ({n_ref0} active "
+                    "references) is not in the implemented subset "
+                    "(one reference)")
             if r.read(1):                   # ref_pic_list_modification_l0
                 raise ValueError(
                     "H.264 ref_pic_list_modification unsupported")
             if pps["weighted_pred"]:
-                wp = _parse_pred_weight_table(r, is_b=False,
-                                              n_l0=n_ref0)
+                raise ValueError(
+                    "H.264 explicit weighted prediction is not in the "
+                    "implemented subset (weighted_pred_flag 0)")
         # dec_ref_pic_marking is present only when the slice is a
         # reference (nal_ref_idc != 0)
         if ref_idc:
@@ -852,27 +705,26 @@ class _H264Layout:
                 raise ValueError("cabac_init_idc out of range")
         qp_delta = _read_se(r)              # slice_qp_delta
         # deblocking control (7.3.3): when the PPS carries no
-        # per-slice control, disable_deblocking_filter_idc is
-        # INFERRED to be 0 — the in-loop filter applies (8.7).  idc 2
-        # (filter on, but not across slice boundaries) is identical
-        # to 0 for single-slice pictures; _decode_picture refuses the
-        # multi-slice case it would actually change.
-        deblock = (0, 0, 0)                 # (idc, alphaOff, betaOff)
+        # per-slice control, disable_deblocking_filter_idc is INFERRED
+        # to be 0, the in-loop filter on (8.7)
+        idc = 0
         if pps["deblocking_control"]:
             idc = _read_ue(r)
             if idc > 2:
                 raise ValueError(
                     "disable_deblocking_filter_idc out of range")
-            a_off = b_off = 0
             if idc != 1:
-                a_off = _read_se(r) * 2     # slice_alpha_c0_offset_div2
-                b_off = _read_se(r) * 2     # slice_beta_offset_div2
-                if not (-12 <= a_off <= 12 and -12 <= b_off <= 12):
+                a_off = _read_se(r)         # slice_alpha_c0_offset_div2
+                b_off = _read_se(r)         # slice_beta_offset_div2
+                if not (-6 <= a_off <= 6 and -6 <= b_off <= 6):
                     raise ValueError(
                         "deblocking filter offsets out of range "
                         "(7.4.3: div2 values in [-6, 6])")
-            deblock = (idc, a_off, b_off)
-        return first_mb, qp_delta, slice_type, wp, n_ref0, deblock
+        if idc != 1:
+            raise ValueError(
+                f"H.264 in-loop deblocking (idc {idc}) is not in the "
+                "implemented subset (disable_deblocking_filter_idc 1)")
+        return first_mb, qp_delta, slice_type
 
 
 def parse_h264(payload: bytes) -> dict:
@@ -896,8 +748,8 @@ def decode_h264(payload: bytes) -> tuple[tuple[int, int], list[np.ndarray]]:
     I_PCM, Intra_4x4/Intra_16x16 and P-slice (P_Skip / P_L0_16x16 /
     intra-in-P) macroblocks decode under BOTH entropy modes; P
     macroblocks partition below 16x16 in both entropy lanes (the
-    full Table 7-17 family), and explicit weighted prediction
-    applies in both too.  B slices and malformed streams raise
+    full Table 7-17 family).  Streams outside the implemented subset
+    (see the module docstring) and malformed streams raise
     ``ValueError``; SP/SI slices raise ``NotImplementedError``.
     """
     lay = _H264Layout(payload)

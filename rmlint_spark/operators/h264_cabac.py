@@ -75,7 +75,6 @@ from rmlint_spark.operators.h264_cavlc import (
     _BLK_XY,
     _dc_hadamard_quant,
     _fdct4,
-    _nc_for,
     _pred4x4,
     _pred_mode_for,
     _quant4,
@@ -268,11 +267,6 @@ class CabacContexts:
         # P sub_mb_type (Table 9-38: '1' 8x8, '00' 8x4, '011' 4x8,
         # '010' 4x4): bin0/bin1/bin2 in slots 0-2 (spec ctx 21-23)
         self.p_sub = _zeros(3)
-        # ref_idx_l0 (spec ctxIdxOffset 54, unary): bin0 inc 0..3 in
-        # slots 0-3 (condTermA + 2*condTermB over neighbor refIdx>0),
-        # bin1 in slot 4, bins >= 2 in slot 5 (deviation #2's slot
-        # discipline), exactly the spec's three-increment ladder
-        self.ref_idx = _zeros(6)
 
 
 # ------------------------------------------------ residual block IO
@@ -717,7 +711,6 @@ class CabacPicture(CavlcPicture):
                 raise ValueError("H.264 CABAC slice overruns the picture")
             self.decode_mb_cabac(dec, addr)
             self.note_intra(addr)           # inter-state hook (no-op here)
-            self.note_qp(addr)
             covered[addr] = True
             addr += 1
             if dec.terminate():             # end_of_slice_flag
@@ -889,8 +882,7 @@ class CabacPicture(CavlcPicture):
 def encode_h264_cabac(frames: list[np.ndarray],
                       fps: tuple[int, int] = (25, 1),
                       qp: int = 20,
-                      mb_force: str | None = None,
-                      deblock: bool = False) -> bytes:
+                      mb_force: str | None = None) -> bytes:
     """(h, w, 3) uint8 RGB frames -> Annex-B H.264 with CABAC
     entropy (entropy_coding_mode_flag=1), every picture an IDR.
     ``mb_force``: None (per-MB smoothness decision, as the CAVLC
@@ -898,9 +890,7 @@ def encode_h264_cabac(frames: list[np.ndarray],
     terminate/flush/reinit lane). Self-consistent with
     :func:`rmlint_spark.operators.h264.decode_h264`; deviations 1-3
     in the module docstring keep it off bit-compatibility with
-    external decoders.  ``deblock`` signals idc 0 so the decoder runs
-    the 8.7 in-loop filter (all-IDR stream: no encoder-side recon
-    filtering needed, as encode_h264_cavlc)."""
+    external decoders."""
     from rmlint_spark.operators.h264 import (
         _START4,
         _encode_pps,
@@ -908,7 +898,6 @@ def encode_h264_cabac(frames: list[np.ndarray],
         _escape_rbsp,
         _pad_to_mb,
         _rgb_to_yuv420,
-        _write_deblock,
         _write_se,
         _write_ue,
     )
@@ -941,7 +930,7 @@ def encode_h264_cabac(frames: list[np.ndarray],
         bw.write(0, 1)                  # no_output_of_prior_pics_flag
         bw.write(0, 1)                  # long_term_reference_flag
         _write_se(bw, qp - 26)          # slice_qp_delta
-        _write_deblock(bw, 0 if deblock else 1)
+        _write_ue(bw, 1)                # disable_deblocking_filter_idc: off
         while bw.nbits % 8:             # cabac_alignment_one_bit
             bw.write(1, 1)
         enc = CabacEncoder(bw)

@@ -11,7 +11,7 @@ encode under arithmetic entropy too, composing the clause-9.3 engine
   inter/intra; '000' = P_L0_16x16; '011' / '010' = the 16x8 / 8x16
   partitions (REAL since r5 s9 — per-partition mvd with block-grid
   context increments, directional predictors, assembled prediction);
-  '001' (P_8x8) raises the documented sub-partition refusal; prefix
+  '001' = P_8x8 (four Table 9-38 sub_mb_type codes); prefix
   '1' hands the macroblock to the existing I-slice CABAC dispatcher
   (intra-in-P, including I_PCM through the pcm_flag
   terminate/flush/reinit lane);
@@ -34,10 +34,8 @@ neighbor-increment rules and the arithmetic engine follow clause 9.3;
 encoder and decoder share every context table, so the pair is
 self-consistent by construction.
 
-The refusal surface for video after this module: B and SP/SI slices
-(the full Table 7-17 / 9-38 sub-8x8 P family decodes since r5 s17,
-and P multi-ref is DPB-general — up to 16 active references — since
-r5 s17 too).
+The full Table 7-17 / 9-38 sub-8x8 P family decodes; P slices
+predict from one reference picture, so no ref_idx_l0 bins are coded.
 
 Codec-lane status: per-asset decode inside ``mapInPandas``
 (multimodal.py), NOT a Spark hot path — the same boundary as the
@@ -107,13 +105,9 @@ class CabacInterPicture(MotionMixin, CabacPicture):
     increments."""
 
     def __init__(self, y, u, v, mb_w: int, mb_h: int,
-                 ref: tuple[np.ndarray, np.ndarray, np.ndarray],
-                 ref1: tuple[np.ndarray, np.ndarray, np.ndarray] | None
-                 = None,
-                 more: list[tuple[np.ndarray, np.ndarray,
-                                  np.ndarray]] | None = None) -> None:
+                 ref: tuple[np.ndarray, np.ndarray, np.ndarray]) -> None:
         CabacPicture.__init__(self, y, u, v, mb_w, mb_h)
-        self._init_motion(ref, ref1, more)
+        self._init_motion(ref)
         # -1 undecoded, 0 coded, 1 skipped
         self.skipped = np.full((mb_h, mb_w), -1, dtype=np.int64)
         # |mvd| per 4x4 block and component (dx, dy) — partition
@@ -142,50 +136,6 @@ class CabacInterPicture(MotionMixin, CabacPicture):
         b = abs(int(self.mvd4[by - 1, bx, comp])) if by > 0 else 0
         s = a + b
         return 0 if s < 3 else (1 if s <= 32 else 2)
-
-    def _ref_inc(self, by: int, bx: int) -> int:
-        """ref_idx_l0 bin-0 ctxIdxInc (9.3.3.1.1.6): condTermFlagN is
-        1 when the neighbor partition is inter with refIdx > 0;
-        inc = condTermFlagA + 2 * condTermFlagB."""
-        def cond(ny: int, nx: int) -> int:
-            if ny < 0 or nx < 0:
-                return 0
-            return 1 if (int(self.dec4[ny, nx]) == 2
-                         and int(self.ref4[ny, nx]) > 0) else 0
-
-        return cond(by, bx - 1) + 2 * cond(by - 1, bx)
-
-    # ---- ref_idx_l0 (unary, ctx slots per CabacContexts.ref_idx) ----
-
-    def _dec_ref(self, dec: CabacDecoder, by: int, bx: int) -> int:
-        """Unary ref_idx_l0 (Table 9-34): bin 0's ctxIdxInc comes
-        from the neighbors (9.3.3.1.1.6), bin 1 uses inc 4, every
-        later bin inc 5 — plain unary, terminated by a 0 bin."""
-        if self.n_ref0 <= 1:
-            return 0
-        cx = self.cab.ref_idx
-        if not dec.decision(cx[self._ref_inc(by, bx)]):
-            return 0
-        v = 1
-        while dec.decision(cx[4 if v == 1 else 5]):
-            v += 1
-            if v >= self.n_ref0:
-                raise ValueError(
-                    "H.264 CABAC ref_idx_l0 beyond "
-                    "num_ref_idx_l0_active")
-        return v
-
-    def _enc_ref(self, enc: CabacEncoder, by: int, bx: int,
-                 ref: int) -> None:
-        if self.n_ref0 <= 1:
-            return
-        cx = self.cab.ref_idx
-        enc.decision(cx[self._ref_inc(by, bx)], 1 if ref > 0 else 0)
-        k = 1
-        while k <= ref:
-            enc.decision(cx[4 if k == 1 else 5],
-                         1 if ref > k else 0)
-            k += 1
 
     # ---- mvd UEG3 ----
 
@@ -353,48 +303,33 @@ class CabacInterPicture(MotionMixin, CabacPicture):
                     else:
                         subs.append(2 if dec.decision(cx.p_sub[2])
                                     else 3)
-            # per-partition ref_idx first (7.3.5.1 syntax order — one
-            # per 8x8 sub-macroblock for P_8x8, regardless of its
-            # sub-split); the second partition's context inc reads the
-            # grid BEFORE the first partition commits — encoder and
-            # decoder share this derivation, so the pair is
-            # self-consistent (same deviation class as the
-            # equiprobable context init)
-            if subs is not None:
-                refs8 = [self._dec_ref(dec, by, bx)
-                         for by, bx, _, _, _, _, _
-                         in _p_parts(t, my, mx)]
-                parts, refs = _sub_split_parts(subs, refs8, my, mx)
-            else:
-                parts = _p_parts(t, my, mx)
-                refs = [self._dec_ref(dec, by, bx)
-                        for by, bx, _, _, _, _, _ in parts]
+            parts = (_p_parts(t, my, mx) if subs is None
+                     else _sub_split_parts(subs, my, mx))
             mvs = []
-            for (by, bx, w4, h4, shape, _, _), ref in zip(parts, refs):
+            for by, bx, w4, h4, shape, _, _ in parts:
                 mvd_x = self._dec_mvd(dec, 0, by, bx)
                 mvd_y = self._dec_mvd(dec, 1, by, bx)
-                p = self._mv_pred_part(by, bx, w4, h4, shape, ref)
+                p = self._mv_pred_part(by, bx, w4, h4, shape)
                 pmv = (p[0] + mvd_y, p[1] + mvd_x)
-                self._commit_part(by, bx, w4, h4, pmv, ref)
+                self._commit_part(by, bx, w4, h4, pmv)
                 self._note_mvd(by, bx, w4, h4, (mvd_x, mvd_y))
                 mvs.append(pmv)
             pred_y, pred_u, pred_v = self._mc_pred_split(
-                my, mx, t, mvs, refs, parts=parts)
+                my, mx, t, mvs, parts=parts)
             self._read_inter_residual_cabac2(dec, addr, pred_y,
                                              pred_u, pred_v)
             self._note_inter(addr, None, 0)
             self._finish_inter_mb(addr)
             return
-        ref = self._dec_ref(dec, my * 4, mx * 4)
         mvd_x = self._dec_mvd(dec, 0, my * 4, mx * 4)
         mvd_y = self._dec_mvd(dec, 1, my * 4, mx * 4)
-        mvp = self._mv_pred(my, mx, ref)
+        mvp = self._mv_pred(my, mx)
         mv = (mvp[0] + mvd_y, mvp[1] + mvd_x)
-        pred_y, pred_u, pred_v = self._mc_pred(my, mx, mv, ref)
+        pred_y, pred_u, pred_v = self._mc_pred(my, mx, mv)
         self._read_inter_residual_cabac2(dec, addr, pred_y, pred_u,
                                          pred_v)
         self._note_inter(addr, (mvd_x, mvd_y), 0)
-        self._commit_inter(addr, mv, ref)
+        self._commit_inter(addr, mv)
 
     def decode_slice_p(self, r: _BitReader, first_mb: int,
                        covered: np.ndarray) -> None:
@@ -417,7 +352,6 @@ class CabacInterPicture(MotionMixin, CabacPicture):
                 self._note_skip(addr)
             else:
                 self._decode_p_mb(dec, addr)
-            self.note_qp(addr)
             covered[addr] = True
             addr += 1
             if dec.terminate():              # end_of_slice_flag
@@ -434,16 +368,6 @@ class CabacInterPicture(MotionMixin, CabacPicture):
         py, px = my * 16, mx * 16
         src = y_src[py:py + 16, px:px + 16].astype(np.int64)
         mv, inter_cost = self._motion_search(src, my, mx, search)
-        ref = 0
-        # every older active reference competes (same bias schedule
-        # as the CAVLC lane so mode decisions stay entropy-invariant)
-        for ridx in range(1, min(self.n_ref0, len(self.refs))):
-            mv1, cost1 = self._motion_search(
-                src, my, mx, search, ref_y=self._search_ref_y(ridx),
-                mvp=self._mv_pred(my, mx, ridx))
-            if cost1 + 16 + 8 * (ridx - 1) < inter_cost:
-                ref, mv = ridx, mv1
-                inter_cost = cost1 + 16 + 8 * (ridx - 1)
         split_best = None
         if partitions:
             from rmlint_spark.operators.h264_inter import (
@@ -487,11 +411,6 @@ class CabacInterPicture(MotionMixin, CabacPicture):
                 enc.decision(cx.p_pre[3],
                              1 if t == _P_L0_L0_16x8 else 0)
             parts = sparts if t == _P_8x8 else _p_parts(t, my, mx)
-            # partitions search ref 0; with 2 active refs the ref_idx
-            # bins are still coded (no P_8x8ref0 under CABAC) — one
-            # per 8x8 sub-macroblock for P_8x8 (7.3.5.2)
-            for by, bx, _, _, _, _, _ in _p_parts(t, my, mx):
-                self._enc_ref(enc, by, bx, 0)
             for (by, bx, w4, h4, _, _, _), pmv, pmvp in zip(
                     parts, mvs, mvps):
                 mvd = (pmv[1] - pmvp[1], pmv[0] - pmvp[0])
@@ -527,9 +446,8 @@ class CabacInterPicture(MotionMixin, CabacPicture):
             self.note_intra(addr)
             return
         (pred_y, pred_u, pred_v, luma_q, dc_q, ac_q,
-         cbp) = self._quantize_inter(addr, mv, y_src, u_src, v_src,
-                                     ref=ref)
-        if cbp == 0 and ref == 0 and mv == self._skip_mv(my, mx):
+         cbp) = self._quantize_inter(addr, mv, y_src, u_src, v_src)
+        if cbp == 0 and mv == self._skip_mv(my, mx):
             enc.decision(cx.mb_skip[self._skip_inc(my, mx)], 1)
             self._decode_skip(addr)          # recon == decoder's skip
             self._note_skip(addr)
@@ -538,8 +456,7 @@ class CabacInterPicture(MotionMixin, CabacPicture):
         enc.decision(cx.p_pre[0], 0)
         enc.decision(cx.p_pre[1], 0)
         enc.decision(cx.p_pre[2], 0)         # '000' = P_L0_16x16
-        self._enc_ref(enc, my * 4, mx * 4, ref)
-        mvp = self._mv_pred(my, mx, ref)
+        mvp = self._mv_pred(my, mx)
         mvd = (mv[1] - mvp[1], mv[0] - mvp[0])
         self._enc_mvd(enc, 0, my * 4, mx * 4, mvd[0])
         self._enc_mvd(enc, 1, my * 4, mx * 4, mvd[1])
@@ -547,7 +464,7 @@ class CabacInterPicture(MotionMixin, CabacPicture):
                                           pred_v, luma_q, dc_q, ac_q,
                                           cbp)
         self._note_inter(addr, mvd, cbp)
-        self._commit_inter(addr, mv, ref)
+        self._commit_inter(addr, mv)
 
     def _write_inter_residual_cabac2(self, enc: CabacEncoder,
                                      addr: int, pred_y, pred_u,
@@ -581,16 +498,12 @@ def encode_h264_cabac_p(frames: list[np.ndarray],
                         qp: int = 20,
                         gop: int = 8,
                         search: int = 4,
-                        partitions: bool = False,
-                        wp: bool = False,
-                        refs: int = 1) -> bytes:
+                        partitions: bool = False) -> bytes:
     """(h, w, 3) uint8 RGB frames -> Annex-B H.264 with IDR+P GOPs
-    under CABAC entropy.  Lossy at ``qp``; self-consistent with
+    under CABAC entropy, each P picture predicting from the one before
+    it.  Lossy at ``qp``; self-consistent with
     :func:`rmlint_spark.operators.h264.decode_h264` (the CABAC
-    deviations of h264_cabac.py apply).  ``wp`` mirrors
-    :func:`rmlint_spark.operators.h264_inter.encode_h264_p`: explicit
-    per-slice least-squares pred_weight_tables (the header stays
-    Exp-Golomb under CABAC — only slice *data* is arithmetic-coded)."""
+    deviations of h264_cabac.py apply)."""
     from rmlint_spark.operators.h264 import (
         _START4,
         _encode_pps,
@@ -598,50 +511,34 @@ def encode_h264_cabac_p(frames: list[np.ndarray],
         _escape_rbsp,
         _pad_to_mb,
         _rgb_to_yuv420,
-        _write_pred_weight_table,
-        _write_deblock,
         _write_se,
         _write_ue,
     )
-    from rmlint_spark.operators.h264_inter import _estimate_wp
     if not frames:
         raise ValueError("need at least one frame")
     if not 0 <= qp <= 29:
         raise ValueError("qp outside the implemented 0..29 subset")
     if gop < 1:
         raise ValueError("gop must be >= 1")
-    if not 1 <= refs <= 4:
-        raise ValueError("refs must be 1..4 (the implemented subset)")
     h, w_px = np.asarray(frames[0]).shape[:2]
     mb_w, mb_h = -(-w_px // 16), -(-h // 16)
     out = bytearray()
     out += _START4 + b"\x67" + _escape_rbsp(
-        _encode_sps(mb_w, mb_h, w_px, h, fps, num_ref_frames=refs))
-    out += _START4 + b"\x68" + _escape_rbsp(
-        _encode_pps(entropy_coding=1, weighted_pred=1 if wp else 0))
-    prev: list[tuple] = []                  # recon refs, newest first
+        _encode_sps(mb_w, mb_h, w_px, h, fps, num_ref_frames=1))
+    out += _START4 + b"\x68" + _escape_rbsp(_encode_pps(entropy_coding=1))
+    prev: tuple | None = None               # reconstructed reference
     for i, fr in enumerate(frames):
         fr = np.asarray(fr, dtype=np.uint8)
         if fr.shape[:2] != (h, w_px):
             raise ValueError("all frames must share dimensions")
         y, u, v = _rgb_to_yuv420(fr)
         y, u, v = _pad_to_mb(y, 16), _pad_to_mb(u, 8), _pad_to_mb(v, 8)
-        is_idr = (i % gop == 0) or not prev
-        n_ref0 = min(refs, len(prev)) if not is_idr else 0
+        is_idr = i % gop == 0 or prev is None
         pic = CabacInterPicture(
             np.zeros_like(y), np.zeros_like(u), np.zeros_like(v),
             mb_w, mb_h,
-            prev[0] if prev else (np.zeros_like(y), np.zeros_like(u),
-                                  np.zeros_like(v)),
-            prev[1] if len(prev) > 1 else None,
-            more=prev[2:])
+            prev or (np.zeros_like(y), np.zeros_like(u), np.zeros_like(v)))
         pic.qp = qp
-        pic.n_ref0 = max(n_ref0, 1)
-        if wp and not is_idr:
-            pic.wp = _estimate_wp((y, u, v), prev[0])
-            if n_ref0 > 1:
-                pic.wp["l0x"] = [_estimate_wp((y, u, v), pr)["l0"]
-                                 for pr in prev[1:n_ref0]]
         bw = _BitWriter()
         _write_ue(bw, 0)                    # first_mb_in_slice
         _write_ue(bw, 7 if is_idr else 5)   # slice_type: I / P (all)
@@ -652,19 +549,12 @@ def encode_h264_cabac_p(frames: list[np.ndarray],
             bw.write(0, 1)                  # no_output_of_prior_pics
             bw.write(0, 1)                  # long_term_reference_flag
         else:
-            if n_ref0 > 1:                  # num_ref_idx_active_override
-                bw.write(1, 1)
-                _write_ue(bw, n_ref0 - 1)
-            else:
-                bw.write(0, 1)
+            bw.write(0, 1)                  # num_ref_idx_active_override
             bw.write(0, 1)                  # ref_pic_list_modification_l0
-            if wp:                          # pred_weight_table (7.3.3)
-                _write_pred_weight_table(bw, pic.wp, is_b=False,
-                                         n_l0=max(n_ref0, 1))
             bw.write(0, 1)                  # adaptive_ref_pic_marking
             _write_ue(bw, 0)                # cabac_init_idc
         _write_se(bw, qp - 26)              # slice_qp_delta
-        _write_deblock(bw)                  # explicit idc 1: filter off
+        _write_ue(bw, 1)                    # disable_deblocking_filter_idc: off
         while bw.nbits % 8:                 # cabac_alignment_one_bit
             bw.write(1, 1)
         enc = CabacEncoder(bw)
@@ -680,10 +570,7 @@ def encode_h264_cabac_p(frames: list[np.ndarray],
         bw.pad_to_byte()
         out += _START4 + (b"\x65" if is_idr else b"\x41") + \
             _escape_rbsp(bw.bytes())
-        if is_idr:
-            prev = []                       # IDR flushes the DPB
-        prev.insert(0, (pic.y, pic.u, pic.v))
-        del prev[refs:]
+        prev = (pic.y, pic.u, pic.v)
     return bytes(out)
 
 

@@ -492,12 +492,6 @@ class CavlcPicture:
         self.nc_v = np.full((mb_h * 2, mb_w * 2), -1, dtype=np.int64)
         self.modes = np.full((mb_h * 4, mb_w * 4), -1, dtype=np.int64)
         self.qp = 26
-        # per-MB decoded QP_Y (8.7 deblocking reads it; skips keep the
-        # running value) and the I_PCM mask (8.7.2: qP of an I_PCM
-        # macroblock is 0 — and nc 16 is a legal TotalCoeff, so the
-        # nC grid cannot double as this mask)
-        self.qpg = np.full((mb_h, mb_w), -1, dtype=np.int64)
-        self.ipcm = np.zeros((mb_h, mb_w), dtype=bool)
         # P slices renumber intra mb_types by +5 (Table 7-13); the
         # encode paths add this so InterPicture can reuse them as the
         # intra-in-P fallback.
@@ -507,13 +501,6 @@ class CavlcPicture:
         """Inter-state hook: a no-op here; InterPicture records the
         macroblock as intra for MV-prediction availability."""
 
-    def note_qp(self, addr: int) -> None:
-        """Record the QP_Y this macroblock decoded with (the running
-        QP after its mb_qp_delta, or unchanged for skips) — the
-        deblocking filter's qPp/qPq input."""
-        my, mx = divmod(addr, self.mb_w)
-        self.qpg[my, mx] = self.qp
-
     def mark_ipcm(self, addr: int) -> None:
         """I_PCM macroblocks contribute nC = 16 and pred mode DC."""
         my, mx = divmod(addr, self.mb_w)
@@ -521,7 +508,6 @@ class CavlcPicture:
         self.nc_u[my * 2:(my + 1) * 2, mx * 2:(mx + 1) * 2] = _I_PCM_NC
         self.nc_v[my * 2:(my + 1) * 2, mx * 2:(mx + 1) * 2] = _I_PCM_NC
         self.modes[my * 4:(my + 1) * 4, mx * 4:(mx + 1) * 4] = 2
-        self.ipcm[my, mx] = True
 
     # ---- decode side ----
 
@@ -889,25 +875,14 @@ class CavlcPicture:
 def encode_h264_cavlc(frames: list[np.ndarray],
                       fps: tuple[int, int] = (25, 1),
                       qp: int = 20,
-                      mb_force: str | None = None,
-                      deblock: bool | str = False) -> bytes:
+                      mb_force: str | None = None) -> bytes:
     """(h, w, 3) uint8 RGB frames -> Annex-B H.264 with CAVLC
     residuals, every picture an IDR.  Each macroblock codes Intra_4x4
     or Intra_16x16 by a smoothness decision (``mb_force`` pins one).
     Lossy (DCT quantization at ``qp``), self-consistent with
     :func:`rmlint_spark.operators.h264.decode_h264` (deviations 1-4
     in the module docstring keep it off bit-compatibility with
-    external decoders; the I_PCM lane remains the conforming one).
-
-    ``deblock``: False signals disable_deblocking_filter_idc 1 in
-    every slice header (filter off — the explicit form of the
-    historical behaviour); True signals idc 0 and the decoder runs
-    the 8.7 in-loop filter on its output (all-IDR stream: no picture
-    predicts from another, so the encoder needs no in-loop recon
-    filtering — unlike the P lanes).  The string ``"legacy"`` emits
-    the pre-s18 layout (PPS deblocking_filter_control_present 0, no
-    idc field) whose INFERRED idc is 0 — the decoder must filter;
-    exists so tests can pin the 7.4.3 inference rule."""
+    external decoders; the I_PCM lane remains the conforming one)."""
     from rmlint_spark.operators.h264 import (
         _START4,
         _encode_pps,
@@ -926,11 +901,9 @@ def encode_h264_cavlc(frames: list[np.ndarray],
                          "(chroma QP remap above 29, deviation #3)")
     h, w = np.asarray(frames[0]).shape[:2]
     mb_w, mb_h = -(-w // 16), -(-h // 16)
-    from rmlint_spark.operators.h264 import _write_deblock
     out = bytearray()
     out += _START4 + b"\x67" + _escape_rbsp(_encode_sps(mb_w, mb_h, w, h, fps))
-    out += _START4 + b"\x68" + _escape_rbsp(_encode_pps(
-        deblocking_control=0 if deblock == "legacy" else 1))
+    out += _START4 + b"\x68" + _escape_rbsp(_encode_pps())
     for i, fr in enumerate(frames):
         fr = np.asarray(fr, dtype=np.uint8)
         if fr.shape[:2] != (h, w):
@@ -949,8 +922,7 @@ def encode_h264_cavlc(frames: list[np.ndarray],
         bw.write(0, 1)                  # no_output_of_prior_pics_flag
         bw.write(0, 1)                  # long_term_reference_flag
         _write_se(bw, qp - 26)          # slice_qp_delta
-        if deblock != "legacy":
-            _write_deblock(bw, 0 if deblock else 1)
+        _write_ue(bw, 1)                # disable_deblocking_filter_idc: off
         for addr in range(mb_w * mb_h):
             pic.encode_mb(bw, addr, y, u, v, force=mb_force)
         _trailing_bits(bw)

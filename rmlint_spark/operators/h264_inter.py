@@ -47,11 +47,9 @@ each (sub-)partition predicts from the previously committed ones,
 and the encoder lets all splits compete with the whole-MB mode by
 SAD + mvd-bits cost (opt-in ``partitions=`` flag; per-8x8-block
 greedy sub_mb_type competition in :meth:`_search_sub_split`).
-Refusal surface after this module: SP/SI slices (multi-reference
-P prediction landed in r5 s13 and became DPB-general — te(v)/ue(v)
-ref_idx, up to 16 active references, encoder subset 4 — in r5
-s17).  CABAC-coded P slices decode too, via
-h264_cabac_p.py composing this module's MotionMixin with the
+P slices predict from one reference picture (num_ref_idx_l0_active
+1, so no ref_idx syntax is coded).  CABAC-coded P slices decode too,
+via h264_cabac_p.py composing this module's MotionMixin with the
 arithmetic engine.
 
 Codec-lane status: per-asset decode inside ``mapInPandas``
@@ -75,7 +73,6 @@ from rmlint_spark.operators.h264_cavlc import (
     _BLK_XY,
     _CBP_FROM_CODE,
     _CBP_TO_CODE,
-    _I_PCM_NC,
     CavlcPicture,
     _fdct4,
     _nc_for,
@@ -94,7 +91,7 @@ _P_L0_16x16 = 0
 _P_L0_L0_16x8 = 1
 _P_L0_L0_8x16 = 2
 _P_8x8 = 3
-_P_8x8REF0 = 4          # identical with one reference (7.4.5)
+_P_8x8REF0 = 4          # identical to P_8x8 with one reference (7.4.5)
 _P_SUB_L0_8x8 = 0       # sub_mb_type (Table 7-17); 0..3 all decode
 _P_INTRA_OFFSET = 5
 
@@ -168,18 +165,10 @@ def _sub_parts(i: int, sub_type: int, my: int, mx: int):
     ]
 
 
-def _sub_split_parts(subs: list[int], refs8: list[int],
-                     my: int, mx: int):
-    """Flattened (parts, per-part refs) for a P_8x8 macroblock whose
-    four 8x8 sub-macroblocks carry ``subs`` sub_mb_types; ref_idx is
-    per 8x8 sub-macroblock (7.3.5.2), so each sub-partition inherits
-    its block's entry."""
-    parts, refs = [], []
-    for i, s in enumerate(subs):
-        ps = _sub_parts(i, s, my, mx)
-        parts.extend(ps)
-        refs.extend([refs8[i]] * len(ps))
-    return parts, refs
+def _sub_split_parts(subs: list[int], my: int, mx: int):
+    """Flattened sub-partitions of a P_8x8 macroblock whose four 8x8
+    sub-macroblocks carry ``subs`` sub_mb_types."""
+    return [p for i, s in enumerate(subs) for p in _sub_parts(i, s, my, mx)]
 
 
 # motion vectors are bounded so a crafted stream cannot demand an
@@ -273,22 +262,9 @@ class MotionMixin:
     mix this in over their entropy-layer picture class."""
 
     def _init_motion(
-            self,
-            ref: tuple[np.ndarray, np.ndarray, np.ndarray],
-            ref1: tuple[np.ndarray, np.ndarray, np.ndarray] | None
-            = None,
-            more: list[tuple[np.ndarray, np.ndarray, np.ndarray]]
-            | None = None) -> None:
-        # L0 reference list, most recent first (8.2.4.2.1 descending
-        # PicNum): refs[0] is the immediate reference, refs[1] the one
-        # before it, ``more`` the still-older DPB entries backing
-        # refIdx 2.. (r5 s17 lifts the former 2-reference cap)
-        self.refs = [ref] + ([ref1] if ref1 is not None else []) \
-            + list(more or [])
+            self, ref: tuple[np.ndarray, np.ndarray, np.ndarray]) -> None:
+        # the one reference picture (refIdx 0)
         self.ref_y, self.ref_u, self.ref_v = ref
-        # active references for the CURRENT slice (header-set; skip
-        # and single-ref streams keep 1)
-        self.n_ref0 = 1
         mb_h, mb_w = self.mb_h, self.mb_w
         # motion state lives at the spec's 4x4-block granularity since
         # the 16x8/8x16 partition lanes (r5 s9): mv4 holds (mvy, mvx)
@@ -296,14 +272,8 @@ class MotionMixin:
         # 2 = inter; mb_state keeps the per-MB view
         self.mv4 = np.zeros((mb_h * 4, mb_w * 4, 2), dtype=np.int64)
         self.dec4 = np.zeros((mb_h * 4, mb_w * 4), dtype=np.int64)
-        # per-4x4-block L0 reference index (multi-ref MV prediction
-        # and the CABAC ref_idx contexts read neighbors from it)
-        self.ref4 = np.zeros((mb_h * 4, mb_w * 4), dtype=np.int64)
         self.mb_state = np.zeros((mb_h, mb_w), dtype=np.int64)
         self._mc_chroma: dict[str, np.ndarray] | None = None
-        # weighted prediction (8.4.2.3.3): set per slice from the
-        # header's pred_weight_table; None = default prediction
-        self.wp: dict | None = None
 
     # CavlcPicture hook: while an inter MB is being coded, chroma
     # prediction is the motion-compensated block, not intra DC
@@ -318,33 +288,30 @@ class MotionMixin:
         self.mb_state[my, mx] = 1
         self.dec4[my * 4:(my + 1) * 4, mx * 4:(mx + 1) * 4] = 1
         self.mv4[my * 4:(my + 1) * 4, mx * 4:(mx + 1) * 4] = 0
-        self.ref4[my * 4:(my + 1) * 4, mx * 4:(mx + 1) * 4] = 0
 
     # ---- motion-vector prediction (8.4.1.3) ----
 
     def _nb4(self, by: int, bx: int):
-        """(available, is_inter, mv, ref) of 4x4 block (by, bx)."""
+        """(available, is_inter, mv) of 4x4 block (by, bx)."""
         if not (0 <= by < self.mb_h * 4 and 0 <= bx < self.mb_w * 4):
-            return False, False, (0, 0), 0
+            return False, False, (0, 0)
         st = int(self.dec4[by, bx])
         if st == 0:
-            return False, False, (0, 0), 0
+            return False, False, (0, 0)
         return True, st == 2, (int(self.mv4[by, bx, 0]),
-                               int(self.mv4[by, bx, 1])), \
-            int(self.ref4[by, bx])
+                               int(self.mv4[by, bx, 1]))
 
     def _mv_pred_part(self, by: int, bx: int, w4: int, h4: int,
-                      shape: str | None = None,
-                      ref: int = 0) -> tuple[int, int]:
+                      shape: str | None = None) -> tuple[int, int]:
         """Median MV predictor (8.4.1.3) for the partition whose
-        top-left 4x4 block is (by, bx) spanning w4 x h4 blocks,
-        predicting from reference ``ref``.  ``shape`` selects the
-        8.4.1.3.2 directional shortcuts: '16x8_top' -> B,
-        '16x8_bottom' -> A, '8x16_left' -> A, '8x16_right' -> C —
-        applied when that neighbor predicts from the SAME reference,
-        else the median rule runs.  Per 8.4.1.3.1 the exactly-one-
-        match shortcut is keyed by refIdx equality, while the median
-        uses every inter neighbor's motion regardless of refIdx."""
+        top-left 4x4 block is (by, bx) spanning w4 x h4 blocks.
+        ``shape`` selects the 8.4.1.3.2 directional shortcuts:
+        '16x8_top' -> B, '16x8_bottom' -> A, '8x16_left' -> A,
+        '8x16_right' -> C — applied when that neighbor predicts from
+        the same reference, else the median rule runs.  With one
+        reference, "same refIdx" means "inter": intra and unavailable
+        neighbors carry refIdx -1, so the exactly-one-match shortcut
+        of 8.4.1.3.1 still fires when one neighbor is inter."""
         a = self._nb4(by, bx - 1)
         b = self._nb4(by - 1, bx)
         c = self._nb4(by - 1, bx + w4)
@@ -352,114 +319,49 @@ class MotionMixin:
             c = self._nb4(by - 1, bx - 1)            # D fallback
         directional = {"16x8_top": b, "16x8_bottom": a,
                        "8x16_left": a, "8x16_right": c}.get(shape)
-        if (directional is not None and directional[0]
-                and directional[1] and directional[3] == ref):
+        if directional is not None and directional[1]:
             return directional[2]
         if a[0] and not b[0] and not c[0]:
             return a[2]                              # 8.4.1.3.1 rule 1
-        matches = [n for n in (a, b, c)
-                   if n[0] and n[1] and n[3] == ref]
+        matches = [n for n in (a, b, c) if n[1]]
         if len(matches) == 1:
             return matches[0][2]
         mvy = sorted(n[2][0] if n[1] else 0 for n in (a, b, c))[1]
         mvx = sorted(n[2][1] if n[1] else 0 for n in (a, b, c))[1]
         return mvy, mvx
 
-    def _mv_pred(self, my: int, mx: int, ref: int = 0) -> tuple[int, int]:
-        return self._mv_pred_part(my * 4, mx * 4, 4, 4, ref=ref)
+    def _mv_pred(self, my: int, mx: int) -> tuple[int, int]:
+        return self._mv_pred_part(my * 4, mx * 4, 4, 4)
 
     def _skip_mv(self, my: int, mx: int) -> tuple[int, int]:
         """P_Skip motion (8.4.1.1): zero when a slice/picture boundary
-        or a stationary REF-0 neighbor says so, else the median
-        predictor for reference 0."""
+        or a stationary inter neighbor says so, else the median
+        predictor."""
         a = self._nb4(my * 4, mx * 4 - 1)
         b = self._nb4(my * 4 - 1, mx * 4)
         if not a[0] or not b[0]:
             return 0, 0
-        if ((a[1] and a[3] == 0 and a[2] == (0, 0))
-                or (b[1] and b[3] == 0 and b[2] == (0, 0))):
+        if (a[1] and a[2] == (0, 0)) or (b[1] and b[2] == (0, 0)):
             return 0, 0
         return self._mv_pred(my, mx)
 
-    # ---- weighted-prediction application (8.4.2.3.3) ----
-
-    @staticmethod
-    def _wp_plane(pred: np.ndarray, w: int, o: int,
-                  logwd: int) -> np.ndarray:
-        """Explicit mono weighting of one plane, clipped to Clip1."""
-        if logwd >= 1:
-            out = ((pred * w + (1 << (logwd - 1))) >> logwd) + o
-        else:
-            out = pred * w + o
-        return np.clip(out, 0, 255)
-
-    def _wp_entry(self, lst: str, ref: int) -> tuple:
-        """Explicit-WP weights for reference ``ref`` of list ``lst``:
-        entry 0 lives in wp[lst], entries for higher refIdx in
-        wp[lst + 'x'] (pred_weight_table carries one per active
-        reference)."""
-        wp = self.wp
-        if ref == 0:
-            return wp[lst]
-        extras = wp.get(lst + "x", [])
-        if ref - 1 >= len(extras):
-            raise ValueError(
-                "H.264 weighted prediction table has no entry for "
-                f"refIdx {ref}")
-        return extras[ref - 1]
-
-    def _wp_mono(self, preds, lst: str = "l0", ref: int = 0):
-        """Apply list-X explicit weights to a (y, u, v) prediction
-        triple; None means default prediction."""
-        wp = self.wp
-        if wp is None:
-            return preds
-        w_y, o_y, w_u, o_u, w_v, o_v = self._wp_entry(lst, ref)
-        p_y, p_u, p_v = preds
-        return (self._wp_plane(p_y, w_y, o_y, wp["logwd_y"]),
-                self._wp_plane(p_u, w_u, o_u, wp["logwd_c"]),
-                self._wp_plane(p_v, w_v, o_v, wp["logwd_c"]))
-
-    def _search_ref_y(self, ref: int = 0) -> np.ndarray:
-        """Reference luma plane for motion search: when explicit WP is
-        active the weighted plane ranks candidates the way the
-        decoder's weighted prediction will (weighting and the
-        interpolation filter are both affine, so weighting the plane
-        first is the cheap per-slice approximation)."""
-        wp = self.wp
-        plane = self.refs[ref][0]
-        if wp is None:
-            return plane
-        cache = getattr(self, "_wp_ref_cache", None)
-        if cache is None:
-            cache = self._wp_ref_cache = {}
-        if ref not in cache:
-            w_y, o_y = self._wp_entry("l0", ref)[:2]
-            cache[ref] = self._wp_plane(
-                plane.astype(np.int64), w_y, o_y,
-                wp["logwd_y"]).astype(np.uint8)
-        return cache[ref]
-
-    def _mc_pred(self, my: int, mx: int, mv: tuple[int, int],
-                 ref: int = 0):
+    def _mc_pred(self, my: int, mx: int, mv: tuple[int, int]):
         mvy, mvx = mv
-        ry, ru, rv = self.refs[ref]
-        pred_y = _interp_luma(ry, my * 16, mx * 16, 16, 16,
+        pred_y = _interp_luma(self.ref_y, my * 16, mx * 16, 16, 16,
                               mvy, mvx)
-        pred_u = _interp_chroma(ru, my * 8, mx * 8, 8, 8,
+        pred_u = _interp_chroma(self.ref_u, my * 8, mx * 8, 8, 8,
                                 mvy, mvx)
-        pred_v = _interp_chroma(rv, my * 8, mx * 8, 8, 8,
+        pred_v = _interp_chroma(self.ref_v, my * 8, mx * 8, 8, 8,
                                 mvy, mvx)
-        return self._wp_mono((pred_y, pred_u, pred_v), ref=ref)
+        return pred_y, pred_u, pred_v
 
     def _commit_part(self, by: int, bx: int, w4: int, h4: int,
-                     mv: tuple[int, int], ref: int = 0) -> None:
+                     mv: tuple[int, int]) -> None:
         """Record one partition's motion at block granularity (the
         second partition of an MB predicts from the first, so this
         runs per partition, before the MB-level commit)."""
         self.mv4[by:by + h4, bx:bx + w4] = mv
         self.dec4[by:by + h4, bx:bx + w4] = 2
-        self.ref4[by:by + h4, bx:bx + w4] = ref
 
     def _finish_inter_mb(self, addr: int) -> None:
         my, mx = divmod(addr, self.mb_w)
@@ -467,40 +369,31 @@ class MotionMixin:
         # later intra MBs predict mode DC from inter neighbors (8.3.1)
         self.modes[my * 4:(my + 1) * 4, mx * 4:(mx + 1) * 4] = 2
 
-    def _commit_inter(self, addr: int, mv: tuple[int, int],
-                      ref: int = 0) -> None:
+    def _commit_inter(self, addr: int, mv: tuple[int, int]) -> None:
         my, mx = divmod(addr, self.mb_w)
-        self._commit_part(my * 4, mx * 4, 4, 4, mv, ref)
+        self._commit_part(my * 4, mx * 4, 4, 4, mv)
         self._finish_inter_mb(addr)
 
     def _mc_pred_split(self, my: int, mx: int, mb_type: int, mvs,
-                       refs=None, parts=None):
-        """Assembled MB prediction from per-partition MVs (and
-        per-partition L0 references; weighting runs per partition so
-        mixed-reference macroblocks weight each region with its own
-        table entry — pointwise, so identical to whole-MB weighting
-        in the uniform case).  ``parts`` overrides the
-        :func:`_p_parts` geometry for sub-8x8 split macroblocks."""
+                       parts=None):
+        """Assembled MB prediction from per-partition MVs.  ``parts``
+        overrides the :func:`_p_parts` geometry for sub-8x8 split
+        macroblocks."""
         pred_y = np.zeros((16, 16), dtype=np.int64)
         pred_u = np.zeros((8, 8), dtype=np.int64)
         pred_v = np.zeros((8, 8), dtype=np.int64)
         if parts is None:
             parts = _p_parts(mb_type, my, mx)
-        if refs is None:
-            refs = [0] * len(parts)
-        for part, mv, ref in zip(parts, mvs, refs):
+        for part, mv in zip(parts, mvs):
             _, _, _, _, _, (py, px, bh, bw), (cy, cx, ch, cw) = part
-            ry, ru, rv = self.refs[ref]
-            piece = self._wp_mono(
-                (_interp_luma(ry, py, px, bh, bw, mv[0], mv[1]),
-                 _interp_chroma(ru, cy, cx, ch, cw, mv[0], mv[1]),
-                 _interp_chroma(rv, cy, cx, ch, cw, mv[0], mv[1])),
-                ref=ref)
             oy, ox = py - my * 16, px - mx * 16
-            pred_y[oy:oy + bh, ox:ox + bw] = piece[0]
+            pred_y[oy:oy + bh, ox:ox + bw] = _interp_luma(
+                self.ref_y, py, px, bh, bw, mv[0], mv[1])
             ou, ov = cy - my * 8, cx - mx * 8
-            pred_u[ou:ou + ch, ov:ov + cw] = piece[1]
-            pred_v[ou:ou + ch, ov:ov + cw] = piece[2]
+            pred_u[ou:ou + ch, ov:ov + cw] = _interp_chroma(
+                self.ref_u, cy, cx, ch, cw, mv[0], mv[1])
+            pred_v[ou:ou + ch, ov:ov + cw] = _interp_chroma(
+                self.ref_v, cy, cx, ch, cw, mv[0], mv[1])
         return pred_y, pred_u, pred_v
 
     # ---- decode side ----
@@ -559,17 +452,10 @@ class MotionMixin:
         return best[1], best[0]
 
     def _motion_search(self, src: np.ndarray, my: int, mx: int,
-                       rng: int, ref_y: np.ndarray | None = None,
-                       mvp: tuple[int, int] | None = None,
-                       ) -> tuple[tuple[int, int], int]:
-        """Whole-MB (16x16) search; ``ref_y`` and ``mvp`` default to
-        the refIdx-0 plane and predictor."""
-        if ref_y is None:
-            ref_y = self._search_ref_y()
-        if mvp is None:
-            mvp = self._mv_pred(my, mx)
+                       rng: int) -> tuple[tuple[int, int], int]:
+        """Whole-MB (16x16) search around the median predictor."""
         return self._search_rect(src, my * 16, mx * 16, 16, 16, rng,
-                                 ref_y, mvp)
+                                 self.ref_y, self._mv_pred(my, mx))
 
     def _search_split(self, y_src: np.ndarray, my: int, mx: int,
                       mb_type: int, rng: int):
@@ -585,21 +471,18 @@ class MotionMixin:
                 src = y_src[py:py + bh, px:px + bw].astype(np.int64)
                 mvp = self._mv_pred_part(by, bx, w4, h4, shape)
                 mv, cost = self._search_rect(src, py, px, bh, bw,
-                                             rng, self._search_ref_y(),
-                                             mvp)
+                                             rng, self.ref_y, mvp)
                 saved.append((by, bx, w4, h4,
                               self.mv4[by:by + h4, bx:bx + w4].copy(),
-                              self.dec4[by:by + h4, bx:bx + w4].copy(),
-                              self.ref4[by:by + h4, bx:bx + w4].copy()))
+                              self.dec4[by:by + h4, bx:bx + w4].copy()))
                 self._commit_part(by, bx, w4, h4, mv)
                 mvs.append(mv)
                 mvps.append(mvp)
                 total += cost
         finally:
-            for by, bx, w4, h4, mv4s, dec4s, ref4s in reversed(saved):
+            for by, bx, w4, h4, mv4s, dec4s in reversed(saved):
                 self.mv4[by:by + h4, bx:bx + w4] = mv4s
                 self.dec4[by:by + h4, bx:bx + w4] = dec4s
-                self.ref4[by:by + h4, bx:bx + w4] = ref4s
         return mvs, mvps, total
 
     def _search_sub_split(self, y_src: np.ndarray, my: int, mx: int,
@@ -617,7 +500,7 @@ class MotionMixin:
         subs: list[int] = []
         parts_all, mvs_all, mvps_all = [], [], []
         total = 0
-        ref_y = self._search_ref_y()
+        ref_y = self.ref_y
         try:
             for i in range(4):
                 best = None
@@ -633,16 +516,14 @@ class MotionMixin:
                         saved.append((
                             by, bx, w4, h4,
                             self.mv4[by:by + h4, bx:bx + w4].copy(),
-                            self.dec4[by:by + h4, bx:bx + w4].copy(),
-                            self.ref4[by:by + h4, bx:bx + w4].copy()))
+                            self.dec4[by:by + h4, bx:bx + w4].copy()))
                         self._commit_part(by, bx, w4, h4, mv)
                         mvs.append(mv)
                         mvps.append(mvp)
                         cost += c
-                    for by, bx, w4, h4, m4, d4, r4 in reversed(saved):
+                    for by, bx, w4, h4, m4, d4 in reversed(saved):
                         self.mv4[by:by + h4, bx:bx + w4] = m4
                         self.dec4[by:by + h4, bx:bx + w4] = d4
-                        self.ref4[by:by + h4, bx:bx + w4] = r4
                     if best is None or cost < best[0]:
                         best = (cost, st, ps, mvs, mvps)
                 cost, st, ps, mvs, mvps = best
@@ -652,8 +533,7 @@ class MotionMixin:
                     saved_all.append((
                         by, bx, w4, h4,
                         self.mv4[by:by + h4, bx:bx + w4].copy(),
-                        self.dec4[by:by + h4, bx:bx + w4].copy(),
-                        self.ref4[by:by + h4, bx:bx + w4].copy()))
+                        self.dec4[by:by + h4, bx:bx + w4].copy()))
                     self._commit_part(by, bx, w4, h4, mv)
                 subs.append(st)
                 parts_all.extend(ps)
@@ -661,23 +541,21 @@ class MotionMixin:
                 mvps_all.extend(mvps)
                 total += cost
         finally:
-            for by, bx, w4, h4, m4, d4, r4 in reversed(saved_all):
+            for by, bx, w4, h4, m4, d4 in reversed(saved_all):
                 self.mv4[by:by + h4, bx:bx + w4] = m4
                 self.dec4[by:by + h4, bx:bx + w4] = d4
-                self.ref4[by:by + h4, bx:bx + w4] = r4
         return subs, parts_all, mvs_all, mvps_all, total
 
     def _quantize_inter(self, addr: int, mv: tuple[int, int],
                         y_src: np.ndarray, u_src: np.ndarray,
-                        v_src: np.ndarray, preds=None,
-                        ref: int = 0):
+                        v_src: np.ndarray, preds=None):
         """Transform+quantize the MC residual; returns everything the
         writer and the reconstructor need.  ``preds`` overrides the
-        refIdx-0 motion compensation (partitioned macroblocks pass
+        whole-MB motion compensation (partitioned macroblocks pass
         their assembled prediction)."""
         my, mx = divmod(addr, self.mb_w)
         pred_y, pred_u, pred_v = (preds if preds is not None
-                                  else self._mc_pred(my, mx, mv, ref))
+                                  else self._mc_pred(my, mx, mv))
         src = y_src[my * 16:(my + 1) * 16,
                     mx * 16:(mx + 1) * 16].astype(np.int64)
         resid = src - pred_y
@@ -780,14 +658,6 @@ class MotionMixin:
         self._recon_inter(addr, pred_y, pred_u, pred_v,
                           luma_q, dc_q, ac_q, cbp)
 
-def _read_te1(r: _BitReader) -> int:
-    """te(v) with range 0..1 (9.1.1): one bit, INVERTED."""
-    return 1 - r.read(1)
-
-
-def _write_te1(w: _BitWriter, v: int) -> None:
-    w.write(1 - v, 1)
-
 
 class InterPicture(MotionMixin, CavlcPicture):
     """CavlcPicture plus MotionMixin: the CAVLC-entropy P lane.
@@ -796,13 +666,9 @@ class InterPicture(MotionMixin, CavlcPicture):
 
     def __init__(self, y: np.ndarray, u: np.ndarray, v: np.ndarray,
                  mb_w: int, mb_h: int,
-                 ref: tuple[np.ndarray, np.ndarray, np.ndarray],
-                 ref1: tuple[np.ndarray, np.ndarray, np.ndarray] | None
-                 = None,
-                 more: list[tuple[np.ndarray, np.ndarray,
-                                  np.ndarray]] | None = None) -> None:
+                 ref: tuple[np.ndarray, np.ndarray, np.ndarray]) -> None:
         CavlcPicture.__init__(self, y, u, v, mb_w, mb_h)
-        self._init_motion(ref, ref1, more)
+        self._init_motion(ref)
 
     def decode_ipcm(self, r: _BitReader, addr: int) -> None:
         """I_PCM raw samples (also reachable from P slices as
@@ -840,7 +706,6 @@ class InterPicture(MotionMixin, CavlcPicture):
                     raise ValueError("H.264 mb_skip_run overruns "
                                      "the picture")
                 self._decode_skip(addr)
-                self.note_qp(addr)
                 covered[addr] = True
                 addr += 1
             if not _more_rbsp_data(r):
@@ -870,118 +735,68 @@ class InterPicture(MotionMixin, CavlcPicture):
                 # the same semantics the CABAC lane records, so both
                 # entropy lanes derive identical predictors
                 self.note_intra(addr)
-            self.note_qp(addr)
             covered[addr] = True
             addr += 1
 
-    # ---- encode side ----
-
-    def _read_ref_idx(self, r: _BitReader, n_act: int) -> int:
-        """ref_idx_lX for an active count, te(v) per 9.1.1: absent
-        (0) when one reference is active, one INVERTED bit when
-        exactly two are, plain ue(v) beyond that."""
-        if n_act <= 1:
-            return 0
-        if n_act == 2:
-            return _read_te1(r)
-        from rmlint_spark.operators.h264 import _read_ue
-
-        v = _read_ue(r)
-        if v >= n_act:
-            raise ValueError(
-                "H.264 ref_idx beyond num_ref_idx_lX_active")
-        return v
-
-    def _write_ref_idx(self, w: _BitWriter, ref: int,
-                       n_act: int) -> None:
-        """Encode-side twin of :meth:`_read_ref_idx` (same te(v)
-        regimes keyed on the list's active count)."""
-        if n_act <= 1:
-            return
-        if n_act == 2:
-            _write_te1(w, ref)
-            return
-        from rmlint_spark.operators.h264 import _write_ue
-
-        _write_ue(w, ref)
-
-    def _read_ref_l0(self, r: _BitReader) -> int:
-        return self._read_ref_idx(r, self.n_ref0)
-
-    def _write_ref_l0(self, w: _BitWriter, ref: int) -> None:
-        self._write_ref_idx(w, ref, self.n_ref0)
-
     def decode_mb_p16(self, r: _BitReader, addr: int) -> None:
-        """P_L0_16x16: ref_idx_l0 (if >1 active), mvd pair, CBP,
-        residual over the MC block."""
-        from rmlint_spark.operators.h264 import _read_se, _read_ue
+        """P_L0_16x16: mvd pair, CBP, residual over the MC block."""
+        from rmlint_spark.operators.h264 import _read_se
 
         my, mx = divmod(addr, self.mb_w)
-        ref = self._read_ref_l0(r)
         mvd_x = _read_se(r)                 # compIdx 0 = horizontal
         mvd_y = _read_se(r)
-        mvp = self._mv_pred(my, mx, ref)
+        mvp = self._mv_pred(my, mx)
         mv = (mvp[0] + mvd_y, mvp[1] + mvd_x)
-        pred_y, pred_u, pred_v = self._mc_pred(my, mx, mv, ref)
+        pred_y, pred_u, pred_v = self._mc_pred(my, mx, mv)
         self._read_inter_residual(r, addr, pred_y, pred_u, pred_v)
-        self._commit_inter(addr, mv, ref)
+        self._commit_inter(addr, mv)
 
     def decode_mb_p2(self, r: _BitReader, addr: int,
                      mb_type: int) -> None:
-        """P_L0_L0_16x8 / P_L0_L0_8x16: per-partition ref_idx_l0
-        first (7.3.5.1 syntax order), then two mvd pairs in partition
+        """P_L0_L0_16x8 / P_L0_L0_8x16: two mvd pairs in partition
         order (the second partition's predictor sees the first's
         committed motion), then one CBP + residual over the assembled
         prediction."""
         from rmlint_spark.operators.h264 import _read_se
 
         my, mx = divmod(addr, self.mb_w)
-        parts = _p_parts(mb_type, my, mx)
-        refs = [self._read_ref_l0(r) for _ in parts]
         mvs = []
-        for (by, bx, w4, h4, shape, _, _), ref in zip(parts, refs):
+        for by, bx, w4, h4, shape, _, _ in _p_parts(mb_type, my, mx):
             mvd_x = _read_se(r)             # compIdx 0 = horizontal
             mvd_y = _read_se(r)
-            p = self._mv_pred_part(by, bx, w4, h4, shape, ref)
+            p = self._mv_pred_part(by, bx, w4, h4, shape)
             mv = (p[0] + mvd_y, p[1] + mvd_x)
-            self._commit_part(by, bx, w4, h4, mv, ref)
+            self._commit_part(by, bx, w4, h4, mv)
             mvs.append(mv)
         pred_y, pred_u, pred_v = self._mc_pred_split(my, mx, mb_type,
-                                                     mvs, refs)
+                                                     mvs)
         self._read_inter_residual(r, addr, pred_y, pred_u, pred_v)
         self._finish_inter_mb(addr)
 
     def decode_mb_p8x8(self, r: _BitReader, addr: int,
                        mb_type: int) -> None:
         """P_8x8 / P_8x8ref0 (7.3.5.2): four sub_mb_type codes — ALL
-        of Table 7-17 decodes (8x8, 8x4, 4x8, 4x4) — then ref_idx_l0
-        per 8x8 sub-macroblock (P_8x8 only — P_8x8ref0 pins every
-        reference to 0 with no syntax), then one mvd pair per
-        sub-partition in coding order (each predicting from the
-        already committed ones), then one CBP + residual."""
+        of Table 7-17 decodes (8x8, 8x4, 4x8, 4x4) — then one mvd
+        pair per sub-partition in coding order (each predicting from
+        the already committed ones), then one CBP + residual."""
         from rmlint_spark.operators.h264 import _read_se, _read_ue
 
         my, mx = divmod(addr, self.mb_w)
-        subs = [_read_ue(r) for _ in range(4)]
-        if mb_type == _P_8x8REF0:
-            refs8 = [0] * 4
-        else:
-            refs8 = [self._read_ref_l0(r) for _ in range(4)]
-        parts, refs = _sub_split_parts(subs, refs8, my, mx)
+        parts = _sub_split_parts([_read_ue(r) for _ in range(4)], my, mx)
         mvs = []
-        for (by, bx, w4, h4, shape, _, _), ref in zip(parts, refs):
+        for by, bx, w4, h4, shape, _, _ in parts:
             mvd_x = _read_se(r)
             mvd_y = _read_se(r)
-            p = self._mv_pred_part(by, bx, w4, h4, shape, ref)
+            p = self._mv_pred_part(by, bx, w4, h4, shape)
             mv = (p[0] + mvd_y, p[1] + mvd_x)
-            self._commit_part(by, bx, w4, h4, mv, ref)
+            self._commit_part(by, bx, w4, h4, mv)
             mvs.append(mv)
         pred_y, pred_u, pred_v = self._mc_pred_split(my, mx, mb_type,
-                                                     mvs, refs,
-                                                     parts=parts)
+                                                     mvs, parts=parts)
         self._read_inter_residual(r, addr, pred_y, pred_u, pred_v)
         self._finish_inter_mb(addr)
 
+    # ---- encode side ----
 
     def encode_mb_p(self, w: _BitWriter, addr: int, y_src: np.ndarray,
                     u_src: np.ndarray, v_src: np.ndarray,
@@ -997,16 +812,6 @@ class InterPicture(MotionMixin, CavlcPicture):
         py, px = my * 16, mx * 16
         src = y_src[py:py + 16, px:px + 16].astype(np.int64)
         mv, inter_cost = self._motion_search(src, my, mx, search)
-        ref = 0
-        # every older active reference competes for the whole-MB mode
-        # (a small per-index bias covers the extra ref_idx bits)
-        for ridx in range(1, min(self.n_ref0, len(self.refs))):
-            mv1, cost1 = self._motion_search(
-                src, my, mx, search, ref_y=self._search_ref_y(ridx),
-                mvp=self._mv_pred(my, mx, ridx))
-            if cost1 + 16 + 8 * (ridx - 1) < inter_cost:
-                ref, mv = ridx, mv1
-                inter_cost = cost1 + 16 + 8 * (ridx - 1)
         split_best = None
         if partitions:
             for t in (_P_L0_L0_16x8, _P_L0_L0_8x16):
@@ -1025,17 +830,11 @@ class InterPicture(MotionMixin, CavlcPicture):
                 split_best = (cost, _P_8x8, mvs, mvps, subs, sparts)
         if split_best is not None and split_best[0] < inter_cost:
             cost, t, mvs, mvps, subs, sparts = split_best
-            if t == _P_8x8 and self.n_ref0 > 1:
-                _write_ue(w, _P_8x8REF0)    # all refs 0, no te(v) bits
-            else:
-                _write_ue(w, t)
+            _write_ue(w, t)
             parts = sparts if t == _P_8x8 else _p_parts(t, my, mx)
             if t == _P_8x8:
                 for st in subs:
                     _write_ue(w, st)
-            elif self.n_ref0 > 1:
-                for _ in parts:
-                    self._write_ref_l0(w, 0)  # partitions search ref 0
             for (by, bx, w4, h4, _, _, _), pmv, pmvp in zip(
                     parts, mvs, mvps):
                 _write_se(w, pmv[1] - pmvp[1])
@@ -1072,78 +871,34 @@ class InterPicture(MotionMixin, CavlcPicture):
             self.note_intra(addr)       # available-not-inter (8.4.1.3)
             return False
         (pred_y, pred_u, pred_v, luma_q, dc_q, ac_q,
-         cbp) = self._quantize_inter(addr, mv, y_src, u_src, v_src,
-                                     ref=ref)
-        if cbp == 0 and ref == 0 and mv == self._skip_mv(my, mx):
+         cbp) = self._quantize_inter(addr, mv, y_src, u_src, v_src)
+        if cbp == 0 and mv == self._skip_mv(my, mx):
             self._decode_skip(addr)             # recon == decoder's skip
             return True
-        mvp = self._mv_pred(my, mx, ref)
+        mvp = self._mv_pred(my, mx)
         _write_ue(w, _P_L0_16x16)
-        self._write_ref_l0(w, ref)
         _write_se(w, mv[1] - mvp[1])            # mvd horizontal first
         _write_se(w, mv[0] - mvp[0])
         self._write_inter_residual(w, addr, pred_y, pred_u, pred_v,
                                    luma_q, dc_q, ac_q, cbp)
-        self._commit_inter(addr, mv, ref)
+        self._commit_inter(addr, mv)
         return False
 
 
 # --------------------------------------------------------- top level
-
-def _estimate_wp_plane(src: np.ndarray, ref: np.ndarray,
-                       logwd: int) -> tuple[int, int]:
-    """Least-squares (weight, offset) fit of ``src ~ w/2^logwd * ref
-    + o`` over one plane, clamped to the pred_weight_table se(v)
-    range.  Degenerate (flat) references fall back to a pure offset."""
-    s = src.astype(np.float64)
-    rf = ref.astype(np.float64)
-    var = rf.var()
-    if var > 1e-3:
-        slope = ((s * rf).mean() - s.mean() * rf.mean()) / var
-    else:
-        slope = 1.0
-    w = max(-128, min(127, int(round(slope * (1 << logwd)))))
-    o = max(-128, min(127,
-                      int(round(s.mean() - w * rf.mean() / (1 << logwd)))))
-    return w, o
-
-
-def _estimate_wp(planes: tuple[np.ndarray, np.ndarray, np.ndarray],
-                 ref: tuple[np.ndarray, np.ndarray, np.ndarray],
-                 logwd: int = 6) -> dict:
-    """Per-plane explicit-WP estimate of a (y, u, v) source against a
-    reconstructed reference — the standard fade/brightness model a
-    conforming encoder derives before writing pred_weight_table."""
-    w_y, o_y = _estimate_wp_plane(planes[0], ref[0], logwd)
-    w_u, o_u = _estimate_wp_plane(planes[1], ref[1], logwd)
-    w_v, o_v = _estimate_wp_plane(planes[2], ref[2], logwd)
-    return {"logwd_y": logwd, "logwd_c": logwd,
-            "l0": (w_y, o_y, w_u, o_u, w_v, o_v)}
-
 
 def encode_h264_p(frames: list[np.ndarray],
                   fps: tuple[int, int] = (25, 1),
                   qp: int = 20,
                   gop: int = 8,
                   search: int = 4,
-                  partitions: bool = False,
-                  wp: bool = False,
-                  refs: int = 1) -> bytes:
+                  partitions: bool = False) -> bytes:
     """(h, w, 3) uint8 RGB frames -> Annex-B H.264 with IDR+P GOPs
     (IPPP..., a new IDR every ``gop`` frames) and CAVLC entropy.
-    Lossy at ``qp``; self-consistent with
-    :func:`rmlint_spark.operators.h264.decode_h264` (the documented
-    VLC-table deviations of h264_cavlc.py apply here too).  With
-    ``wp`` the PPS sets weighted_pred_flag and every P slice carries
-    a least-squares pred_weight_table (7.3.3.2) fitted per plane —
-    the fade/brightness model of 8.4.2.3.3 explicit weighting.
-
-    ``refs >= 2`` enables multi-reference prediction: P slices
-    override num_ref_idx_l0_active to however many references the
-    DPB holds (up to ``refs``, encoder subset cap 4), whole-MB modes
-    compete across all of them (te(v) ref_idx_l0 syntax — ue(v) once
-    more than two are active) — the flicker/occlusion mode where an
-    older frame beats t-1."""
+    Each P picture predicts from the one before it.  Lossy at ``qp``;
+    self-consistent with :func:`rmlint_spark.operators.h264.decode_h264`
+    (the documented VLC-table deviations of h264_cavlc.py apply here
+    too)."""
     from rmlint_spark.operators.h264 import (
         _START4,
         _encode_pps,
@@ -1152,8 +907,6 @@ def encode_h264_p(frames: list[np.ndarray],
         _pad_to_mb,
         _rgb_to_yuv420,
         _trailing_bits,
-        _write_pred_weight_table,
-        _write_deblock,
         _write_se,
         _write_ue,
     )
@@ -1163,38 +916,25 @@ def encode_h264_p(frames: list[np.ndarray],
         raise ValueError("qp outside the implemented 0..29 subset")
     if gop < 1:
         raise ValueError("gop must be >= 1")
-    if not 1 <= refs <= 4:
-        raise ValueError("refs must be 1..4 (the implemented subset)")
     h, w = np.asarray(frames[0]).shape[:2]
     mb_w, mb_h = -(-w // 16), -(-h // 16)
     out = bytearray()
     out += _START4 + b"\x67" + _escape_rbsp(
-        _encode_sps(mb_w, mb_h, w, h, fps, num_ref_frames=refs))
-    out += _START4 + b"\x68" + _escape_rbsp(
-        _encode_pps(weighted_pred=1 if wp else 0))
-    prev: list[tuple] = []                  # recon refs, newest first
+        _encode_sps(mb_w, mb_h, w, h, fps, num_ref_frames=1))
+    out += _START4 + b"\x68" + _escape_rbsp(_encode_pps())
+    prev: tuple | None = None               # reconstructed reference
     for i, fr in enumerate(frames):
         fr = np.asarray(fr, dtype=np.uint8)
         if fr.shape[:2] != (h, w):
             raise ValueError("all frames must share dimensions")
         y, u, v = _rgb_to_yuv420(fr)
         y, u, v = _pad_to_mb(y, 16), _pad_to_mb(u, 8), _pad_to_mb(v, 8)
-        is_idr = (i % gop == 0) or not prev
-        n_ref0 = min(refs, len(prev)) if not is_idr else 0
+        is_idr = i % gop == 0 or prev is None
         pic = InterPicture(
             np.zeros_like(y), np.zeros_like(u), np.zeros_like(v),
             mb_w, mb_h,
-            prev[0] if prev else (np.zeros_like(y), np.zeros_like(u),
-                                  np.zeros_like(v)),
-            prev[1] if len(prev) > 1 else None,
-            more=prev[2:])
+            prev or (np.zeros_like(y), np.zeros_like(u), np.zeros_like(v)))
         pic.qp = qp
-        pic.n_ref0 = max(n_ref0, 1)
-        if wp and not is_idr:
-            pic.wp = _estimate_wp((y, u, v), prev[0])
-            if n_ref0 > 1:
-                pic.wp["l0x"] = [_estimate_wp((y, u, v), pr)["l0"]
-                                 for pr in prev[1:n_ref0]]
         bw = _BitWriter()
         _write_ue(bw, 0)                    # first_mb_in_slice
         _write_ue(bw, 7 if is_idr else 5)   # slice_type: I / P (all)
@@ -1205,18 +945,11 @@ def encode_h264_p(frames: list[np.ndarray],
             bw.write(0, 1)                  # no_output_of_prior_pics
             bw.write(0, 1)                  # long_term_reference_flag
         else:
-            if n_ref0 > 1:                  # num_ref_idx_active_override
-                bw.write(1, 1)
-                _write_ue(bw, n_ref0 - 1)   # num_ref_idx_l0_active_minus1
-            else:
-                bw.write(0, 1)
+            bw.write(0, 1)                  # num_ref_idx_active_override
             bw.write(0, 1)                  # ref_pic_list_modification_l0
-            if wp:                          # pred_weight_table (7.3.3)
-                _write_pred_weight_table(bw, pic.wp, is_b=False,
-                                         n_l0=max(n_ref0, 1))
             bw.write(0, 1)                  # adaptive_ref_pic_marking
         _write_se(bw, qp - 26)              # slice_qp_delta
-        _write_deblock(bw)                  # explicit idc 1: filter off
+        _write_ue(bw, 1)                    # disable_deblocking_filter_idc: off
         if is_idr:
             for addr in range(mb_w * mb_h):
                 pic.encode_mb(bw, addr, y, u, v)
@@ -1240,10 +973,7 @@ def encode_h264_p(frames: list[np.ndarray],
         _trailing_bits(bw)
         out += _START4 + (b"\x65" if is_idr else b"\x41") + \
             _escape_rbsp(bw.bytes())
-        if is_idr:
-            prev = []                       # IDR flushes the DPB
-        prev.insert(0, (pic.y, pic.u, pic.v))
-        del prev[refs:]
+        prev = (pic.y, pic.u, pic.v)
     return bytes(out)
 
 

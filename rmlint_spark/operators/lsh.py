@@ -46,6 +46,10 @@ from rmlint_spark.operators.lint import KEY
 # (``_probe_over_cap``) before the report stays distributed
 _PROBE_CAP = 10_000
 
+# smallest candidate-pair count at which ``jaccard_verify`` prunes the
+# signature relation to the paired fids before the fetch joins
+VERIFY_PRUNE_MIN = 500_000
+
 
 def file_id(prefix: str = "") -> F.Column:
     """128-bit hex row key (collision-safe at 10^12 rows, unlike a
@@ -493,13 +497,10 @@ def jaccard_verify(
     # the over-broadcast regime where sigs would otherwise shuffle at
     # O(corpus), so below the threshold its union/distinct/semi-join
     # stages are pure overhead and are skipped. One count on the
-    # pinned relation decides (env RMLINT_SPARK_VERIFY_PRUNE_MIN,
-    # default 500k pairs ~ 35 MB broadcast-framed — under the 64 MB
-    # session autoBroadcast threshold).
-    import os as _os
-
-    prune_min = int(_os.environ.get("RMLINT_SPARK_VERIFY_PRUNE_MIN", "500000"))
-    if pairs.count() >= prune_min:
+    # pinned relation decides (``VERIFY_PRUNE_MIN``: 500k pairs ~ 35 MB
+    # broadcast-framed — under the 64 MB session autoBroadcast
+    # threshold).
+    if pairs.count() >= VERIFY_PRUNE_MIN:
         pair_ids = (
             pairs.select(F.col("fid_a").alias("fid"))
             .union(pairs.select(F.col("fid_b").alias("fid")))

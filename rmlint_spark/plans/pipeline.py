@@ -76,7 +76,7 @@ def run_pipeline(
     # member re-expansion below — pin it so the corpus sha256 pass and
     # its dedup shuffle run once per pipeline (round 6, guide §2.4)
     idx = EX._pin(row_index(files))
-    sigs = with_signatures(files, cfg, idx=idx).cache()
+    sigs = EX._pin(with_signatures(files, cfg, idx=idx))
     relaxed = replace(cfg, jaccard_threshold=max(0.0, cfg.jaccard_threshold - VERIFY_MARGIN))
     # candidate_pairs returns distinct (fid_a < fid_b) pairs
     cand, over = candidate_pairs(sigs, relaxed)

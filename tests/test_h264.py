@@ -14,10 +14,13 @@ import pytest
 
 from rmlint_spark.operators.flac import _BitReader, _BitWriter
 from rmlint_spark.operators.h264 import (
+    _encode_pps,
+    _encode_sps,
     _escape_rbsp,
     _H264Layout,
     _read_se,
     _read_ue,
+    _trailing_bits,
     _unescape_rbsp,
     _write_se,
     _write_ue,
@@ -752,3 +755,167 @@ def test_i16x16_plane_prediction_on_ramp(monkeypatch):
     assert _psnr(frames[0], f) > 50.0
     # plane soaks up the gradient: the whole 12-MB frame in <500 bytes
     assert len(payload) < 500
+
+
+# ------------------------- header validation and subset refusals
+#
+# The decoder parses and range-checks the deblocking, reference-count
+# and weighted-prediction header fields, then refuses any value that
+# would need the in-loop filter, a second reference or explicit
+# weights.  The streams are hand-built: no encoder here emits them.
+
+
+def _pps_bits(weighted_pred: int = 0, deblocking_control: int = 1) -> bytes:
+    w = _BitWriter()
+    _write_ue(w, 0)                 # pic_parameter_set_id
+    _write_ue(w, 0)                 # seq_parameter_set_id
+    w.write(0, 2)                   # CAVLC, no bottom_field_pic_order
+    _write_ue(w, 0)                 # num_slice_groups_minus1
+    _write_ue(w, 0)                 # num_ref_idx_l0_default_active_minus1
+    _write_ue(w, 0)                 # num_ref_idx_l1_default_active_minus1
+    w.write(weighted_pred, 1)       # weighted_pred_flag
+    w.write(0, 2)                   # weighted_bipred_idc
+    for _ in range(3):
+        _write_se(w, 0)             # pic_init_qp / qs / chroma_qp offsets
+    w.write(deblocking_control, 1)  # deblocking_filter_control_present
+    w.write(0, 2)                   # constrained_intra / redundant_pic_cnt
+    _trailing_bits(w)
+    return w.bytes()
+
+
+def _stream_with_deblock_tail(tail_bits, pps: bytes | None = None,
+                              p_slice: bytes | None = None) -> bytes:
+    """Minimal 16x16 I_PCM stream whose slice header ends with the
+    caller-written deblocking fields, optionally followed by a
+    hand-built P slice RBSP."""
+    w = _BitWriter()
+    _write_ue(w, 0)                 # first_mb
+    _write_ue(w, 7)                 # slice_type I
+    _write_ue(w, 0)                 # pps id
+    w.write(0, 4)                   # frame_num
+    _write_ue(w, 0)                 # idr_pic_id
+    w.write(0, 2)                   # no_output / long_term
+    _write_se(w, 0)                 # slice_qp_delta
+    tail_bits(w)
+    _write_ue(w, 25)                # I_PCM mb_type
+    w.pad_to_byte()
+    w.buf += bytes(384)
+    _trailing_bits(w)
+    out = (b"\x00\x00\x00\x01\x67"
+           + _escape_rbsp(_encode_sps(1, 1, 16, 16, (25, 1),
+                                      num_ref_frames=2))
+           + b"\x00\x00\x00\x01\x68"
+           + _escape_rbsp(_encode_pps() if pps is None else pps)
+           + b"\x00\x00\x00\x01\x65" + _escape_rbsp(w.bytes()))
+    if p_slice is not None:
+        out += b"\x00\x00\x00\x01\x41" + _escape_rbsp(p_slice)
+    return out
+
+
+def _filter_off(w):
+    _write_ue(w, 1)                 # disable_deblocking_filter_idc 1
+
+
+def _p_skip_slice(frame_num: int, n_ref: int = 1,
+                  weights: bool = False) -> bytes:
+    """One-macroblock P slice coded as a single P_Skip; ``n_ref`` > 1
+    overrides num_ref_idx_l0_active, ``weights`` writes an all-default
+    pred_weight_table (for a PPS with weighted_pred_flag 1)."""
+    w = _BitWriter()
+    _write_ue(w, 0)                 # first_mb
+    _write_ue(w, 5)                 # slice_type P
+    _write_ue(w, 0)                 # pps id
+    w.write(frame_num, 4)           # frame_num
+    w.write(int(n_ref > 1), 1)      # num_ref_idx_active_override
+    if n_ref > 1:
+        _write_ue(w, n_ref - 1)     # num_ref_idx_l0_active_minus1
+    w.write(0, 1)                   # ref_pic_list_modification_l0
+    if weights:
+        _write_ue(w, 0)             # luma_log2_weight_denom
+        _write_ue(w, 0)             # chroma_log2_weight_denom
+        for _ in range(n_ref):
+            w.write(0, 2)           # luma / chroma weight flags
+    w.write(0, 1)                   # adaptive_ref_pic_marking
+    _write_se(w, 0)                 # slice_qp_delta
+    _write_ue(w, 1)                 # disable_deblocking_filter_idc 1
+    _write_ue(w, 1)                 # mb_skip_run: the one macroblock
+    _trailing_bits(w)
+    return w.bytes()
+
+
+def test_idc_out_of_range_refused():
+    def tail(w):
+        _write_ue(w, 3)             # idc 3: out of range
+    with pytest.raises(ValueError, match="idc out of range"):
+        decode_h264(_stream_with_deblock_tail(tail))
+
+
+def test_offsets_out_of_range_refused():
+    def tail(w):
+        _write_ue(w, 0)             # idc 0
+        _write_se(w, 7)             # alpha div2 7: outside [-6, 6]
+        _write_se(w, 0)
+    with pytest.raises(ValueError, match="offsets out of range"):
+        decode_h264(_stream_with_deblock_tail(tail))
+
+
+def _deblocking_on(w):
+    _write_ue(w, 0)                 # idc 0: in-loop filter on
+    _write_se(w, 0)                 # slice_alpha_c0_offset_div2
+    _write_se(w, 0)                 # slice_beta_offset_div2
+
+
+def test_deblocking_idc0_slice_refused():
+    with pytest.raises(ValueError, match="implemented subset"):
+        decode_h264(_stream_with_deblock_tail(_deblocking_on))
+
+
+def test_pps_without_deblocking_control_refused():
+    # no per-slice control: the decoder infers idc 0 (7.4.3)
+    payload = _stream_with_deblock_tail(
+        lambda w: None, pps=_pps_bits(deblocking_control=0))
+    assert parse_h264(payload)["n_frames"] == 1
+    with pytest.raises(ValueError, match="implemented subset"):
+        decode_h264(payload)
+
+
+def test_multi_reference_p_slice_refused():
+    # with one reference the same hand-built layout decodes: the P_Skip
+    # copies the IDR's samples
+    payload = _stream_with_deblock_tail(_filter_off,
+                                        p_slice=_p_skip_slice(1))
+    _, frames = decode_h264(payload)
+    assert len(frames) == 2 and np.array_equal(frames[0], frames[1])
+    payload = _stream_with_deblock_tail(
+        _filter_off, p_slice=_p_skip_slice(1, n_ref=2))
+    with pytest.raises(ValueError, match="implemented subset"):
+        decode_h264(payload)
+    # a count past the spec's 16 is still a range error first
+    payload = _stream_with_deblock_tail(
+        _filter_off, p_slice=_p_skip_slice(1, n_ref=17))
+    with pytest.raises(ValueError, match="out of the spec range"):
+        decode_h264(payload)
+
+
+def test_weighted_prediction_p_slice_refused():
+    payload = _stream_with_deblock_tail(
+        _filter_off, pps=_pps_bits(weighted_pred=1),
+        p_slice=_p_skip_slice(1, weights=True))
+    with pytest.raises(ValueError, match="implemented subset"):
+        decode_h264(payload)
+    # the I picture alone is outside the weighted lane and decodes
+    intra_only = payload[:payload.rindex(b"\x00\x00\x00\x01\x41")]
+    assert len(decode_h264(intra_only)[1]) == 1
+
+
+def test_refused_stream_degrades_to_opaque_features():
+    from rmlint_spark.operators.multimodal import (
+        _fake_features,
+        _features_for,
+    )
+
+    payload = _stream_with_deblock_tail(_deblocking_on)
+    assert np.array_equal(_features_for(payload), _fake_features(payload))
+    # the filter-off twin decodes for real
+    twin = _stream_with_deblock_tail(_filter_off)
+    assert not np.array_equal(_features_for(twin), _fake_features(twin))

@@ -149,9 +149,9 @@ def test_sub8x8_split_decodes_through_cabac(monkeypatch):
     seen: list[int] = []
     real = hi._sub_split_parts
 
-    def spy(subs, refs8, my, mx):
+    def spy(subs, my, mx):
         seen.extend(subs)
-        return real(subs, refs8, my, mx)
+        return real(subs, my, mx)
 
     monkeypatch.setattr(hi, "_sub_split_parts", spy)
     _, dec = decode_h264(enc)

@@ -165,9 +165,9 @@ def test_sub8x8_strip_motion_roundtrip_both_lanes():
     seen: list[int] = []
     real = hi._sub_split_parts
 
-    def spy(subs, refs8, my, mx):
+    def spy(subs, my, mx):
         seen.extend(subs)
-        return real(subs, refs8, my, mx)
+        return real(subs, my, mx)
 
     hi._sub_split_parts = spy
     try:

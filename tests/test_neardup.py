@@ -450,6 +450,32 @@ def test_estimated_jaccard_matches_numpy_bit_for_bit(spark):
     assert [got[i] for i in range(n)] == want.tolist()
 
 
+def test_verify_prune_matches_unpruned(spark, corpus, monkeypatch):
+    """``jaccard_verify`` semi-joins the signatures down to the paired
+    fids only from ``VERIFY_PRUNE_MIN`` (500k) candidate pairs, which
+    no test corpus, oracle corpus or benchmark workload reaches. With
+    the constant at 0 the pruned branch runs, and it must verify the
+    same (fid_a, fid_b, est_jaccard) rows as the unpruned one."""
+    from rmlint_spark.operators import lsh
+    from rmlint_spark.operators.exact import _pin, pin_scope
+
+    files, _ = corpus
+
+    def run():
+        df = lsh.jaccard_verify(pairs, sigs, CFG.jaccard_threshold)
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return sorted(map(tuple, df.collect())), "LeftSemi" in plan
+
+    with pin_scope(spark):
+        sigs = _pin(with_signatures(files, CFG))
+        pairs, _ = lsh.candidate_pairs(sigs, CFG)
+        plain, plain_pruned = run()
+        monkeypatch.setattr(lsh, "VERIFY_PRUNE_MIN", 0)
+        pruned, pruned_pruned = run()
+    assert not plain_pruned and pruned_pruned
+    assert plain and pruned == plain
+
+
 def test_token_free_files_do_not_near_cluster(spark):
     """Whitespace-only files have no shingles, so each gets the
     sentinel signature and SimHash 0, which puts them all in one
