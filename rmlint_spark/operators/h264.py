@@ -21,22 +21,14 @@ docstring). Since r5 session 5, CABAC entropy slices decode too
 (operators/h264_cabac.py: the full clause-9.3 arithmetic engine with
 derived tables, I-slice binarizations, residual_block_cabac, and the
 pcm_flag terminate/flush/reinit lane) — no video-essence stub
-remains. Since r5 session 6, P slices decode as well, under BOTH
-entropy modes (operators/h264_inter.py: quarter-pel luma /
-eighth-pel chroma motion compensation, median MV prediction, P_Skip
-runs, inter residuals, intra-in-P fallback, CAVLC mb_skip_run;
-operators/h264_cabac_p.py: the same semantics under arithmetic
-entropy — mb_skip_flag contexts, P mb_type binarization, UEG3 mvd),
-so IDR+P GOPs round-trip in all four encoder lanes, and the 16x8 /
-8x16 / P_8x8 P partitions code for real in both entropy lanes (r5 s9,
-block-grid motion state + directional predictors), down to the full
-Table 7-17 sub-8x8 family (8x4/4x8/4x4).  P slices predict from one
-reference picture.  Outside the implemented subset, with a
-``ValueError``: B slices, the clause-8.7 in-loop deblocking filter
-(any disable_deblocking_filter_idc other than 1, including the idc 0
-inferred for a PPS without deblocking control), P slices with more
-than one active reference and P slices under explicit weighted
-prediction.  SP/SI slices raise ``NotImplementedError``.
+remains.  The decoder is intra-only: every picture decodes on its
+own, so ``frame_at`` decodes exactly the picture it is asked for.
+Outside the implemented subset, with a ``ValueError``: P and B
+slices (refused before their slice header is parsed; the header walk
+in :func:`parse_h264` still counts their pictures) and the clause-8.7
+in-loop deblocking filter (any disable_deblocking_filter_idc other
+than 1, including the idc 0 inferred for a PPS without deblocking
+control).  SP/SI slices raise ``NotImplementedError``.
 
 Same codec-lane status as jpeg.py / flac.py / mpeg_audio.py:
 per-asset decode inside ``mapInPandas`` (multimodal.py), explicitly
@@ -361,7 +353,7 @@ def _parse_sps(rbsp: bytes) -> dict:
         _read_se(r)                     # offset_for_top_to_bottom_field
         for _ in range(_read_ue(r)):
             _read_se(r)                 # offset_for_ref_frame[i]
-    sps["num_ref_frames"] = _read_ue(r)  # max_num_ref_frames (DPB window)
+    _read_ue(r)                         # max_num_ref_frames
     r.read(1)                           # gaps_in_frame_num_value_allowed
     mb_w = _read_ue(r) + 1
     mb_h = _read_ue(r) + 1
@@ -414,10 +406,8 @@ def _parse_pps(rbsp: bytes) -> dict:
            "pic_order_present": r.read(1)}
     if _read_ue(r):                     # num_slice_groups_minus1
         raise ValueError("FMO slice groups unsupported")
-    pps["n_ref0_default"] = _read_ue(r) + 1
-    _read_ue(r)                         # num_ref_idx_l1_default_active_minus1
-    pps["weighted_pred"] = r.read(1)
-    r.read(2)                           # weighted_bipred_idc
+    _read_ue(r), _read_ue(r)            # num_ref_idx_l0/l1_default_minus1
+    r.read(3)                           # weighted_pred / weighted_bipred_idc
     pps["pic_init_qp"] = 26 + _read_se(r)
     _read_se(r), _read_se(r)            # qs / chroma offsets
     pps["deblocking_control"] = r.read(1)
@@ -452,18 +442,15 @@ def _iter_nals(payload: bytes):
 class _H264Layout:
     """Parsed stream geometry: SPS/PPS plus the RBSP of every slice,
     grouped into pictures (a slice with first_mb_in_slice == 0 starts
-    a new picture). Intra pictures decode independently, so sampling
-    paths decode ONLY the frames they touch (the Y4M discipline);
-    P pictures decode their GOP prefix through the plane cache.
-    Without B pictures decode order is display order."""
+    a new picture). The implemented subset is intra-only, so every
+    picture decodes independently and sampling paths decode ONLY the
+    frames they touch (the Y4M discipline)."""
 
-    __slots__ = ("sps", "pps", "pictures", "fps", "_cache", "kinds",
-                 "is_ref")
+    __slots__ = ("sps", "pps", "pictures", "fps", "kinds")
 
     def __init__(self, payload: bytes):
         self.sps: dict | None = None
         self.pps: dict | None = None
-        self._cache: dict[int, tuple] = {}
         self.pictures: list[list[tuple[int, int, bytes]]] = []
         for typ, ref_idc, rbsp in _iter_nals(payload):
             if typ == _NAL_SPS:
@@ -487,7 +474,6 @@ class _H264Layout:
             sts = {self._peek_slice_type(rbsp) % 5 for _, _, rbsp in pic}
             self.kinds.append(
                 "B" if 1 in sts else ("P" if 0 in sts else "I"))
-        self.is_ref = [pic[0][1] != 0 for pic in self.pictures]
 
     def _slice_first_mb(self, rbsp: bytes) -> int:
         return _read_ue(_BitReader(rbsp))
@@ -506,13 +492,8 @@ class _H264Layout:
         return _read_ue(r)
 
     def frame_at(self, idx: int) -> np.ndarray:
-        """Decode frame ``idx`` to (h, w, 3) uint8 RGB.
-        Inter pictures reference earlier decoded pictures, so sampling
-        one decodes its GOP prefix back to the nearest intra picture
-        (the honest random-access cost of temporal compression);
-        decoded planes are cached so sequential access stays
-        O(1)/frame."""
-        y, u, v = self._decode_planes(idx)
+        """Decode picture ``idx`` alone to (h, w, 3) uint8 RGB."""
+        y, u, v = self._decode_picture(idx)
         sps = self.sps
         mb_w, mb_h = sps["mb_w"], sps["mb_h"]
         cl, cr, ct, cb = sps["crop"]
@@ -521,72 +502,28 @@ class _H264Layout:
         v = v[ct: mb_h * 8 - cb, cl: mb_w * 8 - cr]
         return _yuv420_to_rgb(y, u, v)
 
-    def _decode_planes(self, idx: int) -> tuple:
-        """Decode (in DECODE order) up to picture ``idx``; a P picture
-        predicts from the latest REFERENCE picture before it."""
-        cache = self._cache
-        if idx in cache:
-            return cache[idx]
-        start = idx
-        while start > 0 and self.kinds[start] != "I":
-            start -= 1
-        ref: int | None = None
-        for i in range(start, idx + 1):
-            if i not in cache:
-                cache[i] = self._decode_picture(i, ref)
-            if self.is_ref[i]:
-                ref = i
-            if len(cache) > 64:
-                keep = {ref, i, idx}
-                victims = sorted(k for k in cache if k not in keep)
-                for k in victims[: len(cache) - 64]:
-                    cache.pop(k)
-        return cache[idx]
-
-    def _decode_picture(self, idx: int, ref: int | None) -> tuple:
-        """Decode one picture to uncropped (y, u, v) planes.  ``ref``
-        is the decode index of the reference picture, already decoded
-        and cached (None before the first one)."""
+    def _decode_picture(self, idx: int) -> tuple:
+        """Decode one picture to uncropped (y, u, v) planes."""
+        if self.kinds[idx] != "I":
+            raise ValueError(
+                f"H.264 {self.kinds[idx]} slice decode is not in the "
+                "implemented subset (I slices)")
         sps, pps = self.sps, self.pps
         mb_w, mb_h = sps["mb_w"], sps["mb_h"]
         y = np.zeros((mb_h * 16, mb_w * 16), dtype=np.uint8)
         u = np.zeros((mb_h * 8, mb_w * 8), dtype=np.uint8)
         v = np.zeros((mb_h * 8, mb_w * 8), dtype=np.uint8)
         covered = np.zeros(mb_w * mb_h, dtype=bool)
-        kind = self.kinds[idx]
         cavlc_pic = None
-        if kind == "B":
-            raise ValueError(
-                "H.264 B slice decode is not in the implemented subset "
-                "(I and P slices)")
-        if kind == "P":
-            if ref is None:
-                raise ValueError(
-                    "H.264 P picture without a decoded reference")
-            if pps["entropy_coding_mode"]:
-                from rmlint_spark.operators.h264_cabac_p import \
-                    CabacInterPicture
-
-                cavlc_pic = CabacInterPicture(y, u, v, mb_w, mb_h,
-                                              self._cache[ref])
-            else:
-                from rmlint_spark.operators.h264_inter import InterPicture
-
-                cavlc_pic = InterPicture(y, u, v, mb_w, mb_h,
-                                         self._cache[ref])
         for nal_type, ref_idc, rbsp in self.pictures[idx]:
             r = _BitReader(rbsp)
-            first_mb, qp_delta, slice_type = self._parse_slice_header(
+            first_mb, qp_delta = self._parse_slice_header(
                 r, nal_type, ref_idc, sps, pps)
             slice_qp = pps["pic_init_qp"] + qp_delta
-            if slice_type % 5 == 0:         # P slice (CAVLC or CABAC)
-                cavlc_pic.qp = slice_qp
-                cavlc_pic.decode_slice_p(r, first_mb, covered)
-                continue
             if pps["entropy_coding_mode"]:
                 from rmlint_spark.operators.h264_cabac import CabacPicture
 
-                if not isinstance(cavlc_pic, CabacPicture):
+                if cavlc_pic is None:
                     cavlc_pic = CabacPicture(y, u, v, mb_w, mb_h)
                 cavlc_pic.qp = slice_qp
                 cavlc_pic.decode_slice(r, first_mb, covered)
@@ -616,7 +553,6 @@ class _H264Layout:
                         raw[320:].reshape(8, 8)
                     if cavlc_pic is not None:
                         cavlc_pic.mark_ipcm(addr)
-                        cavlc_pic.note_intra(addr)
                 elif mb_type <= 24:         # Intra_4x4 / Intra_16x16, CAVLC
                     from rmlint_spark.operators.h264_cavlc import CavlcPicture
 
@@ -627,7 +563,6 @@ class _H264Layout:
                         cavlc_pic.decode_mb(r, addr)
                     else:
                         cavlc_pic.decode_mb16(r, addr, mb_type)
-                    cavlc_pic.note_intra(addr)
                 else:
                     raise ValueError(
                         f"invalid I-slice mb_type {mb_type} (0..25)")
@@ -639,14 +574,13 @@ class _H264Layout:
 
     def _parse_slice_header(self, r: _BitReader, nal_type: int,
                             ref_idc: int, sps: dict, pps: dict
-                            ) -> tuple[int, int, int]:
+                            ) -> tuple[int, int]:
+        """Walk an I slice header; return (first_mb, slice_qp_delta)."""
         first_mb = _read_ue(r)
-        slice_type = _read_ue(r)
-        if slice_type % 5 not in (0, 1, 2):
+        if _read_ue(r) % 5 in (3, 4):       # slice_type
             raise NotImplementedError(
                 "H.264 SP/SI slice decode not implemented "
-                "(I and P slices are the implemented subset)")
-        is_p = slice_type % 5 == 0
+                "(I slices are the implemented subset)")
         if _read_ue(r) != pps["pps_id"]:
             raise ValueError("slice references an unknown PPS")
         r.read(sps["log2_max_frame_num"])   # frame_num
@@ -662,26 +596,6 @@ class _H264Layout:
                 _read_se(r)
         if pps["redundant_pic_cnt_present"]:
             _read_ue(r)
-        if is_p:
-            n_ref0 = pps["n_ref0_default"]
-            if r.read(1):                   # num_ref_idx_active_override
-                n_ref0 = _read_ue(r) + 1
-            if n_ref0 > 16:
-                raise ValueError(
-                    "H.264 num_ref_idx_lX_active out of the spec "
-                    "range (7.4.3: at most 16 for frame coding)")
-            if n_ref0 > 1:
-                raise ValueError(
-                    f"H.264 multi-reference P ({n_ref0} active "
-                    "references) is not in the implemented subset "
-                    "(one reference)")
-            if r.read(1):                   # ref_pic_list_modification_l0
-                raise ValueError(
-                    "H.264 ref_pic_list_modification unsupported")
-            if pps["weighted_pred"]:
-                raise ValueError(
-                    "H.264 explicit weighted prediction is not in the "
-                    "implemented subset (weighted_pred_flag 0)")
         # dec_ref_pic_marking is present only when the slice is a
         # reference (nal_ref_idc != 0)
         if ref_idc:
@@ -700,9 +614,6 @@ class _H264Layout:
                         _read_ue(r)
                     elif op != 5:
                         raise ValueError("invalid memory_management op")
-        if pps["entropy_coding_mode"] and slice_type % 5 != 2:
-            if _read_ue(r) > 2:             # cabac_init_idc
-                raise ValueError("cabac_init_idc out of range")
         qp_delta = _read_se(r)              # slice_qp_delta
         # deblocking control (7.3.3): when the PPS carries no
         # per-slice control, disable_deblocking_filter_idc is INFERRED
@@ -724,7 +635,7 @@ class _H264Layout:
             raise ValueError(
                 f"H.264 in-loop deblocking (idc {idc}) is not in the "
                 "implemented subset (disable_deblocking_filter_idc 1)")
-        return first_mb, qp_delta, slice_type
+        return first_mb, qp_delta
 
 
 def parse_h264(payload: bytes) -> dict:
@@ -745,12 +656,11 @@ def decode_h264(payload: bytes) -> tuple[tuple[int, int], list[np.ndarray]]:
 
     Materializes EVERY frame — tests and short clips; the sampling
     paths use `_H264Layout.frame_at` to decode only touched frames.
-    I_PCM, Intra_4x4/Intra_16x16 and P-slice (P_Skip / P_L0_16x16 /
-    intra-in-P) macroblocks decode under BOTH entropy modes; P
-    macroblocks partition below 16x16 in both entropy lanes (the
-    full Table 7-17 family).  Streams outside the implemented subset
-    (see the module docstring) and malformed streams raise
-    ``ValueError``; SP/SI slices raise ``NotImplementedError``.
+    I_PCM and Intra_4x4/Intra_16x16 macroblocks decode under BOTH
+    entropy modes.  Streams outside the implemented subset (P and B
+    slices, deblocking on; see the module docstring) and malformed
+    streams raise ``ValueError``; SP/SI slices raise
+    ``NotImplementedError``.
     """
     lay = _H264Layout(payload)
     return lay.fps, [lay.frame_at(i) for i in range(lay.n_frames)]

@@ -257,16 +257,6 @@ class CabacContexts:
         self.last = [_zeros(15) for _ in range(5)]
         self.abs_lvl = [_zeros(10) for _ in range(5)]
         self.last_qpd = 0                 # mb_qp_delta ctx memory
-        # P-slice contexts (h264_cabac_p): mb_skip_flag (neighbor inc
-        # 0..2), P mb_type prefix bins (bin0 / bin1 / bin2-after-0 /
-        # bin2-after-1), and per-component mvd (bin0 inc 0..2 in
-        # slots 0-2, later TU bins in slots 3-6; UEG3 suffix bypass)
-        self.mb_skip = _zeros(3)
-        self.p_pre = _zeros(4)
-        self.mvd = [_zeros(7), _zeros(7)]
-        # P sub_mb_type (Table 9-38: '1' 8x8, '00' 8x4, '011' 4x8,
-        # '010' 4x4): bin0/bin1/bin2 in slots 0-2 (spec ctx 21-23)
-        self.p_sub = _zeros(3)
 
 
 # ------------------------------------------------ residual block IO
@@ -710,7 +700,6 @@ class CabacPicture(CavlcPicture):
             if addr >= self.mb_w * self.mb_h:
                 raise ValueError("H.264 CABAC slice overruns the picture")
             self.decode_mb_cabac(dec, addr)
-            self.note_intra(addr)           # inter-state hook (no-op here)
             covered[addr] = True
             addr += 1
             if dec.terminate():             # end_of_slice_flag

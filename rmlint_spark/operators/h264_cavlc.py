@@ -14,9 +14,8 @@ suffixes, total_zeros and run_before (9.2), CBP-gated block skipping,
 and in-loop reconstruction shared bit-for-bit between the encoder and
 the decoder (the encoder reconstructs through the same dequant+IDCT
 path the decoder runs, so drift is structurally impossible).  CABAC
-entropy decodes via h264_cabac.py, inter P slices via
-h264_inter.py; the chroma plane-prediction mode stays a
-ValueError subset.
+entropy decodes via h264_cabac.py; the chroma plane-prediction mode
+stays a ValueError subset.
 
 Documented deviations from bit-compatibility with external decoders
 (self-consistent encoder/decoder pair, the same class as the
@@ -492,14 +491,6 @@ class CavlcPicture:
         self.nc_v = np.full((mb_h * 2, mb_w * 2), -1, dtype=np.int64)
         self.modes = np.full((mb_h * 4, mb_w * 4), -1, dtype=np.int64)
         self.qp = 26
-        # P slices renumber intra mb_types by +5 (Table 7-13); the
-        # encode paths add this so InterPicture can reuse them as the
-        # intra-in-P fallback.
-        self.mb_type_offset = 0
-
-    def note_intra(self, addr: int) -> None:
-        """Inter-state hook: a no-op here; InterPicture records the
-        macroblock as intra for MV-prediction availability."""
 
     def mark_ipcm(self, addr: int) -> None:
         """I_PCM macroblocks contribute nC = 16 and pred mode DC."""
@@ -640,19 +631,12 @@ class CavlcPicture:
             ac_q[key] = out
         return dc_q, ac_q
 
-    def _chroma_pred(self, key: str, plane: np.ndarray, my: int,
-                     mx: int) -> np.ndarray:
-        """Chroma prediction hook: intra DC here; InterPicture
-        overrides it to return the motion-compensated block while an
-        inter macroblock is being coded."""
-        return _pred_chroma8(plane, my * 8, mx * 8,
-                             has_top=my > 0, has_left=mx > 0)
-
     def _chroma_recon(self, my: int, mx: int, dc_q: dict,
                       ac_q: dict) -> None:
         py, px = my * 8, mx * 8
         for key, plane in (("u", self.u), ("v", self.v)):
-            pred8 = self._chroma_pred(key, plane, my, mx)
+            pred8 = _pred_chroma8(plane, py, px,
+                                  has_top=my > 0, has_left=mx > 0)
             for blk in range(4):
                 bx, by = blk % 2, blk // 2
                 q = _unscan_coeffs(ac_q[key][blk], skip_dc=True)
@@ -740,7 +724,7 @@ class CavlcPicture:
         dc_cq, ac_cq, cbp_chroma = self._chroma_quantize(my, mx,
                                                          u_src, v_src)
         mb_type = 1 + pred_mode + 4 * cbp_chroma + 12 * (1 if cbp_luma else 0)
-        _write_ue(w, self.mb_type_offset + mb_type)
+        _write_ue(w, mb_type)
         _write_ue(w, 0)                              # chroma pred: DC
         _write_se(w, 0)                              # mb_qp_delta
         nc = _nc_for(self.nc_y, my * 4, mx * 4)
@@ -798,7 +782,7 @@ class CavlcPicture:
             if luma_q[blk].any():
                 cbp |= 1 << _BLK_GROUP[blk]
         # ---- bitstream ----
-        _write_ue(w, self.mb_type_offset + _I_4x4_MB_TYPE)
+        _write_ue(w, _I_4x4_MB_TYPE)
         for use_pred, rem in flags:
             w.write(1 if use_pred else 0, 1)
             if not use_pred:
@@ -830,7 +814,8 @@ class CavlcPicture:
         py, px = my * 8, mx * 8
         for key, plane, src_pl in (("u", self.u, u_src),
                                    ("v", self.v, v_src)):
-            pred8 = self._chroma_pred(key, plane, my, mx)
+            pred8 = _pred_chroma8(plane, py, px,
+                                  has_top=my > 0, has_left=mx > 0)
             dcs, acs = [], []
             for blk in range(4):
                 bx, by = blk % 2, blk // 2

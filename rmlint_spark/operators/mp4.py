@@ -290,14 +290,11 @@ def encode_mp4_avc(frames, fps: tuple[int, int] = (25, 1),
     essence (``codec="ipcm"``: conforming lossless I_PCM;
     ``codec="cavlc"``: compressed intra residuals at ``qp``, the
     r5 self-consistent lane; ``codec="cabac"``: the same residual
-    semantics under CABAC arithmetic entropy, r5 s5;
-    ``codec="p"`` / ``codec="cabac_p"``: IDR+P GOPs with motion
-    compensation under CAVLC / CABAC entropy, r5 s6 — ``stss`` then
-    lists only the IDR sync samples), which lands
-    length-prefixed (AVCC,
-    4-byte lengths) in ``mdat`` with SPS/PPS in the ``avcC``
-    decoder-config box and full ``stsz``/``stsc``/``stco`` sample
-    tables (ISO/IEC 14496-15 s5.3).  :func:`mp4_extract_avc` (or any
+    semantics under CABAC arithmetic entropy, r5 s5; every picture is
+    an IDR), which lands length-prefixed (AVCC, 4-byte lengths) in
+    ``mdat`` with SPS/PPS in the ``avcC`` decoder-config box and full
+    ``stsz``/``stsc``/``stco``/``stss`` sample tables (ISO/IEC
+    14496-15 s5.3).  :func:`mp4_extract_avc` (or any
     real demuxer+decoder for the I_PCM lane) plays it back; with
     all-grayscale I_PCM content the round trip is bit-exact."""
     from rmlint_spark.operators.h264 import encode_h264_ipcm
@@ -312,14 +309,6 @@ def encode_mp4_avc(frames, fps: tuple[int, int] = (25, 1),
         from rmlint_spark.operators.h264_cabac import encode_h264_cabac
 
         annexb = encode_h264_cabac(frames, fps=fps, qp=qp)
-    elif codec == "p":
-        from rmlint_spark.operators.h264_inter import encode_h264_p
-
-        annexb = encode_h264_p(frames, fps=fps, qp=qp)
-    elif codec == "cabac_p":
-        from rmlint_spark.operators.h264_cabac_p import encode_h264_cabac_p
-
-        annexb = encode_h264_cabac_p(frames, fps=fps, qp=qp)
     else:
         raise ValueError(f"unknown avc1 essence codec {codec!r}")
     sps = pps = None

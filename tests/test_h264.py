@@ -180,11 +180,11 @@ def test_malformed_streams_raise_value_error():
     ):
         with pytest.raises(ValueError):
             decode_h264(bad)
-    # B slices are outside the implemented subset, so no MP4 lane
-    # encodes them
+    # P and B slices are outside the implemented subset, so no MP4
+    # lane encodes them
     from rmlint_spark.operators.mp4 import encode_mp4_avc
 
-    for codec in ("b", "cabac_b"):
+    for codec in ("p", "cabac_p", "b", "cabac_b"):
         with pytest.raises(ValueError, match="essence codec"):
             encode_mp4_avc(_gray_frames(2), codec=codec)
 
@@ -707,14 +707,13 @@ def test_new_codec_lanes_fail_bounded_under_fuzz():
     )
 
     from rmlint_spark.operators.h264_cabac import encode_h264_cabac
-    from rmlint_spark.operators.h264_inter import encode_h264_p
 
     rng = np.random.RandomState(0)
     g = rng.randint(0, 256, (32, 48)).astype(np.uint8)
     vid = bytearray(encode_h264_cavlc([np.stack([g] * 3, axis=-1)], qp=12))
     vidc = bytearray(encode_h264_cabac([np.stack([g] * 3, axis=-1)], qp=12))
-    vidp = bytearray(encode_h264_p(
-        [np.stack([g] * 3, axis=-1)] * 2, qp=12, gop=8))
+    vidp = bytearray(_stream_with_deblock_tail(
+        _filter_off, p_slice=_p_skip_slice(1)))
     sig = np.clip(0.3 * np.sin(2 * np.pi * 440 * np.arange(2304) / 44100.0)
                   + 0.05 * rng.randn(2304), -0.9, 0.9)
     aud = bytearray(encode_layer3(sig, 44100, 128))
@@ -759,13 +758,13 @@ def test_i16x16_plane_prediction_on_ramp(monkeypatch):
 
 # ------------------------- header validation and subset refusals
 #
-# The decoder parses and range-checks the deblocking, reference-count
-# and weighted-prediction header fields, then refuses any value that
-# would need the in-loop filter, a second reference or explicit
-# weights.  The streams are hand-built: no encoder here emits them.
+# The decoder parses and range-checks the deblocking header fields,
+# then refuses any value that would need the in-loop filter; it
+# refuses P pictures before their slice header.  The streams are
+# hand-built: no encoder here emits them.
 
 
-def _pps_bits(weighted_pred: int = 0, deblocking_control: int = 1) -> bytes:
+def _pps_bits(deblocking_control: int) -> bytes:
     w = _BitWriter()
     _write_ue(w, 0)                 # pic_parameter_set_id
     _write_ue(w, 0)                 # seq_parameter_set_id
@@ -773,8 +772,7 @@ def _pps_bits(weighted_pred: int = 0, deblocking_control: int = 1) -> bytes:
     _write_ue(w, 0)                 # num_slice_groups_minus1
     _write_ue(w, 0)                 # num_ref_idx_l0_default_active_minus1
     _write_ue(w, 0)                 # num_ref_idx_l1_default_active_minus1
-    w.write(weighted_pred, 1)       # weighted_pred_flag
-    w.write(0, 2)                   # weighted_bipred_idc
+    w.write(0, 3)                   # weighted_pred / weighted_bipred_idc
     for _ in range(3):
         _write_se(w, 0)             # pic_init_qp / qs / chroma_qp offsets
     w.write(deblocking_control, 1)  # deblocking_filter_control_present
@@ -816,25 +814,15 @@ def _filter_off(w):
     _write_ue(w, 1)                 # disable_deblocking_filter_idc 1
 
 
-def _p_skip_slice(frame_num: int, n_ref: int = 1,
-                  weights: bool = False) -> bytes:
-    """One-macroblock P slice coded as a single P_Skip; ``n_ref`` > 1
-    overrides num_ref_idx_l0_active, ``weights`` writes an all-default
-    pred_weight_table (for a PPS with weighted_pred_flag 1)."""
+def _p_skip_slice(frame_num: int) -> bytes:
+    """One-macroblock CAVLC P slice coded as a single P_Skip."""
     w = _BitWriter()
     _write_ue(w, 0)                 # first_mb
     _write_ue(w, 5)                 # slice_type P
     _write_ue(w, 0)                 # pps id
     w.write(frame_num, 4)           # frame_num
-    w.write(int(n_ref > 1), 1)      # num_ref_idx_active_override
-    if n_ref > 1:
-        _write_ue(w, n_ref - 1)     # num_ref_idx_l0_active_minus1
+    w.write(0, 1)                   # num_ref_idx_active_override
     w.write(0, 1)                   # ref_pic_list_modification_l0
-    if weights:
-        _write_ue(w, 0)             # luma_log2_weight_denom
-        _write_ue(w, 0)             # chroma_log2_weight_denom
-        for _ in range(n_ref):
-            w.write(0, 2)           # luma / chroma weight flags
     w.write(0, 1)                   # adaptive_ref_pic_marking
     _write_se(w, 0)                 # slice_qp_delta
     _write_ue(w, 1)                 # disable_deblocking_filter_idc 1
@@ -879,33 +867,41 @@ def test_pps_without_deblocking_control_refused():
         decode_h264(payload)
 
 
-def test_multi_reference_p_slice_refused():
-    # with one reference the same hand-built layout decodes: the P_Skip
-    # copies the IDR's samples
-    payload = _stream_with_deblock_tail(_filter_off,
-                                        p_slice=_p_skip_slice(1))
-    _, frames = decode_h264(payload)
-    assert len(frames) == 2 and np.array_equal(frames[0], frames[1])
-    payload = _stream_with_deblock_tail(
-        _filter_off, p_slice=_p_skip_slice(1, n_ref=2))
-    with pytest.raises(ValueError, match="implemented subset"):
-        decode_h264(payload)
-    # a count past the spec's 16 is still a range error first
-    payload = _stream_with_deblock_tail(
-        _filter_off, p_slice=_p_skip_slice(1, n_ref=17))
-    with pytest.raises(ValueError, match="out of the spec range"):
-        decode_h264(payload)
+def test_p_slice_refused():
+    # a P picture after the I_PCM IDR, under either entropy mode: the
+    # header walk counts it, the decoder refuses it, and the IDR
+    # prefix alone decodes
+    from rmlint_spark.operators.h264_cabac import encode_h264_cabac
+
+    p_nal = b"\x00\x00\x00\x01\x41" + _escape_rbsp(_p_skip_slice(1))
+    cavlc = _stream_with_deblock_tail(_filter_off)
+    cabac = encode_h264_cabac([np.zeros((16, 16, 3), np.uint8)],
+                              mb_force="ipcm")
+    assert _encode_pps(entropy_coding=1) in cabac
+    for idr in (cavlc, cabac):
+        payload = idr + p_nal
+        assert parse_h264(payload)["n_frames"] == 2
+        with pytest.raises(ValueError, match="implemented subset"):
+            decode_h264(payload)
+        assert len(decode_h264(idr)[1]) == 1
 
 
-def test_weighted_prediction_p_slice_refused():
-    payload = _stream_with_deblock_tail(
-        _filter_off, pps=_pps_bits(weighted_pred=1),
-        p_slice=_p_skip_slice(1, weights=True))
-    with pytest.raises(ValueError, match="implemented subset"):
+def test_truncated_cabac_p_header_refused():
+    # a CABAC P slice whose header stops mid-grammar must raise the
+    # documented ValueError, never decode garbage (P slices are
+    # outside the implemented subset)
+    w = _BitWriter()
+    _write_ue(w, 0)
+    _write_ue(w, 5)          # slice_type: P
+    _write_ue(w, 0)
+    _trailing_bits(w)
+    payload = (b"\x00\x00\x00\x01\x67"
+               + _escape_rbsp(_encode_sps(4, 4, 64, 64, (25, 1)))
+               + b"\x00\x00\x00\x01\x68"
+               + _escape_rbsp(_encode_pps(entropy_coding=1))
+               + b"\x00\x00\x00\x01\x41" + _escape_rbsp(w.bytes()))
+    with pytest.raises(ValueError):
         decode_h264(payload)
-    # the I picture alone is outside the weighted lane and decodes
-    intra_only = payload[:payload.rindex(b"\x00\x00\x00\x01\x41")]
-    assert len(decode_h264(intra_only)[1]) == 1
 
 
 def test_refused_stream_degrades_to_opaque_features():
@@ -914,8 +910,11 @@ def test_refused_stream_degrades_to_opaque_features():
         _features_for,
     )
 
-    payload = _stream_with_deblock_tail(_deblocking_on)
-    assert np.array_equal(_features_for(payload), _fake_features(payload))
+    for payload in (_stream_with_deblock_tail(_deblocking_on),
+                    _stream_with_deblock_tail(
+                        _filter_off, p_slice=_p_skip_slice(1))):
+        assert np.array_equal(_features_for(payload),
+                              _fake_features(payload))
     # the filter-off twin decodes for real
     twin = _stream_with_deblock_tail(_filter_off)
     assert not np.array_equal(_features_for(twin), _fake_features(twin))

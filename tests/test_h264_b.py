@@ -1,5 +1,5 @@
-"""H.264 B slices are outside the implemented subset (I and P
-slices): a B picture is refused with the bounded ValueError that
+"""H.264 B slices are outside the implemented subset (I slices):
+a B picture is refused with the bounded ValueError that
 multimodal degrades to opaque bytes."""
 
 from __future__ import annotations
@@ -46,4 +46,24 @@ def test_b_picture_without_future_reference_refused():
     payload = _craft_b_slice_stream()
     assert parse_h264(payload)["n_frames"] == 1
     with pytest.raises(ValueError, match="implemented subset"):
+        decode_h264(payload)
+
+
+def test_truncated_reference_b_slice_refused():
+    # B slices are outside the implemented subset: a reference-B NAL
+    # whose slice body stops mid-grammar must raise the bounded
+    # ValueError, never decode garbage
+    from rmlint_spark.operators.h264 import (_encode_pps, _encode_sps,
+                                             _escape_rbsp)
+    w = _BitWriter()
+    from rmlint_spark.operators.h264 import _trailing_bits, _write_ue
+    _write_ue(w, 0)          # first_mb
+    _write_ue(w, 6)          # slice_type: B
+    _write_ue(w, 0)          # pps id
+    _trailing_bits(w)
+    payload = (b"\x00\x00\x00\x01\x67"
+               + _escape_rbsp(_encode_sps(4, 4, 64, 64, (25, 1)))
+               + b"\x00\x00\x00\x01\x68" + _escape_rbsp(_encode_pps())
+               + b"\x00\x00\x00\x01\x41" + _escape_rbsp(w.bytes()))
+    with pytest.raises(ValueError):
         decode_h264(payload)
