@@ -157,18 +157,20 @@ def _self_corpus_if_small(
 ):
     """Collect the (id, vec) corpus as an ``(ids, matrix)`` pair iff
     its float64 matrix fits under ``broadcast_bytes``; else None. One
-    1-row dim probe + one bounded limit + Arrow collect — the limit
-    guards the driver before anything large is pulled. Raises
+    1-row dim probe + one ``bounded_arrow`` collect — the limit guards
+    the driver before anything large is pulled. Raises
     ``ValueError`` when the vectors do not all have the first one's
     length: the flat Arrow values would otherwise reshape into rows
     that borrow values from their neighbours."""
+    from rmlint_spark.operators.exact import bounded_arrow
+
     first = embeddings.select(vec_col).first()
     if first is None:
         return np.empty(0, dtype=np.int64), np.empty((0, 0))
     dim = len(first[0])
     rows_cap = max(1, broadcast_bytes // max(8 * dim, 1))
-    tbl = embeddings.select(id_col, vec_col).limit(rows_cap + 1).toArrow()
-    if tbl.num_rows > rows_cap:
+    tbl = bounded_arrow(embeddings.select(id_col, vec_col), rows_cap)
+    if tbl is None:
         return None
     vals = tbl.column(vec_col).combine_chunks()
     lengths = np.diff(vals.offsets.to_numpy())

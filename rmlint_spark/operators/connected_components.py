@@ -71,7 +71,7 @@ def _sym_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
 def _local_components(edges: DataFrame, src: str, dst: str, cap: int):
     """Driver-side union-find over a BOUNDED edge list, or None.
 
-    A ``limit(cap+1)`` Arrow collect probes the edge count; within the
+    One ``bounded_arrow`` collect probes the edge count; within the
     cap the collected pairs ARE the working set (no second pass) and a
     path-halving DSU labels every node with the minimum member id —
     exactly the fixpoint the distributed min-propagation loop
@@ -87,8 +87,10 @@ def _local_components(edges: DataFrame, src: str, dst: str, cap: int):
     verification are orders of magnitude smaller than the corpus, so
     the local path is the common case at every scale below the cap;
     the loop remains the unbounded-scale path."""
-    tbl = edges.select(src, dst).limit(cap + 1).toArrow()
-    if tbl.num_rows > cap:
+    from rmlint_spark.operators.exact import bounded_arrow
+
+    tbl = bounded_arrow(edges.select(src, dst), cap)
+    if tbl is None:
         return None
     a_vals = tbl.column(0).to_pylist()
     b_vals = tbl.column(1).to_pylist()

@@ -212,6 +212,17 @@ def _pin(df: DataFrame) -> DataFrame:
     return df
 
 
+def bounded_arrow(df: DataFrame, max_rows: int):
+    """``df`` collected to the driver as one ``pyarrow.Table``, or None
+    when it holds more than ``max_rows`` rows: the engine's one
+    "evaluate locally if it fits" switch. A single
+    ``limit(max_rows + 1).toArrow()`` action both probes and collects,
+    so within the cap there is no second pass, and past it the driver
+    never holds more than ``max_rows + 1`` rows."""
+    tbl = df.limit(max_rows + 1).toArrow()
+    return None if tbl.num_rows > max_rows else tbl
+
+
 def persistent_rdd_ids(spark) -> set[int]:
     """Ids of every RDD currently held in executor storage (persist()
     AND localCheckpoint() both land here — DataFrame.unpersist only

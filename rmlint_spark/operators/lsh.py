@@ -13,6 +13,13 @@ Pipeline:
         --zip_with-----> estimated Jaccard filter   [JVM-side]
         --optional-----> exact token-Jaccard / byte confirm
 
+Below ``LOCAL_NEAR_BYTES`` the band / self-join / verify steps run on
+the driver instead (``local_near_edges``): one bounded Arrow collect
+of the signatures with their JVM-computed band and escalation keys,
+then numpy bucketing and verification with the chain's exact
+semantics. The chain (``candidate_pairs`` -> ``jaccard_verify``) stays
+the path for inputs past the budget.
+
 Scale notes:
 - file ids are 128-bit content-independent keys (sha256/2 of the row
   key) so pair joins shuffle 2x16 bytes, never paths or content;
@@ -45,6 +52,11 @@ from rmlint_spark.operators.lint import KEY
 # max over-cap bucket keys pulled to the driver by one over-cap probe
 # (``_probe_over_cap``) before the report stays distributed
 _PROBE_CAP = 10_000
+
+# driver budget of ``local_near_edges``: the collected signature rows
+# and the candidate-pair bound must each fit under it, else the
+# distributed candidate → verify chain runs (about 50k signatures)
+LOCAL_NEAR_BYTES = 64 << 20
 
 # smallest candidate-pair count at which ``jaccard_verify`` prunes the
 # signature relation to the paired fids before the fetch joins
@@ -318,19 +330,48 @@ def tuned_config(cfg: EngineConfig, threshold: float | None = None,
     return replace(cfg, sig=replace(cfg.sig, bands=bands))
 
 
-def band_buckets(signatures: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
-    """(fid, band_id, band_hash): xxhash64 over each signature slice.
-    JVM-side (no Python): transform+slice+xxhash64 inside codegen.
-    Sentinel signatures (all -1: empty doc, or every shingle stopped)
-    are excluded — banding them would collide all sentinel docs into
-    one giant spurious bucket per band."""
+def _band_hashes(cfg: EngineConfig) -> F.Column:
+    """The level-0 band keys of ``sig``: an array of ``cfg.sig.bands``
+    xxhash64 values, one per ``rows_per_band`` slice. JVM-side (no
+    Python): transform+slice+xxhash64 inside codegen. The distributed
+    chain and the local core both key on this expression."""
     bands, r = cfg.sig.bands, cfg.sig.rows_per_band
-    expr = (
+    return F.expr(
         f"transform(sequence(0, {bands - 1}), "
         f"b -> xxhash64(slice(sig, b * {r} + 1, {r})))"
     )
-    return signatures.filter(~is_sentinel(F.col("sig"))).select(
-        "fid", F.posexplode(F.expr(expr)).alias("band_id", "band_hash")
+
+
+def _prefix_hash(slice_len: int) -> F.Column:
+    """An escalation key: xxhash64 over the first ``slice_len`` slots
+    of ``sig``."""
+    return F.xxhash64(F.expr(f"slice(sig, 1, {slice_len})"))
+
+
+def _escalation_slices(cfg: EngineConfig) -> list[int]:
+    """The signature prefix length of escalation levels 1, 2, ...: the
+    band slice doubled per level until it covers the whole signature
+    or ``cfg.lsh_escalate_levels`` levels exist."""
+    slices, slice_len = [], cfg.sig.rows_per_band
+    while slice_len < cfg.sig.num_perm and len(slices) < cfg.lsh_escalate_levels:
+        slice_len = min(slice_len * 2, cfg.sig.num_perm)
+        slices.append(slice_len)
+    return slices
+
+
+def _bandable(signatures: DataFrame) -> DataFrame:
+    """Signatures that take part in banding. Sentinel signatures (all
+    -1: empty doc, or every shingle stopped) are excluded — banding
+    them would collide all sentinel docs into one giant spurious
+    bucket per band."""
+    return signatures.filter(~is_sentinel(F.col("sig")))
+
+
+def band_buckets(signatures: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
+    """(fid, band_id, band_hash): xxhash64 over each signature slice
+    (``_band_hashes``) of every bandable signature."""
+    return _bandable(signatures).select(
+        "fid", F.posexplode(_band_hashes(cfg)).alias("band_id", "band_hash")
     )
 
 
@@ -403,7 +444,7 @@ def _bucket_pairs(buckets: DataFrame) -> DataFrame:
 
 
 def candidate_pairs(
-    signatures: DataFrame, cfg: EngineConfig = DEFAULT
+    signatures: DataFrame, cfg: EngineConfig = DEFAULT, stats: dict | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Self-join on (band_id, band_hash); returns (pairs, dropped).
 
@@ -427,38 +468,41 @@ def candidate_pairs(
     never touches content and shrinks geometrically.
 
     Each level is one pinned ``_gather_buckets`` relation and one
-    ``_probe_over_cap`` driver action.
+    ``_probe_over_cap`` driver action. ``stats`` (optional dict)
+    receives the level reached (``lsh_level``) and the dropped bucket
+    count (``dropped_buckets``, None when the report stays
+    distributed). ``local_near_edges`` is the driver-side twin.
     """
     from rmlint_spark.operators.exact import _pin
 
-    r, num_perm = cfg.sig.rows_per_band, cfg.sig.num_perm
     keys = ["band_id", "band_hash"]
+    slices = _escalation_slices(cfg)
     cur = band_buckets(signatures, cfg)
     ok_levels: list[DataFrame] = []
-    level, slice_len = 0, r
     esc_cap = min(cfg.lsh_escalate_cap, cfg.max_bucket_width)
-    while True:
+    for level in range(len(slices) + 1):
         cap = cfg.max_bucket_width if level == 0 else esc_cap
         ok, over = _split_at_cap(_pin(_gather_buckets(cur, keys, "fid")), cap)
         ok_levels.append(ok)
         rows, dropped = _probe_over_cap(
             over.select(*keys, _bucket_width().alias("width")), level
         )
-        if rows == [] or slice_len >= num_perm or level >= cfg.lsh_escalate_levels:
+        if rows == [] or level == len(slices):
             break
         over_fids = (
             over.select(F.explode("_members").alias("fid")).dropDuplicates(["fid"])
         )
-        level += 1
-        slice_len = min(slice_len * 2, num_perm)
         cur = (
             signatures.join(over_fids, "fid", "left_semi")
             .select(
                 "fid",
-                F.lit(-level).alias("band_id"),
-                F.xxhash64(F.expr(f"slice(sig, 1, {slice_len})")).alias("band_hash"),
+                F.lit(-(level + 1)).alias("band_id"),
+                _prefix_hash(slices[level]).alias("band_hash"),
             )
         )
+    if stats is not None:
+        stats["lsh_level"] = level
+        stats["dropped_buckets"] = None if rows is None else len(rows)
     ok = ok_levels[0]
     for extra in ok_levels[1:]:
         ok = ok.unionByName(extra)
@@ -527,3 +571,165 @@ def verified_pairs(
     Returns (verified, oversized_report)."""
     pairs, oversized = candidate_pairs(signatures, cfg)
     return jaccard_verify(pairs, signatures, cfg.jaccard_threshold), oversized
+
+
+def _near_rows(signatures: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """(fid, sig, keys): the relation ``local_near_edges`` collects, one
+    row per bandable signature. ``keys`` holds the ``bands`` level-0
+    band keys, then one key per escalation level — the expressions
+    ``candidate_pairs`` evaluates, so both paths bucket alike, hash
+    collisions included. A null fid is never a bucket member
+    (``collect_list`` skips it), so it is dropped here."""
+    keys = _band_hashes(cfg)
+    esc = [_prefix_hash(n) for n in _escalation_slices(cfg)]
+    if esc:
+        keys = F.concat(keys, F.array(*esc))
+    return (
+        _bandable(signatures)
+        .filter(F.col("fid").isNotNull())
+        .select("fid", "sig", keys.alias("keys"))
+    )
+
+
+def _list_matrix(col) -> np.ndarray | None:
+    """An Arrow list<long> column as an (n, width) int64 matrix, or None
+    when its lists differ in length."""
+    arr = col.combine_chunks()
+    lengths = np.diff(arr.offsets.to_numpy())
+    if len(lengths) and (lengths != lengths[0]).any():
+        return None
+    width = int(lengths[0]) if len(lengths) else 0
+    return arr.flatten().to_numpy(zero_copy_only=False).reshape(len(arr), width)
+
+
+def _local_buckets(members, band, hashes):
+    """Buckets of equal ``(band, hash)``: the members sorted by bucket
+    then member, each bucket's start offset and width, and each
+    bucket's (band, hash) key."""
+    order = np.lexsort((members, hashes, band))
+    m, b, h = members[order], band[order], hashes[order]
+    new = np.ones(len(m), dtype=bool)
+    new[1:] = (b[1:] != b[:-1]) | (h[1:] != h[:-1])
+    starts = np.flatnonzero(new)
+    widths = np.diff(np.append(starts, len(m)))
+    return m, starts, widths, b[starts], h[starts]
+
+
+def _local_pairs(m, starts, widths):
+    """(a, b) arrays of every ``a < b`` member pair inside each bucket
+    (members of one bucket lie sorted at ``m[start : start + width]``),
+    built one bucket width at a time. Not deduplicated."""
+    heads, tails = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for w in np.unique(widths[widths > 1]):
+        block = m[starts[widths == w][:, None] + np.arange(w)]
+        i, j = np.triu_indices(w, 1)
+        heads.append(block[:, i].ravel())
+        tails.append(block[:, j].ravel())
+    return np.concatenate(heads), np.concatenate(tails)
+
+
+def local_near_edges(
+    signatures: DataFrame, cfg: EngineConfig = DEFAULT, stats: dict | None = None
+) -> tuple[DataFrame, DataFrame] | None:
+    """``candidate_pairs`` followed by ``jaccard_verify`` at
+    ``cfg.jaccard_threshold``, evaluated on the driver: returns
+    ``(edges, dropped)`` — verified ``(fid_a, fid_b)`` pairs and the
+    over-cap report, as small local relations — or None when the input
+    is over ``LOCAL_NEAR_BYTES`` and the distributed chain must run.
+
+    One ``bounded_arrow`` collect of ``_near_rows`` (signatures plus
+    their JVM-computed band and escalation keys) replaces the chain's
+    per-level gather, over-cap probe, verify joins and counts — about
+    twenty Spark jobs for a few thousand signatures. The semantics are
+    the chain's: level-0 buckets are ``(band_id, band_hash)`` capped at
+    ``max_bucket_width``; each escalated level re-keys only the
+    over-cap members on a longer prefix under ``min(lsh_escalate_cap,
+    max_bucket_width)``; the loop stops when nothing is over the cap or
+    the escalation levels run out; ``dropped`` is the last level's
+    over-cap ``(band_id, band_hash, width, level)``; pairs are the
+    distinct in-bucket ``fid_a < fid_b`` pairs; and a pair is kept when
+    its equal-slot count over the signature width reaches the
+    threshold, the same double ``estimated_jaccard`` gives.
+
+    The budget caps two things, and the core declines when either is
+    over it: the collected rows (at an estimated row size, before the
+    collect) and the candidate bound, sum of w(w-1)/2 over the
+    under-cap buckets of every level at 16 B a pair. The bound comes
+    from bucket widths before any pair is built, so one giant bucket
+    cannot exhaust driver memory. It also declines on signatures of
+    unequal length. ``stats`` (optional dict) receives the numbers that
+    decided: ``sig_rows_cap``, ``sig_rows`` (None past the cap),
+    ``candidate_bound``, and on success ``lsh_level``,
+    ``dropped_buckets`` and ``verified_edges``."""
+    import pyarrow as pa
+
+    from rmlint_spark.operators.exact import bounded_arrow
+
+    if stats is None:
+        stats = {}
+    slices = _escalation_slices(cfg)
+    bands = cfg.sig.bands
+    # a 32-char hex fid with its Arrow offsets, then the int64 slots
+    row_bytes = 48 + 8 * (cfg.sig.num_perm + bands + len(slices))
+    stats["sig_rows_cap"] = max_rows = LOCAL_NEAR_BYTES // row_bytes
+    if max_rows < 1:
+        return None
+    tbl = bounded_arrow(_near_rows(signatures, cfg), max_rows)
+    stats["sig_rows"] = None if tbl is None else tbl.num_rows
+    if tbl is None:
+        return None
+    # member ids are row positions in fid order, so id order is fid
+    # order (Arrow sorts strings by bytes, as Spark compares them)
+    tbl = tbl.sort_by("fid")
+    sig, keys = _list_matrix(tbl.column("sig")), _list_matrix(tbl.column("keys"))
+    if sig is None or keys is None:
+        return None
+    n = tbl.num_rows
+    level_rows = (
+        np.repeat(np.arange(n), bands),
+        np.tile(np.arange(bands), n),
+        keys[:, :bands].ravel(),
+    )
+    esc_cap = min(cfg.lsh_escalate_cap, cfg.max_bucket_width)
+    ok, bound = [], 0
+    for level in range(len(slices) + 1):
+        cap = cfg.max_bucket_width if level == 0 else esc_cap
+        m, starts, widths, b, h = _local_buckets(*level_rows)
+        under = widths <= cap
+        w = widths[under]
+        bound += int((w * (w - 1) // 2).sum())
+        ok.append((m, starts[under], w))
+        over = ~under
+        dropped = [
+            (int(x), int(y), int(z), level) for x, y, z in zip(b[over], h[over], widths[over])
+        ]
+        if not dropped or level == len(slices):
+            break
+        ids = np.unique(m[np.repeat(over, widths)])
+        level_rows = (ids, np.full(len(ids), -(level + 1)), keys[ids, bands + level])
+    stats["candidate_bound"] = bound
+    # two int64 member ids per candidate pair
+    if 16 * bound > LOCAL_NEAR_BYTES:
+        return None
+    heads, tails = zip(*(_local_pairs(*lv) for lv in ok))
+    code = np.unique(np.concatenate(heads) * n + np.concatenate(tails))
+    a, b = code // n, code % n
+    keep = np.zeros(len(code), dtype=bool)
+    width, chunk = sig.shape[1], 8192
+    for s in range(0, len(code), chunk):
+        equal = (sig[a[s:s + chunk]] == sig[b[s:s + chunk]]).sum(axis=1)
+        keep[s:s + chunk] = equal / width >= cfg.jaccard_threshold
+    stats["lsh_level"] = level
+    stats["dropped_buckets"] = len(dropped)
+    stats["verified_edges"] = int(keep.sum())
+    spark = signatures.sparkSession
+    fids = tbl.column("fid")
+    fid_type = signatures.schema["fid"].dataType.simpleString()
+    edges = spark.createDataFrame(
+        pa.table({"fid_a": fids.take(a[keep]), "fid_b": fids.take(b[keep])}),
+        f"fid_a {fid_type}, fid_b {fid_type}",
+    )
+    report = spark.createDataFrame(
+        dropped, "band_id int, band_hash bigint, width bigint, level int"
+    )
+    return edges, report

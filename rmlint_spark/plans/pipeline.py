@@ -1,8 +1,14 @@
 """End-to-end near-duplicate pipeline (SURVEY.md §3.1 Spark equivalent).
 
   files
-   -> MinHash signatures + LSH     (operators/lsh.py)
-   -> verified edge list -> connected components (cluster resolution)
+   -> MinHash signatures            (operators/lsh.py, pinned)
+   -> LSH bands + escalation + Jaccard verify -> verified edge list:
+        local core  one bounded Arrow collect of (fid, sig, keys), then
+                    numpy on the driver (lsh.local_near_edges), while
+                    it fits under lsh.LOCAL_NEAR_BYTES
+        distributed candidate_pairs -> jaccard_verify on the same
+                    pinned signatures, past the budget
+   -> connected components (cluster resolution)
    -> original ranking (W1) -> cluster output contract
   exact funnel (operators/exact.py; R1/R2/J3): built on first read of
   ``PipelineResult.exact_clusters``, never by the near-dup path
@@ -13,11 +19,15 @@ threshold (sd ~ sqrt(j(1-j)/num_perm) ~ 0.04 at 128 perms) so planted
 pairs AT the threshold still clear the recall>=0.99 bar; exact-dup
 families collapse to one representative node and re-attach via sha,
 so exact recall is always 1.0.
+
+Both cores give the same edges and oversized-bucket report (tests:
+test_local_near, test_escalation); ``PipelineResult.stats`` records
+which ran and the numbers that decided it.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass, field, replace
 from functools import cached_property
 
 from pyspark.sql import DataFrame
@@ -30,6 +40,7 @@ from rmlint_spark.operators.lint import KEY
 from rmlint_spark.operators.lsh import (
     candidate_pairs,
     jaccard_verify,
+    local_near_edges,
     row_index,
     with_signatures,
 )
@@ -45,6 +56,9 @@ class PipelineResult:
     near_edges: DataFrame         # (fid_a, fid_b) verified edge list
     near_clusters: DataFrame      # (repo,path,commit,fid,cluster_id,cluster_size,rank,is_original)
     oversized_buckets: DataFrame  # skew guard report (LSH band buckets over cap)
+    # which near-dup core ran and the numbers that decided it
+    # (keys: see ``run_pipeline``)
+    stats: dict = field(default_factory=dict)
 
     @cached_property
     def exact_clusters(self) -> DataFrame:
@@ -65,7 +79,15 @@ def run_pipeline(
     back. This is the independent-verification hook (reference
     analog: tests/test_speed/verify.py re-hashes every reported
     group): an external checker (the DuckDB oracle) can recompute
-    connected components + membership from the same bytes."""
+    connected components + membership from the same bytes.
+
+    ``PipelineResult.stats``: ``near_core`` ("local" when
+    ``lsh.local_near_edges`` fit its budget, else "distributed"), the
+    numbers that decided it (``sig_rows_cap``, ``sig_rows`` — None past
+    the cap — and ``candidate_bound``), and the escalation level
+    reached (``lsh_level``), ``dropped_buckets`` and, on the local
+    core, ``verified_edges``. All are values the run already holds: no
+    Spark job is added for them."""
     # near-dup layer operates on content REPRESENTATIVES (one node per
     # distinct content — rmlint's J1 inode bundling, see lsh.py):
     # exact-dup families collapse to single LSH nodes, so
@@ -78,14 +100,21 @@ def run_pipeline(
     idx = EX._pin(row_index(files))
     sigs = EX._pin(with_signatures(files, cfg, idx=idx))
     relaxed = replace(cfg, jaccard_threshold=max(0.0, cfg.jaccard_threshold - VERIFY_MARGIN))
-    # candidate_pairs returns distinct (fid_a < fid_b) pairs
-    cand, over = candidate_pairs(sigs, relaxed)
+    stats: dict = {}
+    local = local_near_edges(sigs, relaxed, stats)
+    if local is not None:
+        stats["near_core"] = "local"
+        edges, over = local
+    else:
+        stats["near_core"] = "distributed"
+        # candidate_pairs returns distinct (fid_a < fid_b) pairs
+        cand, over = candidate_pairs(sigs, relaxed, stats)
+        verified = jaccard_verify(cand, sigs, relaxed.jaccard_threshold)
+        # narrow (fid_a, fid_b) relation referenced by CC, the result
+        # object, and callers' counts — pin it so the band/verify joins
+        # run once
+        edges = EX._pin(verified.select("fid_a", "fid_b"))
     oversized = over.select(F.lit("minhash_band").alias("kind"), F.col("width"))
-    verified = jaccard_verify(cand, sigs, relaxed.jaccard_threshold)
-    # narrow (fid_a, fid_b) relation referenced by CC, the result
-    # object, and callers' counts — pin it so the band/verify joins
-    # run once
-    edges = EX._pin(verified.select("fid_a", "fid_b"))
 
     reps = sigs.select("sha", "fid", "n_rows")
     if lineage_dir:
@@ -123,4 +152,4 @@ def run_pipeline(
         .withColumn("cluster_size", F.count("*").over(W.partitionBy("cluster_id")))
         .select(*KEY, "fid", "cluster_id", "cluster_size", "rank", "is_original")
     )
-    return PipelineResult(files, cfg, edges, near, oversized)
+    return PipelineResult(files, cfg, edges, near, oversized, stats)

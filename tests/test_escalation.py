@@ -154,3 +154,68 @@ def test_over_cap_report_distributed_matches_local(spark, monkeypatch):
     # the fixtures do reach the over-cap branch in every lane
     assert len(local[1]) == 2 and len(local[3]) == 2
     assert local[5] and all(r[3] == 1 for r in local[5])
+
+
+def _twin(sigs, cfg):
+    """The distributed candidate -> verify chain that
+    ``lsh.local_near_edges`` replaces: (edges, dropped) rows, sorted."""
+    from rmlint_spark.operators.lsh import candidate_pairs, jaccard_verify
+
+    pairs, dropped = candidate_pairs(sigs, cfg)
+    edges = jaccard_verify(pairs, sigs, cfg.jaccard_threshold).select("fid_a", "fid_b")
+    return _report(edges), _report(dropped)
+
+
+def _local(sigs, cfg, stats=None):
+    got = lsh.local_near_edges(sigs, cfg, stats)
+    assert got is not None, "the local core declined"
+    return _report(got[0]), _report(got[1])
+
+
+def test_local_core_matches_distributed_escalation(spark):
+    """On the planted buckets the local core escalates, drops and
+    verifies exactly as the distributed chain: with escalation the
+    pair A,B (8 of 16 equal slots, kept at threshold 0.5) and nothing
+    dropped; without it no pair and the two width-6 level-0 rows."""
+    sigs = _lsh_sigs(spark)
+    cfg = replace(LSH_CFG, jaccard_threshold=0.5)
+    stats: dict = {}
+    local = _local(sigs, cfg, stats)
+    assert local == _twin(sigs, cfg) == ([("A", "B")], [])
+    assert stats["lsh_level"] == 1 and stats["verified_edges"] == 1
+
+    flat = replace(cfg, lsh_escalate_levels=0)
+    edges, dropped = _local(sigs, flat)
+    assert (edges, dropped) == _twin(sigs, flat)
+    assert edges == [] and len(dropped) == 2
+    assert all(r[2] == 6 and r[3] == 0 for r in dropped)
+
+    # just over the pair's estimate, verify rejects it on both paths
+    strict = replace(cfg, jaccard_threshold=0.51)
+    assert _local(sigs, strict) == _twin(sigs, strict) == ([], [])
+
+
+def test_local_core_empty_signatures(spark):
+    sigs = spark.createDataFrame([], "fid string, sig array<bigint>")
+    assert _local(sigs, LSH_CFG) == _twin(sigs, LSH_CFG) == ([], [])
+
+
+def test_local_core_declines_over_candidate_bound(spark, monkeypatch):
+    """Twelve identical signatures fill one bucket per band, exactly
+    ``max_bucket_width`` wide: the candidate bound is 4 bands x 66
+    pairs. At a budget of exactly 16 B a bound pair the local core runs
+    and matches the chain; one byte less and it declines."""
+    sigs = spark.createDataFrame(
+        [(f"f{i:02d}", list(range(16))) for i in range(12)],
+        "fid string, sig array<bigint>",
+    )
+    cfg = replace(LSH_CFG, max_bucket_width=12)
+    monkeypatch.setattr(lsh, "LOCAL_NEAR_BYTES", 16 * 4 * 66)
+    stats: dict = {}
+    local = _local(sigs, cfg, stats)
+    assert stats["candidate_bound"] == 4 * 66
+    assert local == _twin(sigs, cfg) and len(local[0]) == 66 and local[1] == []
+    monkeypatch.setattr(lsh, "LOCAL_NEAR_BYTES", 16 * 4 * 66 - 1)
+    stats = {}
+    assert lsh.local_near_edges(sigs, cfg, stats) is None
+    assert stats["sig_rows"] == 12 and stats["candidate_bound"] == 4 * 66

@@ -159,23 +159,34 @@ def test_combined_signatures_one_partition_per_core(spark, corpus):
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
-def test_pipeline_edges_one_minhash_kernel(spark, files):
-    """The pipeline's verified edges come from ONE Python signature
-    kernel, and that kernel computes MinHash only: no SimHash column
-    anywhere in the plan. The cached signature relation prints once
-    per plan version (AQE initial and final), so the check counts
-    distinct UDF calls, not printed nodes."""
+def _assert_one_minhash_kernel(plan: str) -> None:
+    """One distinct Python UDF call, MinHash only: the cached signature
+    relation prints once per plan version (AQE initial and final), so
+    the check counts distinct UDF calls, not printed nodes."""
     import re
 
-    from rmlint_spark.config import DEFAULT
-    from rmlint_spark.plans.pipeline import run_pipeline
-
-    plan = formatted_plan(run_pipeline(files, DEFAULT).near_edges)
     calls = set(re.findall(
         r"^\(\d+\) ArrowEvalPython\nInput .*\nArguments: (\[.*?\])", plan, re.M
     ))
     assert len(calls) == 1 and "_minhash(" in calls.pop(), plan
     assert "simhash" not in plan.lower(), plan
+
+
+def test_pipeline_edges_one_minhash_kernel(spark, files, monkeypatch):
+    """The pipeline's verified edges come from ONE Python signature
+    kernel, and that kernel computes MinHash only: no SimHash column
+    anywhere in the plan. The distributed chain's edge plan shows it
+    (a budget of 0 forces that chain); the local core's edges are a
+    local relation, so the check also runs on the signature relation
+    that core collects."""
+    from rmlint_spark.config import DEFAULT
+    from rmlint_spark.operators import lsh
+    from rmlint_spark.plans.pipeline import run_pipeline
+
+    sigs = lsh.with_signatures(files, DEFAULT, idx=lsh.row_index(files))
+    _assert_one_minhash_kernel(formatted_plan(lsh._near_rows(sigs, DEFAULT)))
+    monkeypatch.setattr(lsh, "LOCAL_NEAR_BYTES", 0)
+    _assert_one_minhash_kernel(formatted_plan(run_pipeline(files, DEFAULT).near_edges))
 
 
 def test_jaccard_verify_runs_no_python(spark):
